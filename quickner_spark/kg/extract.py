@@ -63,7 +63,6 @@ def extract_annotate_stage(pages: DataFrame,
                            entities: Sequence[tuple[str, str]],
                            html_col: str = "html", url_col: str = "url",
                            case_sensitive: bool = False,
-                           backend: str = "auto",
                            extractor=None,
                            window: int = 0) -> DataFrame:
     """FUSED extract + annotate: pages(url, html, ...) ->
@@ -113,7 +112,7 @@ def extract_annotate_stage(pages: DataFrame,
     extractor = extractor or extract_text
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = get_matcher(bc.value, backend)
+        matcher = get_matcher(bc.value)
         find = matcher.find_spans
         for pdf in batches:
             texts, spans = [], []

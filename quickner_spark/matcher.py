@@ -3,7 +3,7 @@
 This is a from-scratch Python implementation of the matching *semantics* of
 the reference engine (omarmhaimdat/quickner):
 
-* M1 — overlapping multi-pattern scan (reference: Aho-Corasick automaton,
+* M1 — multi-pattern scan (reference: Aho-Corasick automaton,
   quickner-core/src/quickner.rs:118-135, built at quickner.rs:253-265).
 * M2 — word-boundary post-filter branch cascade
   (quickner-core/src/quickner.rs:137-222). Ported branch-for-branch,
@@ -18,12 +18,13 @@ Design notes (Spark-first, not a port):
   reference shares one automaton across rayon workers via ``Arc``
   (quickner.rs:265-266); we share it across executors via a Spark broadcast
   variable plus a per-worker ``lru_cache``.
-* If the C-backed ``pyahocorasick`` package is importable we use it (that is
-  what a production cluster would install); otherwise a pure-Python
-  Aho-Corasick automaton is used.  A third backend does a per-pattern
-  ``str.find`` scan, which wins for small gazetteers.  All backends return
-  the identical raw match set: every occurrence of every pattern, overlaps
-  included, ordered by (end_char, pattern_id).
+* There is one scan, ``_BoundaryScan``: trie-shaped regexes anchored on a
+  word boundary, so the C regex engine does the position scan and Python
+  runs once per match.  It skips the automaton's mid-word matches, which
+  M2 would reject anyway.  For ASCII text the whole M1+M2+M3 pipeline runs
+  fused in the regex.  A pure-Python Aho-Corasick automaton producing the
+  full overlapping raw match set lives under ``tests/`` as the independent
+  oracle it is property-tested against.
 
 Unicode semantics replicated exactly:
 
@@ -43,14 +44,8 @@ Unicode semantics replicated exactly:
 from __future__ import annotations
 
 import re
-from collections import deque
 from functools import lru_cache
 from typing import Iterable, Iterator, Sequence
-
-try:  # C-accelerated automaton if the host has it (not required)
-    import ahocorasick as _pyahocorasick  # type: ignore
-except ImportError:  # pragma: no cover - absent in this container
-    _pyahocorasick = None
 
 __all__ = [
     "Matcher",
@@ -96,78 +91,8 @@ def _is_punct(c: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Raw overlapping multi-pattern scan backends (M1)
+# The multi-pattern scan (M1)
 # ---------------------------------------------------------------------------
-
-
-class _PurePythonAhoCorasick:
-    """Dict-transition Aho-Corasick over *characters* with merged output
-    sets, reporting all overlapping matches.
-
-    The reference matches on bytes and converts offsets
-    (quickner.rs:128-133); matching directly on characters yields the same
-    match set for valid UTF-8 and skips the conversion entirely.
-    """
-
-    __slots__ = ("_goto", "_out", "_pat_len")
-
-    def __init__(self, patterns: Sequence[str]):
-        # goto[state] : dict[char, state]; out[state] : tuple[pattern ids]
-        goto: list[dict[str, int]] = [{}]
-        out: list[list[int]] = [[]]
-        for pid, pat in enumerate(patterns):
-            state = 0
-            for ch in pat:
-                nxt = goto[state].get(ch)
-                if nxt is None:
-                    nxt = len(goto)
-                    goto[state][ch] = nxt
-                    goto.append({})
-                    out.append([])
-                state = nxt
-            out[state].append(pid)
-        # BFS fail links; flatten into full transition maps so the scan loop
-        # is a single dict lookup per character (no fail-chain walking).
-        fail = [0] * len(goto)
-        bfs_order: list[int] = []
-        queue: deque[int] = deque(goto[0].values())
-        while queue:
-            s = queue.popleft()
-            bfs_order.append(s)
-            for ch, t in goto[s].items():
-                queue.append(t)
-                f = fail[s]
-                while f and ch not in goto[f]:
-                    f = fail[f]
-                cand = goto[f].get(ch, 0)
-                fail[t] = cand if cand != t else 0
-                if fail[t]:
-                    out[t].extend(out[fail[t]])
-        # Flatten transitions in BFS order (fail[s] is always shallower, so
-        # its map is already flattened): delta[state] then covers the whole
-        # fail chain and the scan loop is one dict lookup per character.
-        for s in bfs_order:
-            merged = dict(goto[fail[s]])
-            merged.update(goto[s])
-            goto[s] = merged
-        self._goto = goto
-        self._out = [tuple(sorted(o)) for o in out]
-        self._pat_len = [len(p) for p in patterns]
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, int, int]]:
-        """Yield (start_char, end_char, pattern_id) ordered by
-        (end_char, pattern_id)."""
-        goto = self._goto
-        out = self._out
-        pat_len = self._pat_len
-        state = 0
-        root = goto[0]
-        for i, ch in enumerate(text):
-            state = goto[state].get(ch, 0) if state else root.get(ch, 0)
-            if out[state]:
-                end = i + 1
-                for pid in out[state]:
-                    yield end - pat_len[pid], end, pid
 
 
 def _trie_regex(patterns: list[str]) -> str:
@@ -203,55 +128,6 @@ def _trie_regex(patterns: list[str]) -> str:
     return emit(trie)
 
 
-class _RegexTrieScan:
-    """C-speed overlapping scan: prefix-free layers x trie regexes.
-
-    Within one layer no pattern is a proper prefix of another, so at most
-    one pattern matches at any start position — a single lookahead capture
-    ``(?=(trie))`` recovers it. Patterns that extend a shorter pattern go to
-    a deeper layer (gazetteer prefix chains are short: 'sun' < 'sun
-    microsystems' is depth 2). All layers together yield the exact raw
-    match set of the Aho-Corasick scan, verified property-wise in tests.
-
-    The regex engine scans positions and walks the trie in C; the Python
-    loop runs once per MATCH, not per character — on sparse real-web text
-    this is the dominant win over the pure-Python automaton.
-    """
-
-    __slots__ = ("_layers", "_by_name")
-
-    def __init__(self, patterns: Sequence[str]):
-        by_name: dict[str, list[int]] = {}
-        for pid, p in enumerate(patterns):
-            if p:
-                by_name.setdefault(p, []).append(pid)
-        names = sorted(by_name)
-        # layer = number of strict prefixes of this name that are also names
-        name_set = set(names)
-        layers: dict[int, list[str]] = {}
-        for n in names:
-            depth = sum(1 for i in range(1, len(n)) if n[:i] in name_set)
-            layers.setdefault(depth, []).append(n)
-        self._layers = [
-            re.compile("(?=(" + _trie_regex(group) + "))")
-            for _, group in sorted(layers.items())
-        ]
-        self._by_name = by_name
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, int, int]]:
-        hits: list[tuple[int, int, int]] = []
-        by_name = self._by_name
-        for rx in self._layers:
-            for m in rx.finditer(text):
-                s = m.start()
-                name = m.group(1)
-                e = s + len(name)
-                for pid in by_name[name]:
-                    hits.append((s, e, pid))
-        hits.sort(key=lambda h: (h[1], h[2]))
-        return iter(hits)
-
-
 class _BoundaryScan:
     """C-speed scan of the M2-relevant raw-match subset.
 
@@ -260,20 +136,25 @@ class _BoundaryScan:
     ASCII-punct char — rules (a)(b)(c)(e)(f) all require it — or (ii) is a
     rule-(d) suffix match at the single char position
     ``start = byte_len(text) - byte_len(pattern)``. So the raw overlapping
-    scan never needs the automaton's mid-word matches: this backend finds
+    scan never needs the automaton's mid-word matches: this scan finds
     (i) with one trie-shaped regex per prefix-free layer, anchored by a
     boundary lookbehind ``(?:\\A|(?<=[bnd]))(?=(trie))`` — the position
     scan and trie walk run in the C regex engine, Python executes once per
     MATCH — and (ii) with an O(distinct pattern lengths) dict probe of the
-    text suffix.
+    text suffix. Within one layer no name is a proper prefix of another, so
+    at most one name matches at a start position and a single lookahead
+    capture recovers it; a name that extends a shorter name goes one layer
+    deeper (gazetteer prefix chains are short: 'sun' < 'sun microsystems'
+    is depth 2).
 
     NOT the full raw match set (mid-word, non-suffix matches are absent by
     design) — valid only behind ``find_spans`` / ``find_spans_clean``,
-    whose filters reject exactly the omitted matches. Property-tested
-    equivalent to the ``ac`` backend through both filters. A suffix match
-    that also starts on a boundary is emitted twice (once per source);
-    the duplicates are adjacent in the (end, pid) ordering and collapse in
-    M3's consecutive dedup (set-dedup in clean mode).
+    whose filters reject exactly the omitted matches. Property-tested,
+    through both filters, against the full Aho-Corasick raw match set
+    (tests/ac_oracle.py). A suffix match that also starts on a boundary is
+    emitted twice (once per source); the duplicates are adjacent in the
+    (end, pid) ordering and collapse in M3's consecutive dedup (set-dedup
+    in clean mode).
     """
 
     __slots__ = ("_layers", "_by_name", "_len_groups", "_accept_rxs",
@@ -334,8 +215,8 @@ class _BoundaryScan:
         an end-of-text next reads the 'N' sentinel, which fails a-c and is
         re-admitted exactly by the ``\\Z`` branch ≡ rule (d)). The accept
         condition lives inside the regex, so Python executes only per
-        ACCEPTED span. Property-tested against the generic cascade
-        (tests/test_matcher.py::test_backends_agree*)."""
+        ACCEPTED span. Property-tested against the generic cascade fed
+        the full Aho-Corasick raw match set (tests/test_matcher.py)."""
         if not text.isascii():
             return None
         hits: list[tuple[int, int, int]] = []
@@ -397,7 +278,7 @@ class _BoundaryScan:
         try:
             tb = len(text.encode("utf-8"))
         except UnicodeEncodeError:
-            tb = None  # invalid text: find_spans returns [] before M2 anyway
+            tb = None  # invalid text: reference mode returns [] anyway
         if tb is not None:
             n = len(text)
             for (blen, clen), group in self._len_groups.items():
@@ -411,36 +292,6 @@ class _BoundaryScan:
         return iter(hits)
 
 
-class _FindScan:
-    """Per-pattern ``str.find`` scan. O(patterns * text) but each probe is a
-    C-level memmem; fastest for small gazetteers (reference's dead naive
-    matcher quickner.rs:68-116 had this shape, minus overlap handling)."""
-
-    __slots__ = ("_patterns",)
-
-    def __init__(self, patterns: Sequence[str]):
-        self._patterns = list(patterns)
-
-    def iter_matches(self, text: str) -> Iterator[tuple[int, int, int]]:
-        hits: list[tuple[int, int, int]] = []
-        for pid, pat in enumerate(self._patterns):
-            if not pat:
-                continue
-            i = text.find(pat)
-            while i != -1:
-                hits.append((i, i + len(pat), pid))
-                i = text.find(pat, i + 1)
-        hits.sort(key=lambda h: (h[1], h[2]))
-        return iter(hits)
-
-
-# Gazetteers smaller than this use the find-scan backend; larger ones build
-# an automaton (O(text) scan regardless of pattern count). Crossover
-# measured at ~30-40 patterns on synthetic web text (find: 141k docs/s @10
-# patterns but 7.5k @999; ac: steady 63-100k docs/s regardless).
-_FIND_BACKEND_MAX_PATTERNS = 32
-
-
 class Matcher:
     """Compiled gazetteer: patterns + labels + boundary cascade.
 
@@ -451,15 +302,14 @@ class Matcher:
         (quickner.rs:256-265 builds the automaton over entity positions).
         Empty names are skipped (the reference automaton would match the
         empty pattern everywhere; no real gazetteer contains one).
-    backend : 'auto' | 'bnd' | 'ac' | 'find' | 'cac' | 're'
-        'bnd' (auto default for large gazetteers) scans only the raw-match
-        subset the boundary filters can accept; 'ac'/'cac'/'find'/'re'
-        produce the full overlapping raw match set.
+
+    The scan is always ``_BoundaryScan``; ASCII text takes its fused path,
+    other text its raw-match subset through ``_filter_matches``.
     """
 
-    __slots__ = ("names", "labels", "_scan", "_pat_chars", "_pat_bytes")
+    __slots__ = ("names", "labels", "_scan", "_pat_bytes")
 
-    def __init__(self, entities: Iterable[tuple[str, str]], backend: str = "auto"):
+    def __init__(self, entities: Iterable[tuple[str, str]]):
         names: list[str] = []
         labels: list[str] = []
         for name, label in entities:
@@ -467,56 +317,8 @@ class Matcher:
             labels.append(label)
         self.names = names
         self.labels = labels
-        self._pat_chars = [len(n) for n in names]
         self._pat_bytes = [len(n.encode("utf-8")) for n in names]
-        nonempty = [n for n in names if n]
-        if backend == "auto":
-            if len(nonempty) <= _FIND_BACKEND_MAX_PATTERNS:
-                backend = "find"
-            else:
-                # the boundary-anchored C-regex scan beats both the
-                # flattened-transition Python AC (one dict hit per CHAR) and
-                # the unanchored regex-trie lookahead (tried at every
-                # position): the boundary lookbehind lets the C engine do
-                # the position scan, so Python runs once per MATCH. Valid
-                # because Matcher only consumes raw matches through the M2 /
-                # clean filters (see _BoundaryScan docstring).
-                backend = "bnd"
-        if backend == "cac" and _pyahocorasick is not None:
-            self._scan = self._build_cac()
-        elif backend == "re":
-            self._scan = _RegexTrieScan(names)
-        elif backend == "bnd":
-            self._scan = _BoundaryScan(names)
-        elif backend in ("ac", "cac"):
-            self._scan = _PurePythonAhoCorasick(names)
-        else:
-            self._scan = _FindScan(names)
-
-    def _build_cac(self):
-        auto = _pyahocorasick.Automaton()
-        for pid, pat in enumerate(self.names):
-            if not pat:
-                continue
-            existing = auto.get(pat, None)
-            if existing is None:
-                auto.add_word(pat, [pid])
-            else:
-                existing.append(pid)
-        auto.make_automaton()
-        pat_chars = self._pat_chars
-
-        class _Wrapped:
-            __slots__ = ()
-
-            @staticmethod
-            def iter_matches(text: str):
-                for end_inclusive, pids in auto.iter(text):
-                    end = end_inclusive + 1
-                    for pid in sorted(pids):
-                        yield end - pat_chars[pid], end, pid
-
-        return _Wrapped()
+        self._scan = _BoundaryScan(names)
 
     # -- M2: the boundary cascade, ported branch-for-branch ----------------
     def _boundary_ok(self, text: str, text_bytes: int, start: int, end: int, pid: int) -> bool:
@@ -565,29 +367,10 @@ class Matcher:
         consecutive exact duplicates removed. Returns [] where the reference
         returns None.
         """
-        scan = self._scan
-        if type(scan) is _BoundaryScan:
-            fused = scan.fused_spans(text, self.labels)
-            if fused is not None:
-                return fused
-        try:
-            text_bytes = len(text.encode("utf-8"))
-        except UnicodeEncodeError:
-            # reference skips invalid-utf8 docs (quickner.rs:123-126)
-            return []
-        labels = self.labels
-        spans: list[tuple[int, int, str]] = []
-        for start, end, pid in self._scan.iter_matches(text):
-            if self._boundary_ok(text, text_bytes, start, end, pid):
-                spans.append((start, end, labels[pid]))
-        # M3 (quickner.rs:225-227): stable sort by start only, then
-        # consecutive dedup (Vec::dedup semantics).
-        spans.sort(key=lambda s: s[0])
-        deduped: list[tuple[int, int, str]] = []
-        for s in spans:
-            if not deduped or deduped[-1] != s:
-                deduped.append(s)
-        return deduped
+        fused = self._scan.fused_spans(text, self.labels)
+        if fused is not None:
+            return fused
+        return self._filter_matches(text, self._scan.iter_matches(text))
 
     def find_spans_clean(self, text: str) -> list[tuple[int, int, str]]:
         """"Clean" word-boundary mode (engine extension, not reference
@@ -600,42 +383,68 @@ class Matcher:
         non-boundary preceding char, e.g. 'xrust' at end of text).
         Results are sorted by (start, end, label) and exact-deduped.
         """
-        scan = self._scan
-        if type(scan) is _BoundaryScan:
-            fused = scan.fused_clean(text, self.labels)
-            if fused is not None:
-                return fused
-        n = len(text)
-        out = set()
-        for start, end, pid in self._scan.iter_matches(text):
-            prev_ok = start == 0 or _is_ws(text[start - 1]) or _is_punct(text[start - 1])
-            next_ok = end == n or _is_ws(text[end]) or _is_punct(text[end])
-            if prev_ok and next_ok:
-                out.add((start, end, self.labels[pid]))
-        return sorted(out)
+        fused = self._scan.fused_clean(text, self.labels)
+        if fused is not None:
+            return fused
+        return self._filter_matches(text, self._scan.iter_matches(text),
+                                    clean=True)
+
+    def _filter_matches(self, text: str,
+                        matches: Iterable[tuple[int, int, int]],
+                        clean: bool = False) -> list[tuple[int, int, str]]:
+        """M2 + M3 over raw ``(start, end, pid)`` matches ordered by
+        (end, pid): the reference cascade, or the clean-mode filter when
+        ``clean``. Accepts any superset of the boundary-anchored subset,
+        so the tests feed it the full Aho-Corasick raw match set."""
+        labels = self.labels
+        if clean:
+            n = len(text)
+            out = set()
+            for start, end, pid in matches:
+                prev_ok = start == 0 or _is_ws(text[start - 1]) or _is_punct(text[start - 1])
+                next_ok = end == n or _is_ws(text[end]) or _is_punct(text[end])
+                if prev_ok and next_ok:
+                    out.add((start, end, labels[pid]))
+            return sorted(out)
+        try:
+            text_bytes = len(text.encode("utf-8"))
+        except UnicodeEncodeError:
+            # reference skips invalid-utf8 docs (quickner.rs:123-126)
+            return []
+        spans: list[tuple[int, int, str]] = []
+        for start, end, pid in matches:
+            if self._boundary_ok(text, text_bytes, start, end, pid):
+                spans.append((start, end, labels[pid]))
+        # M3 (quickner.rs:225-227): stable sort by start only, then
+        # consecutive dedup (Vec::dedup semantics).
+        spans.sort(key=lambda s: s[0])
+        deduped: list[tuple[int, int, str]] = []
+        for s in spans:
+            if not deduped or deduped[-1] != s:
+                deduped.append(s)
+        return deduped
 
 
 @lru_cache(maxsize=8)
-def _cached_matcher(entities: tuple[tuple[str, str], ...], backend: str) -> Matcher:
-    return Matcher(entities, backend=backend)
+def _cached_matcher(entities: tuple[tuple[str, str], ...]) -> Matcher:
+    return Matcher(entities)
 
 
-def get_matcher(entities: Sequence[tuple[str, str]], backend: str = "auto") -> Matcher:
-    """Build-or-reuse a Matcher. Executors call this once per (gazetteer,
-    backend) per Python worker process — the automaton build is amortized
-    across all Arrow batches of all tasks, mirroring the reference's
-    Arc-shared automaton (quickner.rs:265)."""
-    return _cached_matcher(tuple((n, l) for n, l in entities), backend)
+def get_matcher(entities: Sequence[tuple[str, str]]) -> Matcher:
+    """Build-or-reuse a Matcher. Executors call this once per gazetteer per
+    Python worker process — the automaton build is amortized across all
+    Arrow batches of all tasks, mirroring the reference's Arc-shared
+    automaton (quickner.rs:265)."""
+    return _cached_matcher(tuple((n, l) for n, l in entities))
 
 
 def find_spans(
     text: str,
     entities: Sequence[tuple[str, str]],
     mode: str = "reference",
-    backend: str = "auto",
 ) -> list[tuple[int, int, str]]:
     """One-shot span extraction (builds/caches a Matcher)."""
-    m = get_matcher(entities, backend)
+    m = get_matcher(entities)
     if mode == "clean":
         return m.find_spans_clean(text)
     return m.find_spans(text)
@@ -664,7 +473,7 @@ def annotate_text(
     if not case_sensitive:
         match_text = text.lower()
         ents = [(n.lower(), l) for n, l in ents]
-    found = Matcher(ents).find_spans(match_text)
+    found = get_matcher(ents).find_spans(match_text)
     found.sort(key=lambda s: (s[0], s[1], s[2]))
     merged = list(labels) + found
     unique: list[tuple[int, int, str]] = []

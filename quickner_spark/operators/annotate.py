@@ -103,7 +103,6 @@ def annotate_mentions(
     text_col: str = "text",
     case_sensitive: bool = False,
     mode: str = "reference",
-    backend: str = "auto",
     passthrough_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """documents -> mentions(doc_id, start, end, label, surface, *passthrough).
@@ -127,7 +126,7 @@ def annotate_mentions(
     pcols = tuple(passthrough_cols)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = get_matcher(bc.value, backend)
+        matcher = get_matcher(bc.value)
         find = matcher.find_spans_clean if clean else matcher.find_spans
         for pdf in batches:
             ids, starts, ends, labels, surfaces = [], [], [], [], []
@@ -195,7 +194,6 @@ def annotate_documents(
     text_col: str = "text",
     case_sensitive: bool = False,
     mode: str = "reference",
-    backend: str = "auto",
 ) -> DataFrame:
     """documents -> documents + ``label`` span-array column (doc-level shape
     for the serialization sinks, K1-K7). Also REPLACES ``text_col`` with the
@@ -211,7 +209,7 @@ def annotate_documents(
     cols = [f.name for f in df.schema.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = get_matcher(bc.value, backend)
+        matcher = get_matcher(bc.value)
         find = matcher.find_spans_clean if clean else matcher.find_spans
         for pdf in batches:
             texts = []

@@ -5,8 +5,7 @@ partition-friendly transforms. The CODEC is an injection seam: every
 operator takes a ``decoder=`` callable; the default is resolved by
 :func:`default_image_decoder` / :func:`default_audio_decoder`, which pick
 the real library-backed decoder (PIL / soundfile) when the library is
-importable — same gated-import pattern as pyahocorasick in
-``matcher.py``. Without those libraries the default is the AUTO decoder
+importable. Without those libraries the default is the AUTO decoder
 (:func:`decode_image_auto` / :func:`decode_audio_auto`): a REAL
 stdlib+numpy parser for the formats it recognizes by magic bytes —
 binary PPM/PGM (P6/P5), uncompressed 24/32-bit BI_RGB BMP, and PCM WAV

@@ -61,12 +61,28 @@ def stateful_session_counts(stream_df: DataFrame, user_col: str = "user_id",
     running session count with gap-based session breaks, state carried
     ACROSS micro-batches.
 
-    State per user = (last event ts epoch-seconds, session count). A new
-    batch's events extend the previous batch's session unless the gap
-    exceeds ``gap_minutes`` — semantics identical to the batch
-    ``operators.events.sessionize`` (asserted in tests). State is evicted
-    after ``state_timeout_minutes`` of processing-time inactivity, bounding
-    memory for dead users.
+    State per user = (latest event ts epoch-seconds, session count, event
+    count). A new batch's events extend the previous batch's session unless
+    the gap exceeds ``gap_minutes`` — semantics identical to the batch
+    ``operators.events.sessionize`` for in-order input (asserted in tests).
+
+    Event time drives both late data and eviction, via a watermark on
+    ``ts_col`` of max event ts seen minus ``gap_minutes`` (the state keeps
+    only each user's latest session, so lateness beyond one session gap is
+    not worth tolerating):
+
+    * rows older than the watermark of the previous micro-batch are
+      dropped before the operator sees them; rows out of order but within
+      it count as events and never split or move back a session;
+    * a user's state is evicted (no output row) by the first micro-batch
+      that has no events for the user and whose watermark has passed the
+      user's latest event ts + ``state_timeout_minutes``. A later event for
+      that user starts from zero state.
+
+    Nothing depends on processing time, so a bounded input (e.g. under
+    ``trigger(availableNow=True)``) ends once the last watermark advance
+    has been applied; a processing-time timeout would instead keep running
+    empty state-cleanup batches forever.
 
     Output per (user, micro-batch): (user_id, n_sessions, n_events_total).
     """
@@ -93,15 +109,16 @@ def stateful_session_counts(stream_df: DataFrame, user_col: str = "user_id",
         for t in ts_values:
             if last_ts is None or t - last_ts > gap:
                 sessions += 1
-            last_ts = t
+            last_ts = t if last_ts is None else max(last_ts, t)
             events += 1
         state.update((last_ts, sessions, events))
-        state.setTimeoutDuration(state_timeout_minutes * 60 * 1000)
+        state.setTimeoutTimestamp((last_ts + state_timeout_minutes * 60) * 1000)
         yield pd.DataFrame({"user_id": [key[0]],
                             "n_sessions": [sessions],
                             "n_events_total": [events]})
 
     return (stream_df
+            .withWatermark(ts_col, f"{gap_minutes} minutes")
             .groupBy(user_col)
             .applyInPandasWithState(
                 update,
@@ -109,7 +126,7 @@ def stateful_session_counts(stream_df: DataFrame, user_col: str = "user_id",
                                  "n_events_total long",
                 stateStructType="last_ts long, n_sessions long, n_events long",
                 outputMode="update",
-                timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
+                timeoutConf=GroupStateTimeout.EventTimeTimeout))
 
 
 def streaming_dedup(stream_df: DataFrame, text_col: str = "text",

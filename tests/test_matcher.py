@@ -12,6 +12,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from quickner_spark.matcher import Matcher, annotate_text, find_spans
+from tests.ac_oracle import AhoCorasick
 
 TEXTS = [
     "rust is made by Mozilla",
@@ -46,15 +47,26 @@ GOLDEN = {
 LOWER_ENTS = sorted({(n.lower(), l) for n, l in ENTITIES})
 
 
-def spans_for(text: str, backend: str = "find"):
-    return find_spans(text.lower(), LOWER_ENTS, backend=backend)
+def oracle_spans(text: str, ents, mode: str = "reference"):
+    """The full Aho-Corasick raw match set through the matcher's M2/M3
+    filters — the independent reference for the boundary-anchored scan."""
+    m = Matcher(ents)
+    return m._filter_matches(text, AhoCorasick(m.names).iter_matches(text),
+                             clean=mode == "clean")
 
 
-@pytest.mark.parametrize("backend", ["find", "ac", "bnd"])
-def test_golden_spans(backend):
+def spans_for(text: str, scan: str):
+    """``scan``: 'bnd' = the production matcher, 'ac' = the test oracle."""
+    if scan == "ac":
+        return oracle_spans(text.lower(), LOWER_ENTS)
+    return find_spans(text.lower(), LOWER_ENTS)
+
+
+@pytest.mark.parametrize("scan", ["ac", "bnd"])
+def test_golden_spans(scan):
     total = 0
     for text in TEXTS:
-        got = spans_for(text, backend)
+        got = spans_for(text, scan)
         key = text.lower()
         if key in GOLDEN:
             assert got == GOLDEN[key], text
@@ -62,10 +74,10 @@ def test_golden_spans(backend):
     assert total == 12  # tests/test.py:58-59
 
 
-@pytest.mark.parametrize("backend", ["find", "ac", "bnd"])
-def test_rust_matched_twice_in_url(backend):
+@pytest.mark.parametrize("scan", ["ac", "bnd"])
+def test_rust_matched_twice_in_url(scan):
     # "Rust" and "rust" inside https://www.rust-lang.org/ (punct boundaries)
-    got = spans_for(TEXTS[4], backend)
+    got = spans_for(TEXTS[4], scan)
     assert len(got) == 2
     assert all(lab == "PL" for _, _, lab in got)
     text = TEXTS[4].lower()
@@ -115,6 +127,34 @@ def test_end_of_text_without_suffix_rule_needs_rule_d():
     assert find_spans("made by mozilla", [("mozilla", "ORG")]) == [(8, 15, "ORG")]
 
 
+@pytest.mark.parametrize("text, want", [
+    (" éab c", [(1, 3, "X")]),  # rule (e): char at start+byte_len is ws
+    (" éab,c", [(1, 3, "X")]),  # rule (f): ... is punct
+    (" éab.c", []),             # rule (f) excludes '.'
+])
+def test_multibyte_rules_e_f(text, want):
+    # quickner.rs:184-222 — rules (e)/(f) read the char at start + the
+    # pattern's BYTE length; 'éa' is 2 chars but 3 bytes, so that read
+    # skips the real next char 'b'.
+    ents = [("éa", "X")]
+    assert find_spans(text, ents) == want
+    assert oracle_spans(text, ents) == want
+    # clean mode sees the real next char 'b' and rejects all three
+    assert find_spans(text, ents, mode="clean") == []
+    assert oracle_spans(text, ents, mode="clean") == []
+
+
+def test_white_space_boundaries():
+    # Rust char::is_whitespace (Unicode White_Space) delimits a word;
+    # Python str.isspace's extra U+001C..U+001F do not.
+    ents = [("rust", "PL")]
+    for ws in ("\t", "\n", "\u0085", "\u00a0", "\u2009", "\u3000"):
+        text = f"a{ws}rust{ws}b"
+        assert find_spans(text, ents) == [(2, 6, "PL")], repr(ws)
+        assert find_spans(text, ents, mode="clean") == [(2, 6, "PL")], repr(ws)
+    assert find_spans("a\x1crust\x1cb", ents) == []
+
+
 def test_overlapping_patterns_all_reported():
     ents = [("sun", "STAR"), ("sun microsystems", "ORG")]
     got = find_spans("at sun microsystems today", ents)
@@ -134,6 +174,7 @@ def test_same_name_different_labels_both_kept():
     assert len(got) == 2
 
 
+# The production matcher against the Aho-Corasick oracle, in both modes.
 @settings(max_examples=300, deadline=None)
 @given(
     text=st.text(alphabet="ab .x-", min_size=0, max_size=40),
@@ -143,14 +184,9 @@ def test_same_name_different_labels_both_kept():
 )
 def test_backends_agree(text, pats):
     ents = sorted({(p, "X") for p in pats})
-    a = Matcher(ents, backend="ac").find_spans(text)
-    b = Matcher(ents, backend="find").find_spans(text)
-    c = Matcher(ents, backend="re").find_spans(text)
-    d = Matcher(ents, backend="bnd").find_spans(text)
-    assert a == b == c == d
-    ac = Matcher(ents, backend="ac").find_spans_clean(text)
-    dc = Matcher(ents, backend="bnd").find_spans_clean(text)
-    assert ac == dc
+    m = Matcher(ents)
+    assert m.find_spans(text) == oracle_spans(text, ents)
+    assert m.find_spans_clean(text) == oracle_spans(text, ents, "clean")
 
 
 @settings(max_examples=200, deadline=None)
@@ -160,11 +196,6 @@ def test_backends_agree(text, pats):
 )
 def test_backends_agree_unicode(text, pats):
     ents = sorted({(p, "X") for p in pats})
-    a = Matcher(ents, backend="ac").find_spans(text)
-    b = Matcher(ents, backend="find").find_spans(text)
-    c = Matcher(ents, backend="re").find_spans(text)
-    d = Matcher(ents, backend="bnd").find_spans(text)
-    assert a == b == c == d
-    ac = Matcher(ents, backend="ac").find_spans_clean(text)
-    dc = Matcher(ents, backend="bnd").find_spans_clean(text)
-    assert ac == dc
+    m = Matcher(ents)
+    assert m.find_spans(text) == oracle_spans(text, ents)
+    assert m.find_spans_clean(text) == oracle_spans(text, ents, "clean")

@@ -94,7 +94,12 @@ def test_stateful_session_counts_across_batches(spark, tmp_path):
          .outputMode("update")
          .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    try:
+        # the event-time timeout lets a bounded input finish on its own
+        assert q.awaitTermination(180) is True
+        assert not q.isActive
+    finally:
+        q.stop()
     rows = spark.sql("SELECT * FROM sess").collect()
     # update mode emits one row per (user, batch); the final state is the
     # row with the highest running event count
