@@ -1,92 +1,115 @@
 """Canonicalization: alias clustering -> canonical nodes (north-rule stage).
 
-Pipeline: alias strings -> char-trigram MinHash blocking (candidate pairs
-share a band bucket) -> exact Jaccard similarity edges -> connected
-components -> canonical id = min alias per component.
+Pipeline: alias strings -> char-trigram sets -> exact Jaccard similarity
+edges (>= ``threshold_pct``) -> connected components -> canonical id = min
+alias per component.
 
-Blocking bounds the pair space (never an O(n²) cross join); components run
-as the iterative min-label loop in ``operators.graph`` (GraphFrames when
-available). Head-alias skew: band buckets of ultra-common aliases are
-capped (``bucket_cap``) — the salting-adjacent trick for LSH joins.
+Contract: the alias set is GAZETTEER-BOUNDED. Both callers (the batch
+pipeline's ``aliases`` stage and ``SnapshotKg.update``) canonicalize the
+distinct linked surfaces, and every surface is a gazetteer name, so the
+set never grows with the corpus. It is collected once and clustered on the
+driver in pure Python: an AllPairs prefix filter bounds the candidate
+pairs (never O(n²)), candidates verify exactly, and a min-alias union-find
+labels the components. The result is a local relation. A Spark similarity
+join here was a multi-job plan whose cost was all per-job floor at
+gazetteer size; it lives on in ``tests/canon_oracle.py`` as the
+differential oracle.
+
+Lowercasing is Python ``str.lower`` (the Spark form used the JVM's, which
+differs only on code points that gained case pairs in Unicode 14; pipeline
+surfaces are already lowered by the matcher).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Iterable
 
-from quickner_spark.operators.caching import release, track
-from quickner_spark.operators.graph import connected_components
+from pyspark.sql import DataFrame
 
-__all__ = ["char_shingles", "alias_similarity_edges", "canonicalize_aliases"]
-
-
-def char_shingles(df: DataFrame, n: int = 3, col: str = "alias") -> DataFrame:
-    """(alias, shingle): distinct char n-grams, padded so short names still
-    shingle. JVM-only (sequence/transform/substring)."""
-    padded = F.concat(F.lit("^"), F.lower(F.col(col)), F.lit("$"))
-    sh = F.transform(
-        F.sequence(F.lit(1), F.length(padded) - n + 1),
-        lambda i: F.substring(padded, i, n))
-    return (df.where(F.length(padded) >= n)
-            .select(F.col(col), F.explode(F.array_distinct(sh)).alias("shingle")))
+__all__ = ["canonical_map", "canonicalize_aliases"]
 
 
-def alias_similarity_edges(aliases: DataFrame, n: int = 3,
-                           threshold_pct: int = 60, col: str = "alias") -> DataFrame:
-    """Similarity edges (u, v) between alias strings with char-n-gram
-    Jaccard >= threshold — EXACT, via the AllPairs prefix filter (same
-    construction as ``textops.jaccard_pairs_prefix``): only each alias's
-    smallest ``|X| - ceil(t|X|) + 1`` shingle hashes enter the inverted
-    index, with the PPJoin length filter in the join condition; candidates
-    verify by in-row intersection of the full sorted hash arrays.
+def _shingles(alias: str, n: int) -> frozenset:
+    """Distinct char n-grams of ``^alias$`` (lowered); empty when the
+    padded string is shorter than ``n``."""
+    padded = f"^{alias.lower()}$"
+    return frozenset(padded[i:i + n] for i in range(len(padded) - n + 1))
 
-    Head-shingle skew: an ultra-common trigram ('the', 'inc') generates
-    pairs only when it lands inside BOTH prefixes — hot buckets shrink by
-    construction, so no recall-lossy document-frequency cap is needed
-    (the earlier ``bucket_cap`` guard traded recall for skew safety)."""
-    padded = F.concat(F.lit("^"), F.lower(F.col(col)), F.lit("$"))
-    hs = F.array_sort(F.array_distinct(F.transform(
-        F.sequence(F.lit(1), F.length(padded) - n + 1),
-        lambda i: F.xxhash64(F.substring(padded, i, n)))))
-    sets = (aliases.where(F.length(padded) >= n)
-            .select(F.col(col), hs.alias("hs")).cache())
-    size = F.size("hs")
-    prefix_len = (size - F.ceil(size * threshold_pct / 100) + 1).cast("int")
-    prefix = (sets.select(F.col(col), size.alias("nsh"),
-                          F.explode(F.slice("hs", 1, prefix_len)).alias("ph")))
-    cand = (prefix.alias("a").join(
-        prefix.alias("b"),
-        (F.col("a.ph") == F.col("b.ph"))
-        & (F.col(f"a.{col}") < F.col(f"b.{col}"))
-        & (F.col("b.nsh") * threshold_pct <= F.col("a.nsh") * 100)
-        & (F.col("a.nsh") * threshold_pct <= F.col("b.nsh") * 100))
-        .select(F.col(f"a.{col}").alias("u"), F.col(f"b.{col}").alias("v"))
-        .distinct())
-    su = sets.select(F.col(col).alias("u"), F.col("hs").alias("hs_u"))
-    sv = sets.select(F.col(col).alias("v"), F.col("hs").alias("hs_v"))
-    shared = F.size(F.array_intersect("hs_u", "hs_v"))
-    return track((cand.join(su, "u").join(sv, "v")
-                  .where(F.lit(100) * shared
-                         >= F.lit(threshold_pct)
-                         * (F.size("hs_u") + F.size("hs_v") - shared))
-                  .select("u", "v")), sets)
+
+def canonical_map(aliases: Iterable[str | None], n: int = 3,
+                  threshold_pct: int = 60) -> dict:
+    """alias -> canonical alias over a bounded alias set: connected
+    components of the graph whose edges join aliases with char-n-gram
+    Jaccard >= ``threshold_pct``%; canonical = the component's min alias
+    (code-point order == Spark's UTF-8 byte order). Aliases too short to
+    shingle (and None) map to themselves.
+
+    Exact, via the AllPairs prefix filter: under one global shingle order
+    (rarest first), two sets with Jaccard >= t share a shingle within
+    their first ``|X| - ceil(t|X|) + 1``; only those prefixes are indexed,
+    pairs are length-filtered, then verified with the integer test
+    ``100 * shared >= t * |union|``."""
+    names = set(aliases)
+    sets = {a: _shingles(a, n) for a in names if a is not None}
+    sets = {a: s for a, s in sets.items() if s}
+    freq: dict[str, int] = {}
+    for s in sets.values():
+        for g in s:
+            freq[g] = freq.get(g, 0) + 1
+    index: dict[str, list[str]] = {}
+    for a, s in sets.items():
+        need = -(-len(s) * threshold_pct // 100)  # ceil(t|X|), integer
+        for g in sorted(s, key=lambda g: (freq[g], g))[:len(s) - need + 1]:
+            index.setdefault(g, []).append(a)
+
+    parent = {a: a for a in names}
+
+    def find(a):
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    seen = set()
+    for bucket in index.values():
+        for i, u in enumerate(bucket):
+            for v in bucket[i + 1:]:
+                pair = (u, v) if u < v else (v, u)
+                if pair in seen:
+                    continue
+                seen.add(pair)
+                su, sv = sets[u], sets[v]
+                if (len(sv) * threshold_pct > len(su) * 100
+                        or len(su) * threshold_pct > len(sv) * 100):
+                    continue
+                shared = len(su & sv)
+                if 100 * shared < threshold_pct * (len(su) + len(sv) - shared):
+                    continue
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    # the smaller alias stays root: root == component min
+                    parent[max(ru, rv)] = min(ru, rv)
+    return {a: find(a) for a in names}
 
 
 def canonicalize_aliases(aliases: DataFrame, n: int = 3,
                          threshold_pct: int = 60, col: str = "alias") -> DataFrame:
-    """aliases -> (alias, canonical_id): connected components over the
-    similarity graph; canonical_id = lexicographic min alias of the
-    component; singletons map to themselves."""
-    edges = alias_similarity_edges(aliases, n, threshold_pct, col)
-    # connected_components materializes the edge list up front (count or
-    # GraphFrames checkpoint), so the shingle cache inside edges has done
-    # its job by the time it returns — release it here; `comp` no longer
-    # depends on it (driver path: createDataFrame; distributed path:
-    # localCheckpointed sym).
-    comp = connected_components(edges, "u", "v")
-    release(edges)
-    out = (aliases.select(F.col(col))
-           .join(comp.withColumnRenamed("node", col), col, "left")
-           .select(F.col(col),
-                   F.coalesce("component", F.col(col)).alias("canonical_id")))
-    return out
+    """aliases -> (alias, canonical_id), one row per distinct alias:
+    connected components over the trigram-Jaccard similarity graph;
+    canonical_id = lexicographic min alias of the component; singletons
+    map to themselves.
+
+    The ``col`` column is collected to the driver (one job; none for a
+    local relation), so ``aliases`` must be a bounded SET — e.g. the
+    distinct linked surfaces, which the gazetteer bounds. Clustering runs
+    in pure Python (:func:`canonical_map`); the result is a local
+    relation (``LocalTableScan``)."""
+    import pyarrow as pa
+
+    cmap = canonical_map((r[0] for r in aliases.select(col).collect()),
+                         n, threshold_pct)
+    keys = sorted(cmap, key=lambda a: (a is not None, a or ""))
+    return aliases.sparkSession.createDataFrame(pa.Table.from_arrays(
+        [pa.array(keys, pa.string()),
+         pa.array([cmap[a] for a in keys], pa.string())],
+        names=[col, "canonical_id"]))

@@ -16,9 +16,10 @@ import re
 from typing import Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["extract_text", "extract_stage", "extract_annotate_stage"]
+__all__ = ["extract_text", "extract_stage", "extract_annotate_stage",
+           "mentions_from_spans"]
 
 _P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
 
@@ -66,8 +67,9 @@ def extract_annotate_stage(pages: DataFrame,
                            extractor=None,
                            window: int = 0) -> DataFrame:
     """FUSED extract + annotate: pages(url, html, ...) ->
-    (url, text, spans array<struct<start, end, label, surface>>) in ONE
-    Arrow-batched Python pass.
+    (url, text, spans array<struct<start, end, label, surface, maximal,
+    canonical_id, link_label, link_overlap[, nxt]>>) in ONE Arrow-batched
+    Python pass.
 
     Rationale (the 100 TB bandwidth argument): run separately, the text
     corpus crosses the JVM<->Python Arrow boundary three times (extract
@@ -103,7 +105,25 @@ def extract_annotate_stage(pages: DataFrame,
     ``substring`` re-scans the UTF-8 bytes up to the offset — measured
     as the triples stage's dominant cost). Pass
     ``window = max(len(p) for p in predicates) + 2`` (the two framing
-    spaces)."""
+    spaces).
+
+    Each span is also LINKED in-row (always): ``canonical_id``,
+    ``link_label`` and ``link_overlap`` are the winner's fields under
+    exactly ``kg.link.link_mentions``' semantics over
+    ``alias_table_from_gazetteer(entities)`` — candidates are the entities
+    whose ``name.lower()`` equals ``surface.lower()``, overlap = |distinct
+    ``" "``-split tokens of the canonical id (``_`` -> space) ∩ distinct
+    ``" "``-split tokens of the lowered document text|, winner = max of
+    (score, canonical_id, label). Link scoring is doc-local, and the
+    document's tokens are in hand here, so the document join, vocabulary
+    broadcast and argmax aggregate of the relational linker never run;
+    ``kg.link.linked_from_spans`` computes the score JVM-side from these
+    fields. A span with no candidate (only possible under Unicode case
+    quirks) carries nulls. All lowercasing here is Python ``str.lower``,
+    like the matcher's; ``link_mentions`` lowers with the JVM, which
+    differs on the code points that gained case pairs in Unicode 14 — the
+    fused link follows the matcher there."""
+    from quickner_spark.kg.link import gazetteer_candidates, link_winner
     from quickner_spark.matcher import get_matcher
 
     ents = tuple(entities)
@@ -114,6 +134,7 @@ def extract_annotate_stage(pages: DataFrame,
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matcher = get_matcher(bc.value)
         find = matcher.find_spans
+        cands = gazetteer_candidates(bc.value)
         for pdf in batches:
             texts, spans = [], []
             for h in pdf[html_col].values:
@@ -125,13 +146,20 @@ def extract_annotate_stage(pages: DataFrame,
                 t = text.lower() if lower else text
                 found = find(t)
                 flags = _maximal_flags(found)
-                if window:
-                    spans.append([
-                        (s, e, lab, t[s:e], flags[i], t[e:e + window])
-                        for i, (s, e, lab) in enumerate(found)])
-                else:
-                    spans.append([(s, e, lab, t[s:e], flags[i])
-                                  for i, (s, e, lab) in enumerate(found)])
+                # link winner per distinct surface; the document's token
+                # set is built once, on the first span with a candidate
+                toks, links, row = None, {}, []
+                for i, (s, e, lab) in enumerate(found):
+                    surface = t[s:e]
+                    if surface not in links:
+                        c = cands.get(surface.lower())
+                        if c and toks is None:
+                            toks = set((t if lower else t.lower()).split(" "))
+                        links[surface] = (link_winner(c, toks) if c
+                                          else (None, None, None))
+                    span = (s, e, lab, surface, flags[i], *links[surface])
+                    row.append(span + (t[e:e + window],) if window else span)
+                spans.append(row)
             yield pd.DataFrame({url_col: pdf[url_col],
                                 "text": texts, "spans": spans})
 
@@ -139,8 +167,23 @@ def extract_annotate_stage(pages: DataFrame,
     return pages.select(url_col, html_col).mapInPandas(
         gen,
         f"{url_col} string, text string, "
-        "spans array<struct<start: long, end: long, "
-        f"label: string, surface: string, maximal: boolean{nxt}>>")
+        "spans array<struct<start: long, end: long, label: string, "
+        "surface: string, maximal: boolean, canonical_id: string, "
+        f"link_label: string, link_overlap: int{nxt}>>")
+
+
+def mentions_from_spans(extract: DataFrame,
+                        url_col: str = "url") -> DataFrame:
+    """The mentions table of a fused extract: one row per span with
+    (url, start, end, label, surface, maximal[, nxt]) — a JVM-only
+    explode. ``nxt`` is present only when the extract ran with
+    ``window > 0``; the in-row link fields stay behind (the linked table
+    reads them, :func:`kg.link.linked_from_spans`)."""
+    fields = extract.schema["spans"].dataType.elementType.fieldNames()
+    keep = [f for f in ("start", "end", "label", "surface", "maximal", "nxt")
+            if f in fields]
+    return (extract.select(url_col, F.explode("spans").alias("__m"))
+            .select(url_col, *[F.col(f"__m.{f}").alias(f) for f in keep]))
 
 
 def _maximal_flags(spans) -> list[bool]:

@@ -6,41 +6,127 @@ mention:
 
     score(mention, cand) = log(1 + prior(cand)) + |tokens(doc) ∩ profile(cand)|
 
-Everything is JVM-side: the alias->candidate table is small and broadcast;
-context overlap is computed against the broadcast profile VOCABULARY (each
-doc reduced to its distinct profile-token hits — never a shuffled token
-array); argmax is ``max_by`` (one hash aggregate, no window shuffle-sort).
+Two execution paths, one semantics:
+
+* **In-row, for the gazetteer's own aliases (the KG build).** The fused
+  extract pass (``kg.extract.extract_annotate_stage``) already holds each
+  document's lowered text and spans, and every candidate is a gazetteer
+  name with the same prior, so it resolves each span's winner in-row with
+  :func:`gazetteer_candidates` + :func:`link_winner` and carries it as span
+  fields; :func:`linked_from_spans` turns those into the linked table with
+  a narrow explode (score computed JVM-side, bit-identical doubles). No
+  document join, no vocabulary broadcast, no aggregate, no planning job.
+* **Relational, for external alias tables** (:func:`link_mentions`: extra
+  or anchor-derived aliases with their own priors, the unfused pipeline,
+  q27). Everything is JVM-side: the alias->candidate table is small and
+  broadcast; context overlap is computed against the broadcast profile
+  VOCABULARY (each doc reduced to its distinct profile-token hits — never
+  a shuffled token array); argmax is an in-row ``greatest`` over the
+  candidate bundle.
+
+Lowercasing: the alias side is lowered with Python ``str.lower``
+(:func:`alias_table_from_gazetteer`); :func:`link_mentions` lowers surfaces
+and document text with the JVM's ``lower()``, the in-row path with Python's
+like the matcher. The two agree except on the few code points that gained
+case pairs after the JVM's Unicode version (Java 17 ships Unicode 13,
+Python 3.11 Unicode 14); there the fused link follows the matcher.
 
 Skew note: head surfaces ("acme systems") produce huge mention groups, but
-the aggregate is keyed per (doc, mention occurrence), not per surface, so
-no single key grows with corpus size — the broadcast join keeps the plan
-shuffle-free up to the argmax agg.
+the relational plan is keyed per (doc, mention occurrence), not per
+surface, so no single key grows with corpus size.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["alias_table_from_gazetteer", "link_mentions"]
+__all__ = ["GAZETTEER_PRIOR", "alias_table_from_gazetteer",
+           "gazetteer_candidates", "link_winner", "linked_from_spans",
+           "link_mentions"]
 
 # bundle width up to which the per-alias candidate argmax is unrolled
 # into codegen-able greatest() slots (see link_mentions)
 _UNROLL_MAX = 8
 
+# prior of a gazetteer name's own alias row — shared by the alias table
+# and the in-row link, whose JVM-side score must equal link_mentions'
+GAZETTEER_PRIOR = 100
+# prior of an ``extra_aliases`` row
+EXTRA_ALIAS_PRIOR = 10
+
+
+def _profile(canonical_id: str) -> frozenset:
+    """Distinct profile tokens of a canonical id — exactly link_mentions'
+    ``array_distinct(split(replace(canonical_id, '_', ' '), ' '))``. Not
+    lowered: a token with an upper-case letter never overlaps the lowered
+    document text."""
+    return frozenset(canonical_id.replace("_", " ").split(" "))
+
 
 def alias_table_from_gazetteer(spark, gazetteer, extra_aliases=None) -> DataFrame:
     """Candidate table (alias, canonical_id, label, prior). Canonical id =
     the gazetteer name with ``_`` for spaces; prior = alias frequency rank
-    stand-in (deterministic: length-invariant hash bucket)."""
+    stand-in (deterministic: ``GAZETTEER_PRIOR`` for a name's own alias,
+    ``EXTRA_ALIAS_PRIOR`` for an extra one).
+
+    Built from Arrow, so it plans as a ``LocalTableScan``: a list-built
+    frame plans a Python-RDD scan that re-runs Python tasks on every scan,
+    and ``link_mentions`` scans its alias table three times."""
+    import pyarrow as pa
+
     rows = []
     for name, label in gazetteer:
         canonical = name.replace(" ", "_")
-        rows.append((name.lower(), canonical, label, 100))
+        rows.append((name.lower(), canonical, label, GAZETTEER_PRIOR))
         if extra_aliases:
             for al in extra_aliases.get(name, []):
-                rows.append((al.lower(), canonical, label, 10))
-    return spark.createDataFrame(
-        rows, "alias string, canonical_id string, label string, prior int")
+                rows.append((al.lower(), canonical, label, EXTRA_ALIAS_PRIOR))
+    cols = list(zip(*rows)) or [()] * 4
+    types = (pa.string(), pa.string(), pa.string(), pa.int32())
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, t) for c, t in zip(cols, types)],
+        names=["alias", "canonical_id", "label", "prior"]))
+
+
+def gazetteer_candidates(gazetteer) -> dict[str, list]:
+    """The gazetteer rows of :func:`alias_table_from_gazetteer` as a
+    driver/worker-side lookup: ``name.lower() -> [(canonical_id, label,
+    profile tokens)]``. All candidates share ``GAZETTEER_PRIOR``."""
+    cands: dict[str, list] = {}
+    for name, label in gazetteer:
+        canonical = name.replace(" ", "_")
+        cands.setdefault(name.lower(), []).append(
+            (canonical, label, _profile(canonical)))
+    return cands
+
+
+def link_winner(cands, doc_tokens) -> tuple[str, str, int]:
+    """``(canonical_id, label, overlap)`` of the winning candidate: the max
+    of (score, canonical_id, label). With one shared prior the score is
+    ``log1p(prior) + overlap``, strictly increasing in the integer
+    overlap, so the max of (overlap, canonical_id, label) is the same
+    winner."""
+    overlap, cid, label = max((len(toks & doc_tokens), cid, label)
+                              for cid, label, toks in cands)
+    return cid, label, overlap
+
+
+def linked_from_spans(extract: DataFrame, id_col: str = "url") -> DataFrame:
+    """The linked table from the fused extract's in-row link fields:
+    (id, start, end, surface, canonical_id, label, score) — row-identical
+    to ``link_mentions`` over ``alias_table_from_gazetteer(gaz)``. A narrow
+    explode; spans with no candidate (null ``canonical_id``) yield no row,
+    as the inner join does. ``score`` is computed here, JVM-side, with the
+    same ``log1p`` and double addition, so it is bit-identical."""
+    m = F.col("__m")
+    return (extract.select(id_col, F.explode("spans").alias("__m"))
+            .where(m["canonical_id"].isNotNull())
+            .select(id_col, m["start"].alias("start"),
+                    m["end"].alias("end"), m["surface"].alias("surface"),
+                    m["canonical_id"].alias("canonical_id"),
+                    m["link_label"].alias("label"),
+                    (F.log1p(F.lit(GAZETTEER_PRIOR))
+                     + m["link_overlap"]).alias("score")))
 
 
 def link_mentions(mentions: DataFrame, documents: DataFrame,
@@ -49,9 +135,12 @@ def link_mentions(mentions: DataFrame, documents: DataFrame,
     """mentions + documents + aliases -> linked mentions
     (doc_id, start, end, surface, canonical_id, label, score).
 
-    Candidates looked up by lowercased surface in a broadcast per-alias
-    candidate bundle; context overlap = |doc tokens ∩ canonical-name
-    tokens|; winner = in-row argmax by (score, canonical_id).
+    The generic operator for any alias table (extra or anchor-derived
+    aliases with their own priors); the KG build links the gazetteer's own
+    aliases in-row instead (:func:`linked_from_spans`). Candidates looked
+    up by lowercased surface in a broadcast per-alias candidate bundle;
+    context overlap = |doc tokens ∩ canonical-name tokens|; winner =
+    in-row argmax by (score, canonical_id, label).
 
     Scale shape — ONE data shuffle total (identical output to the naive
     per-mention plan, pinned by the differential test and the q27 oracle):

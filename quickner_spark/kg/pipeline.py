@@ -477,13 +477,20 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     directories; ``bucket=("url", N)``: bucketed session-catalog tables
     for exchange-free downstream doc-keyed joins (see ``Pipeline``).
 
-    ``fuse=True`` (default): extract and annotate run as ONE Arrow-batched
-    Python pass (``extract_annotate_stage``) — the extract table carries a
-    ``spans`` array column and the mentions stage reduces to a JVM-only
-    explode, so the text corpus crosses the JVM<->Python boundary once
-    instead of three times and the inter-stage parquet hop of the text
-    disappears. ``fuse=False`` restores the separate stages (row-identical
-    output; pinned by tests).
+    ``fuse=True`` (default): extract, annotate AND gazetteer linking run as
+    ONE Arrow-batched Python pass (``extract_annotate_stage``) — the
+    extract table carries a ``spans`` array column whose spans already
+    hold their link winner, and the mentions and linked stages reduce to
+    JVM-only explodes (``mentions_from_spans``, ``linked_from_spans``), so
+    the text corpus crosses the JVM<->Python boundary once instead of
+    three times, the inter-stage parquet hop of the text disappears, and
+    linking needs no document join or planning job. ``fuse=False``
+    restores the separate stages and the relational ``link_mentions``
+    (row-identical output; pinned by tests).
+
+    The ``aliases`` stage clusters the distinct linked surfaces — a
+    gazetteer-bounded set — on the driver (``canonicalize_aliases``) and
+    commits a local relation.
 
     ``extractor``: deterministic ``bytes -> str | None`` for the extract
     stage (default ``kg.extract.extract_text``, the synthetic-corpus
@@ -510,8 +517,10 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     (already output-bounded), so the stage costs iterations over a
     SMALL table, never the corpus."""
     from quickner_spark.kg.canonicalize import canonicalize_aliases
-    from quickner_spark.kg.extract import extract_annotate_stage, extract_stage
-    from quickner_spark.kg.link import alias_table_from_gazetteer, link_mentions
+    from quickner_spark.kg.extract import (extract_annotate_stage,
+                                           extract_stage, mentions_from_spans)
+    from quickner_spark.kg.link import (alias_table_from_gazetteer,
+                                        link_mentions, linked_from_spans)
     from quickner_spark.kg.triples import pattern_triples, window_triples
     from quickner_spark.operators.annotate import (annotate_mentions,
                                                    maximal_mentions,
@@ -543,21 +552,14 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     def s_mentions(spark, ctx):
         ext = ctx["pipeline"].table("extract")
         if fuse:
-            cols = ["url", F.col("m.start").alias("start"),
-                    F.col("m.end").alias("end"),
-                    F.col("m.label").alias("label"),
-                    F.col("m.surface").alias("surface"),
-                    F.col("m.maximal").alias("maximal")]
-            # the fused extract emits nxt only when there are predicates
-            # (window > 0) — with none, the span struct has no such field
-            if pred_window:
-                cols.append(F.col("m.nxt").alias("nxt"))
-            return (ext.select("url", F.explode("spans").alias("m"))
-                    .select(*cols))
+            return mentions_from_spans(ext)
         return annotate_mentions(ext, gaz, id_col="url", text_col="text")
 
     def s_linked(spark, ctx):
         p = ctx["pipeline"]
+        if fuse:
+            # the fused pass linked every span in-row: a narrow explode
+            return linked_from_spans(p.table("extract"))
         alias_table = alias_table_from_gazetteer(spark, gaz)
         return link_mentions(p.table("mentions"), p.table("extract"),
                              alias_table, id_col="url")
@@ -585,6 +587,8 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                                predicates, id_col="url")
 
     def s_aliases(spark, ctx):
+        # the distinct surfaces are gazetteer-bounded: one aggregate job,
+        # then driver-side clustering into a local relation
         p = ctx["pipeline"]
         aliases = (p.table("linked").select(F.col("surface").alias("alias"))
                    .distinct())
@@ -631,7 +635,8 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     # prunable); with an Iceberg catalog these become
     # writeTo(...).partitionedBy(bucket(N, "url"), "pred").
     # bucket_output: only extract and mentions are re-joined on url
-    # downstream (linked's SMJ, maximal_mentions' self-anti-join); the
+    # downstream (the unfused linked SMJ, maximal_mentions' self-anti-
+    # join); the
     # linked/triples outputs are consumed by surface-/alias-keyed joins
     # and aggregates, so bucket-sorting them on url would sort the two
     # largest tables in the pipeline for zero benefit.

@@ -362,3 +362,67 @@ def test_alias_set_reuse_fast_path(spark, tmp_path):
                           ("u2", "acme acme twice .")]))
     assert s2["aliases_reused"] is False
     assert {r["alias"] for r in kg.aliases().collect()} == {"acme"}
+
+
+def _pages(spark, rows):
+    return spark.createDataFrame(
+        [(u, corpus.page_html(t, u), t, "en") for u, t in rows],
+        "url string, html binary, text string, lang string")
+
+
+def test_case_sensitive_mixed_case_gazetteer(spark, tmp_path):
+    """SnapshotKg(case_sensitive=True) must match a mixed-case gazetteer
+    (the fused pass keeps the text's case, like the patterns), and find
+    what case_sensitive=False finds on this page. The linker quirk the
+    in-row link keeps: canonical tokens are not lowered, so "Acme"
+    overlaps no lowered document token and scores log1p(100) + 0."""
+    import math
+
+    from quickner_spark.kg.extract import mentions_from_spans
+    from quickner_spark.kg.link import (alias_table_from_gazetteer,
+                                        link_mentions)
+
+    gaz = [("Acme", "ORG"), ("Globex", "ORG")]
+    page = _pages(spark, [("u1", "Acme acquired Globex .")])
+    got = {}
+    for cs in (True, False):
+        kg = SnapshotKg(spark, str(tmp_path / f"kg{cs}"), gaz,
+                        ("acquired",), case_sensitive=cs)
+        assert kg.update(page)["committed"]
+        got[cs] = (kg.current_mentions().count(),
+                   {(r["subj"], r["obj"])
+                    for r in kg.current_triples().collect()},
+                   {r["surface"]: round(r["score"] - math.log1p(100), 9)
+                    for r in kg.current_linked().collect()})
+        # the in-row link equals link_mentions on the committed extract
+        ext = spark.read.parquet(f"{kg.base}/extract/snap=0")
+        rel = link_mentions(mentions_from_spans(ext),
+                            ext.select("url", "text"),
+                            alias_table_from_gazetteer(spark, kg.gaz),
+                            id_col="url")
+        assert sorted(tuple(r) for r in kg.current_linked().collect()) == \
+            sorted(tuple(r) for r in rel.collect())
+    assert got[True] == (2, {("Acme", "Globex")},
+                         {"Acme": 0, "Globex": 0})
+    assert got[False] == (2, {("acme", "globex")},
+                          {"acme": 1, "globex": 1})
+
+
+def test_zero_hit_update_commits_readable_tables(spark, store, gaz, tmp_path):
+    """An update whose pages hit no gazetteer name still commits every
+    table readable, with the columns and types of a non-empty update."""
+    kg_full, _, _ = store
+    kg = SnapshotKg(spark, str(tmp_path / "kg"), gaz, corpus.PREDICATES)
+    s = kg.update(_pages(spark, [("u1", "nothing to see here ."),
+                                 ("u2", "still no entities .")]))
+    assert s["committed"] and s["changed"] == 2
+    k = kg_full.snap()  # compaction may have folded the earlier snaps
+    for path in ("extract/snap=", "mentions/snap=", "linked/snap=",
+                 "triples/snap=", "linked_stats/v", "triple_stats/v",
+                 "aliases/v", "nodes/v", "edges/v", "manifest/v"):
+        got = spark.read.parquet(f"{kg.base}/{path}0")
+        exp = spark.read.parquet(f"{kg_full.base}/{path}{k}")
+        assert [(f.name, f.dataType.simpleString()) for f in got.schema] \
+            == [(f.name, f.dataType.simpleString()) for f in exp.schema], path
+        assert got.count() == (2 if path.startswith(("extract", "manifest"))
+                               else 0), path

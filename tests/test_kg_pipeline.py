@@ -439,12 +439,31 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
                            gaz, corpus.PREDICATES, fuse=False)
     p2.run()
     for st, cols in (("extract", ["url", "text"]),
-                     ("mentions", None), ("triples", None), ("edges", None)):
+                     ("mentions", None), ("triples", None), ("edges", None),
+                     ("aliases", None), ("nodes", None)):
         a_df, b_df = pipe.table(st), p2.table(st)
         sel = cols or sorted(set(a_df.columns) & set(b_df.columns))
-        a = {tuple(r) for r in a_df.select(*sel).collect()}
-        b = {tuple(r) for r in b_df.select(*sel).collect()}
-        assert a == b, st
+        a, b = ({tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                 for r in df.select(*sel).collect()} for df in (a_df, b_df))
+        assert a == b and a, st
+
+    # the in-row link (fused) vs the relational link_mentions (unfused):
+    # all 7 columns, score compared as the exact double, as a multiset
+    from collections import Counter
+    link_cols = ["url", "start", "end", "surface", "canonical_id", "label",
+                 "score"]
+    assert pipe.table("linked").columns == link_cols
+    fused_l = Counter(tuple(r) for r in pipe.table("linked").collect())
+    unfused_l = Counter(tuple(r) for r in
+                        p2.table("linked").select(*link_cols).collect())
+    assert fused_l == unfused_l and len(fused_l) > 100
+
+    # driver canonicalization == the Spark similarity-join oracle on the
+    # pipeline's own alias set
+    from tests.canon_oracle import canonicalize_aliases_spark
+    surfaces = pipe.table("linked").selectExpr("surface AS alias").distinct()
+    assert {tuple(r) for r in pipe.table("aliases").collect()} == \
+        {tuple(r) for r in canonicalize_aliases_spark(surfaces).collect()}
 
     # the fused stage's in-row maximal flag must equal the anti-join
     # operator's longest-match decision exactly
@@ -467,6 +486,94 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
           pattern_triples(mx.drop("maximal", "nxt"), pipe.table("extract"),
                           corpus.PREDICATES, id_col="url").collect()}
     assert wt == pt and len(wt) > 0
+
+
+def _inrow_vs_relational(spark, gaz, texts, case_sensitive=False):
+    """Linked rows of the fused in-row link and of link_mentions over the
+    same extract, both as sorted lists of (url, start, end, surface,
+    canonical_id, label, score)."""
+    from quickner_spark.kg.extract import (extract_annotate_stage,
+                                           mentions_from_spans)
+    from quickner_spark.kg.link import (alias_table_from_gazetteer,
+                                        link_mentions, linked_from_spans)
+    from quickner_spark.operators.annotate import normalize_gazetteer
+
+    gaz = normalize_gazetteer(gaz, case_sensitive=case_sensitive)
+    pages = spark.createDataFrame(
+        [(f"u{i}", corpus.page_html(t, f"u{i}")) for i, t in enumerate(texts)],
+        "url string, html binary")
+    ext = extract_annotate_stage(pages, gaz, case_sensitive=case_sensitive)
+    ext = ext.localCheckpoint()
+    inrow = sorted(tuple(r) for r in linked_from_spans(ext).collect())
+    rel = sorted(tuple(r) for r in link_mentions(
+        mentions_from_spans(ext), ext.select("url", "text"),
+        alias_table_from_gazetteer(spark, gaz), id_col="url").collect())
+    return inrow, rel
+
+
+def test_inrow_link_cases(spark):
+    """In-row link edge cases, each against link_mentions: one name under
+    two labels (both spans link to the max label), ties on overlap broken
+    by canonical_id then label, and overlap beating the canonical order."""
+    import math
+
+    def won(rows):
+        # (url, start) -> (canonical_id, label, overlap)
+        return {(r[0], r[1]): (r[4], r[5], round(r[6] - math.log1p(100), 9))
+                for r in rows}
+
+    # one name, two labels: two spans, both linked to (acme, PROD)
+    inrow, rel = _inrow_vs_relational(
+        spark, [("acme", "ORG"), ("acme", "PROD"), ("beta", "ORG")],
+        ["acme sells beta ."])
+    assert inrow == rel and len(inrow) == 3
+    assert [r[4:6] for r in inrow] == [("acme", "PROD")] * 2 + [("beta", "ORG")]
+
+    # case-sensitive gazetteer: several canonicals share one lowered
+    # alias. Document tokens are lowered, canonical tokens are not.
+    gaz = [("ab CD", "X"), ("AB cd", "Y"), ("AB CD", "Z"), ("AB CD", "A")]
+    inrow, rel = _inrow_vs_relational(
+        spark, gaz, ["AB CD here", "(AB cd here", "x ab CD."],
+        case_sensitive=True)
+    assert inrow == rel
+    assert won(inrow) == {
+        # tokens {ab, cd, here}: ab_CD 1, AB_cd 1, AB_CD 0 -> the tie on
+        # 1 goes to the max canonical
+        ("u0", 0): ("ab_CD", "X", 1),
+        # tokens {(ab, cd, here}: AB_cd 1 beats ab_CD 0 although ab_CD
+        # sorts higher
+        ("u1", 1): ("AB_cd", "Y", 1),
+        # tokens {x, ab, cd.}: ab_CD 1
+        ("u2", 2): ("ab_CD", "X", 1)}
+    # all-zero overlap: canonical AB_CD under two labels -> max label
+    inrow, rel = _inrow_vs_relational(
+        spark, [("AB CD", "Z"), ("AB CD", "A")], ["(AB CD)"],
+        case_sensitive=True)
+    assert inrow == rel and len(inrow) == 2
+    assert won(inrow) == {("u0", 1): ("AB_CD", "Z", 0)}
+
+
+def test_zero_hit_corpus_commits_readable_stages(spark, pipe, tmp_path):
+    """Pages with no gazetteer hit: every stage still commits a readable
+    table with the same columns and types as a non-empty build."""
+    path = str(tmp_path / "nohit_pages")
+    spark.createDataFrame(
+        [(f"u{i}", corpus.page_html(t, f"u{i}"), t, "en") for i, t in
+         enumerate(["nothing to see here .", "still no entities ."])],
+        "url string, html binary, text string, lang string"
+    ).write.parquet(path)
+    p = build_kg_pipeline(spark, str(tmp_path / "nohit"), path,
+                          corpus.synth_gazetteer(GAZ_SIZE, SEED),
+                          corpus.PREDICATES)
+    status = p.run()
+    assert set(status.values()) == {"ran"}, status
+    for st in ("extract", "mentions", "linked", "triples", "aliases",
+               "nodes", "edges"):
+        got = p.table(st)
+        assert {(f.name, f.dataType.simpleString()) for f in got.schema} \
+            == {(f.name, f.dataType.simpleString())
+                for f in pipe.table(st).schema}, st
+        assert got.count() == (2 if st == "extract" else 0), st
 
 
 def test_maximal_flags_property():

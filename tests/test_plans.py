@@ -228,6 +228,34 @@ def test_corpus_sized_joins_never_broadcast_from_parquet(spark, tmp_path):
             assert "FileScan" not in ctx, ctx
 
 
+def test_gazetteer_link_plans_are_local_and_narrow(spark, tmp_path):
+    """alias_table_from_gazetteer is a local relation (LocalTableScan, not
+    a Python-RDD scan that re-runs Python tasks per scan), and the fused
+    build's linked stage is a narrow explode of the committed extract: no
+    join, no exchange, no aggregate."""
+    from quickner_spark.kg import corpus
+    from quickner_spark.kg.extract import extract_annotate_stage
+    from quickner_spark.kg.link import (alias_table_from_gazetteer,
+                                        linked_from_spans)
+    from quickner_spark.operators.annotate import normalize_gazetteer
+
+    gaz = normalize_gazetteer(corpus.synth_gazetteer(50, 1),
+                              case_sensitive=False)
+    al = alias_table_from_gazetteer(spark, gaz, {gaz[0][0]: ["alt name"]})
+    plan = _executed(al)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert al.count() == len(gaz) + 1
+
+    ext_p = str(tmp_path / "ext")
+    extract_annotate_stage(corpus.synth_pages(spark, 30, partitions=2),
+                           gaz).write.parquet(ext_p)
+    lk = linked_from_spans(spark.read.parquet(ext_p))
+    plan = _executed(lk)
+    for op in ("Join", "Exchange", "Aggregate"):
+        assert op not in plan, plan
+    assert lk.count() > 0
+
+
 def test_kg_edges_plan_broadcasts_maps(spark):
     df = E.q28_kg_edges(spark, SF)
     plan = _executed(df)
