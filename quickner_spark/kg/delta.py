@@ -67,8 +67,9 @@ from quickner_spark.kg.extract import (extract_annotate_stage,
 # name, and a missing one breaks its traced snapshot_update runs.
 from quickner_spark.kg.link import (alias_table_from_gazetteer,  # noqa: F401
                                     link_mentions, linked_from_spans)
-from quickner_spark.kg.pipeline import _read_text, _write_text
-from quickner_spark.kg.triples import window_triples
+from quickner_spark.kg.pipeline import (_read_text, _write_text,
+                                        edges_from_counts, nodes_from_counts)
+from quickner_spark.kg.triples import predicate_window, window_triples
 from quickner_spark.operators.annotate import normalize_gazetteer
 
 __all__ = ["SnapshotKg", "snapshot_delta"]
@@ -142,8 +143,7 @@ class SnapshotKg:
         self.gaz = normalize_gazetteer(gazetteer,
                                        case_sensitive=case_sensitive)
         self.predicates = tuple(predicates)
-        self.pred_window = (max(len(p) for p in self.predicates) + 2
-                            if self.predicates else 0)
+        self.pred_window = predicate_window(self.predicates)
         self.extractor = extractor
 
     # -- layout -----------------------------------------------------------
@@ -265,7 +265,7 @@ class SnapshotKg:
         tstats = spark.read.parquet(self._v("triple_stats", k))
 
         # 4. canonicalization + derived nodes/edges — gazetteer-bounded
-        # inputs, same derivation as the batch pipeline's s_nodes/s_edges.
+        # inputs, the batch pipeline's derivation over the merged stats.
         # The alias SET usually survives a snapshot unchanged (counts move,
         # surfaces rarely appear/disappear), and the canonical map is a
         # pure function of it: both sets are gazetteer-bounded, so compare
@@ -284,19 +284,10 @@ class SnapshotKg:
         aliases.write.mode("overwrite").parquet(self._v("aliases", k))
         amap = spark.read.parquet(self._v("aliases", k))
 
-        nodes = (lstats.join(amap, lstats["surface"] == amap["alias"])
-                 .groupBy("canonical_id")
-                 .agg(F.min("label").alias("label"),
-                      F.sort_array(F.collect_set("surface")).alias("aliases"),
-                      F.sum("n").alias("n_mentions")))
-        nodes.write.mode("overwrite").parquet(self._v("nodes", k))
-        subj_map = amap.selectExpr("alias as subj", "canonical_id as src")
-        obj_map = amap.selectExpr("alias as obj", "canonical_id as dst")
-        edges = (tstats.join(F.broadcast(subj_map), "subj")
-                 .join(F.broadcast(obj_map), "obj")
-                 .groupBy("src", "dst", "pred")
-                 .agg(F.sum("n").alias("weight")))
-        edges.write.mode("overwrite").parquet(self._v("edges", k))
+        (nodes_from_counts(lstats, amap)
+         .write.mode("overwrite").parquet(self._v("nodes", k)))
+        (edges_from_counts(tstats, amap)
+         .write.mode("overwrite").parquet(self._v("edges", k)))
 
         # 5. new manifest: unchanged urls keep their (digest, snap) row
         if prev is None:

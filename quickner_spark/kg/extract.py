@@ -84,7 +84,8 @@ def extract_annotate_stage(pages: DataFrame,
     as ``operators.annotate.annotate_mentions`` (lowercase handling
     included: surfaces are sliced from the lowered text), so
     ``explode(spans)`` is row-identical to running annotate_mentions over
-    the extract output — pinned by tests/test_kg_pipeline.py.
+    the extract output — pinned by tests/test_kg_pipeline.py against the
+    relational oracle pipeline (tests/kg_oracle.py).
 
     Each span also carries a ``maximal`` flag — True unless another span
     of the SAME document strictly contains it (the longest-match rule the
@@ -92,8 +93,7 @@ def extract_annotate_stage(pages: DataFrame,
     Computed here in-row because the document's spans are all in hand
     before the explode: an O(k log k) sweep per document replaces a
     corpus-sized mention×mention anti-join downstream — at 100 TB that
-    join (and the re-sort its output forces on the triples join) simply
-    never exists. Differential-tested against the operator.
+    join simply never exists. Differential-tested against the operator.
 
     ``window > 0`` additionally emits per span a ``nxt`` column: the
     ``window`` characters of (matcher-cased) text following the span.
@@ -105,7 +105,7 @@ def extract_annotate_stage(pages: DataFrame,
     ``substring`` re-scans the UTF-8 bytes up to the offset — measured
     as the triples stage's dominant cost). Pass
     ``window = max(len(p) for p in predicates) + 2`` (the two framing
-    spaces).
+    spaces; ``kg.triples.predicate_window``).
 
     Each span is also LINKED in-row (always): ``canonical_id``,
     ``link_label`` and ``link_overlap`` are the winner's fields under

@@ -17,12 +17,12 @@ Two execution paths, one semantics:
   a narrow explode (score computed JVM-side, bit-identical doubles). No
   document join, no vocabulary broadcast, no aggregate, no planning job.
 * **Relational, for external alias tables** (:func:`link_mentions`: extra
-  or anchor-derived aliases with their own priors, the unfused pipeline,
-  q27). Everything is JVM-side: the alias->candidate table is small and
-  broadcast; context overlap is computed against the broadcast profile
-  VOCABULARY (each doc reduced to its distinct profile-token hits — never
-  a shuffled token array); argmax is an in-row ``greatest`` over the
-  candidate bundle.
+  or anchor-derived aliases with their own priors, q27, and the test
+  oracle pipeline). Everything is JVM-side: the alias->candidate table is
+  small and broadcast; context overlap is computed against the broadcast
+  profile VOCABULARY (each doc reduced to its distinct profile-token hits
+  — never a shuffled token array); argmax is an in-row ``greatest`` over
+  the candidate bundle.
 
 Lowercasing: the alias side is lowered with Python ``str.lower``
 (:func:`alias_table_from_gazetteer`); :func:`link_mentions` lowers surfaces

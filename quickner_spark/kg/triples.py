@@ -7,11 +7,11 @@ that must match the text between them.
 
 Two physical forms, identical output (differential-tested):
 
-* :func:`window_triples` — the pipeline's scale path. The fused annotate
-  stage ships each mention with ``nxt``, the few characters of text after
-  the span, so the predicate test is a plain ``startswith`` on a 16-char
-  column and NO document text is ever joined or seeked: one slim
-  sort-merge join total.
+* :func:`window_triples` — the KG build's path (batch, snapshot and
+  streaming). The fused extract pass ships each mention with ``nxt``,
+  the few characters of text after the span, so the predicate test is a
+  plain ``startswith`` on a 16-char column and NO document text is ever
+  joined or seeked: one slim sort-merge join total.
 * :func:`pattern_triples` — the generic form over bare (mentions,
   documents) tables: subj mentions join their document text on the doc
   key, one windowed slice per mention feeds the in-row predicate test,
@@ -28,7 +28,16 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["adjacent_pattern_triples", "pattern_triples", "window_triples"]
+__all__ = ["adjacent_pattern_triples", "pattern_triples", "predicate_window",
+           "window_triples"]
+
+
+def predicate_window(predicates: Sequence[str]) -> int:
+    """The post-span ``nxt`` width :func:`window_triples` needs for
+    ``predicates`` (``extract_annotate_stage(window=...)``): the longest
+    predicate plus its two framing spaces; 0 (no window) without
+    predicates."""
+    return max(len(p) for p in predicates) + 2 if predicates else 0
 
 
 def adjacent_pattern_triples(*args, **kwargs) -> DataFrame:
@@ -70,9 +79,7 @@ def _candidate_join(cand: DataFrame, m2: DataFrame, id_col: str) -> DataFrame:
     Pinned to sort-merge: both sides are corpus-sized, compressed-parquet
     stats under-estimate them, and Spark would otherwise broadcast the
     mention table (serial driver collect+hash — cannot scale with cores,
-    OOMs at corpus scale). The mention side reads (url, start)-sorted
-    from the bucketed stage table, satisfying the (url, obj_start) join
-    ordering through the alias — only the smaller candidate side sorts."""
+    OOMs at corpus scale)."""
     return (cand.join(m2.hint("merge"), ["__id", "obj_start"])
             .select(F.col("__id").alias(id_col),
                     "subj", "pred", "obj",
@@ -89,8 +96,7 @@ def window_triples(
     """Triples from mentions that carry their own post-span text window
     (``extract_annotate_stage(window=...)``): the connective test never
     touches the document table. The window must be at least
-    ``max(len(p)) + 2`` characters (the two framing spaces) — the
-    pipeline derives it from the same predicates tuple.
+    :func:`predicate_window` characters of the same predicates.
 
     Scale shape: zero document join, zero text seek. The only corpus-
     sized work is one slim explode+filter scan over mentions and the
@@ -132,8 +138,7 @@ def pattern_triples(
     Plan shape (in join-cost order):
 
     1. subj mentions join their document's text on the doc key alone — a
-       single-key sort-merge join; both sides read pre-sorted from the
-       url-bucketed stage tables (zero exchange, zero sort).
+       single-key sort-merge join.
     2. ONE ``substring`` per mention slices the post-span window (a JVM
        substring seeks the UTF-8 bytes up to the offset, so it must run
        once per mention, not once per mention×predicate — measured as

@@ -36,7 +36,8 @@ def get_spark(app_name: str = "quickner-spark", cores: int | None = None,
         # (doc_key, extra_col) without re-shuffling: the engine's composite
         # joins always subset-key on the high-cardinality doc id, so the
         # skew concern behind Spark's stricter default does not apply —
-        # and bucketed stage outputs then join with zero exchanges
+        # and tables bucketed by operators.bucketing then join with zero
+        # exchanges
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # zstd everywhere bytes move: stage tables (parquet) and shuffle/

@@ -2,14 +2,17 @@
 
 A continuously-crawled corpus should not rebuild the KG from scratch per
 crawl batch. ``incremental_kg`` wires a streaming pages source into the
-SAME batch stage functions (extract → annotate → maximal mentions →
-triples) via ``foreachBatch``, appending each micro-batch's mentions and
-triples to the target tables. Because every stage is a deterministic
-function of the page row alone (no cross-document state — the
-per-document invariant the batch pipeline already relies on for
-resumability), streaming output over N batches is row-identical to one
-batch run over the union; ``tests/test_streaming_kg.py`` asserts exactly
-that.
+batch pipeline's fused pass via ``foreachBatch``: each micro-batch runs
+:func:`kg_batch_increment` — ONE Arrow-batched Python pass that extracts,
+annotates and flags maximal spans (``kg.extract.extract_annotate_stage``),
+then JVM-only explodes for the mentions and the windowed triple test
+(``kg.triples.window_triples``) — and appends its mentions and triples to
+the target tables. Because every stage is a deterministic function of the
+page row alone (no cross-document state — the per-document invariant the
+batch pipeline already relies on for resumability), streaming output over
+N batches is row-identical to one batch run over the union;
+``tests/test_streaming_kg.py`` asserts exactly that, and checks both
+against the relational oracle chain in ``tests/kg_oracle.py``.
 
 foreachBatch (not a pure streaming DAG) is the right tool here: triple
 extraction self-joins mentions within a micro-batch, which a continuous
@@ -39,9 +42,10 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from quickner_spark.kg.extract import extract_stage
-from quickner_spark.kg.triples import pattern_triples
-from quickner_spark.operators.annotate import annotate_mentions, maximal_mentions
+from quickner_spark.kg.extract import (extract_annotate_stage,
+                                       mentions_from_spans)
+from quickner_spark.kg.triples import predicate_window, window_triples
+from quickner_spark.operators.annotate import normalize_gazetteer
 
 __all__ = ["kg_batch_increment", "incremental_kg", "default_batch_writer",
            "host_edges_view"]
@@ -62,13 +66,24 @@ def kg_batch_increment(pages: DataFrame, entities: Sequence[tuple[str, str]],
                        predicates: Sequence[str],
                        case_sensitive: bool = False
                        ) -> tuple[DataFrame, DataFrame]:
-    """One increment: pages -> (mentions, triples). Pure function of the
-    input rows; shared by the streaming wiring and its batch twin."""
-    ext = extract_stage(pages)
-    mentions = annotate_mentions(ext, entities, id_col="url",
-                                 case_sensitive=case_sensitive)
-    maximal = maximal_mentions(mentions, id_col="url")
-    triples = pattern_triples(maximal, ext, predicates, id_col="url")
+    """One increment: pages -> (mentions(url, start, end, label, surface),
+    triples). Pure function of the input rows; the streaming wiring calls
+    it per micro-batch, and it is its own batch twin.
+
+    ``entities`` are raw ``(name, label)`` pairs, normalized here exactly
+    as the batch pipeline does (lowered unless ``case_sensitive``). The
+    fused extract is local-checkpointed lazily: the first action over
+    either output runs the Python pass once, and the other output reads
+    the checkpoint instead of re-running it."""
+    predicates = tuple(predicates)
+    gaz = normalize_gazetteer(entities, case_sensitive=case_sensitive)
+    ext = extract_annotate_stage(
+        pages, gaz, case_sensitive=case_sensitive,
+        window=predicate_window(predicates)).localCheckpoint(eager=False)
+    spans = mentions_from_spans(ext)
+    mentions = spans.select("url", "start", "end", "label", "surface")
+    triples = window_triples(spans.where(F.col("maximal")), predicates,
+                             id_col="url")
     return mentions, triples
 
 
@@ -111,12 +126,9 @@ def incremental_kg(pages_stream: DataFrame,
     if writer is None:
         writer = default_batch_writer
     else:
-        # The writer contract gained batch_id (needed for idempotent
-        # replay); accept legacy writer(df, path) callables for one
-        # release, and fail FAST here — at stream start, with a clear
-        # message — rather than inside foreachBatch on the first
-        # micro-batch, where the TypeError would surface as an opaque
-        # stream failure.
+        # fail FAST here — at stream start, with a clear message — rather
+        # than inside foreachBatch on the first micro-batch, where the
+        # TypeError would surface as an opaque stream failure
         import inspect
 
         try:
@@ -132,32 +144,21 @@ def incremental_kg(pages_stream: DataFrame,
                 n_params = 3
             else:
                 n_params = len(params)
-        if n_params == 2:
-            legacy = writer
-
-            def writer(df: DataFrame, path: str, batch_id: int) -> None:
-                legacy(df, path)
-        elif n_params != 3:
+        if n_params != 3:
             raise TypeError(
-                "incremental_kg writer must accept (df, path, batch_id) "
-                f"(or the legacy (df, path)); got {n_params} parameters")
+                "incremental_kg writer must accept (df, path, batch_id); "
+                f"got {n_params} parameters")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # localCheckpoint: extract and annotate run ONCE even though two
-        # sinks and the triple self-join reference them.
-        ext = extract_stage(batch_df).localCheckpoint()
-        mentions = annotate_mentions(ext, entities, id_col="url",
-                                     case_sensitive=case_sensitive
-                                     ).localCheckpoint()
+        mentions, triples = kg_batch_increment(batch_df, entities, predicates,
+                                               case_sensitive=case_sensitive)
         writer(mentions, mentions_path, batch_id)
-        writer(pattern_triples(maximal_mentions(mentions, id_col="url"),
-                               ext, predicates, id_col="url"),
-               triples_path, batch_id)
+        writer(triples, triples_path, batch_id)
         if host_edges_path is not None:
             from quickner_spark.kg.weblinks import extract_links, host_graph
 
             # per-batch partial of a mergeable count — the raw batch rows
-            # (html), not ext: extraction drops the markup anchors live in
+            # (html): extraction drops the markup anchors live in
             writer(host_graph(extract_links(batch_df)),
                    host_edges_path, batch_id)
 

@@ -44,13 +44,6 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--force", action="store_true",
                     help="recompute every stage even if committed")
-    ap.add_argument("--bucket", type=int, default=0,
-                    help="bucket count for url-bucketed catalog-table "
-                         "stage outputs (0 = plain parquet dirs); "
-                         "downstream doc-keyed joins run exchange-free")
-    ap.add_argument("--no-fuse", action="store_true",
-                    help="run extract and annotate as separate stages "
-                         "instead of the fused single Arrow pass")
     ap.add_argument("--html-style", choices=("clean", "messy"),
                     default="clean",
                     help="synthetic corpus html shape (messy = real-web "
@@ -99,10 +92,8 @@ def main() -> None:
         from quickner_spark.kg.webextract import extract_text_web
         extractor = extract_text_web
     gaz = corpus.synth_gazetteer(args.gazetteer_size, args.seed)
-    bucket = ("url", args.bucket) if args.bucket else None
     pipe = build_kg_pipeline(spark, args.out, pages_path, gaz,
-                             corpus.PREDICATES, bucket=bucket,
-                             fuse=not args.no_fuse, extractor=extractor,
+                             corpus.PREDICATES, extractor=extractor,
                              pages_format=args.input_format,
                              link_graph=args.link_graph,
                              host_rank=args.host_rank)

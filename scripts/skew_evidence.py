@@ -4,8 +4,8 @@ sentence subjects and ONE domain owning ~10% of urls — and show the
 per-stage partition histograms stay balanced, i.e. the skew guards are
 design, not luck:
 
-* url-keyed plans (bucketed stage tables, doc-keyed SMJs) hash the FULL
-  url, so a hot domain cannot concentrate a bucket;
+* url-keyed plans (the triples stage's doc-keyed SMJ) hash the FULL url,
+  so a hot domain cannot concentrate a shuffle partition;
 * surface-keyed aggregates (nodes, entity index) collapse map-side
   (partial aggregation) before any shuffle, so a 30%-share surface ships
   ~one row per map task, not 30% of the corpus, to one reducer;
@@ -79,9 +79,7 @@ def run_variant(spark, name: str, **corpus_kw) -> dict:
                        sents_per_page=SENTS, **corpus_kw) \
         .write.mode("overwrite").parquet(pages_path)
     gaz = corpus.synth_gazetteer(999, 42)
-    pipe = build_kg_pipeline(spark, base, pages_path, gaz, corpus.PREDICATES,
-                             bucket=("url", CORES * 2),
-                             table_prefix=f"skew_{name}")
+    pipe = build_kg_pipeline(spark, base, pages_path, gaz, corpus.PREDICATES)
     t0 = time.time()
     pipe.run()
     wall = round(time.time() - t0, 1)
@@ -117,10 +115,6 @@ def run_variant(spark, name: str, **corpus_kw) -> dict:
         "entity_index_salted_sec": t_salted,
         "salted_equals_plain": eq,
     }
-    pipe.restore_session_confs()
-    for st in ("extract", "mentions", "linked", "triples", "aliases",
-               "nodes", "edges"):
-        spark.sql(f"DROP TABLE IF EXISTS skew_{name}_{st}")
     return res
 
 

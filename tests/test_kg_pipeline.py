@@ -173,110 +173,6 @@ def test_catalog_mode_writer_selection(spark, monkeypatch):
                     catalog="ice.kg").run() == {"stg": "skipped"}
 
 
-def test_bucketed_pipeline_equivalent_and_exchange_free(spark, pages_path,
-                                                        pipe, tmp_path):
-    """bucket=("url", N) mode: stage outputs become url-bucketed catalog
-    tables; results are identical to the parquet pipeline, and the
-    maximal-mentions + triples plan built from the bucketed tables runs
-    with ZERO hash-partitioning exchanges (the write-time shuffle replaces
-    every downstream doc-keyed join shuffle)."""
-    from quickner_spark.kg.triples import pattern_triples
-    from quickner_spark.operators.annotate import maximal_mentions
-
-    gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
-    p2 = build_kg_pipeline(spark, str(tmp_path / "bkt"), pages_path, gaz,
-                           corpus.PREDICATES, bucket=("url", 4),
-                           table_prefix="tbkt")
-    # engine sessions (quickner_spark.session.get_spark) set this; the
-    # bare test session does not — it lets a url-bucketed side satisfy a
-    # (url, offset) join without re-shuffling
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try:
-        p2.run()
-        for st in ("mentions", "triples", "edges"):
-            # partitioned parquet read-back moves partition columns to the
-            # end; bucketed tables keep write order — compare canonically
-            cols = sorted(pipe.table(st).columns)
-            a = {tuple(r) for r in pipe.table(st).select(*cols).collect()}
-            b = {tuple(r) for r in p2.table(st).select(*cols).collect()}
-            assert a == b, st
-        # operator-composition plan (anti-join form) stays exchange-free
-        mm = maximal_mentions(p2.table("mentions").drop("maximal"),
-                              id_col="url")
-        tr = pattern_triples(mm, p2.table("extract"), corpus.PREDICATES,
-                             id_col="url")
-        tr.collect()
-        plan = tr._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange hashpartitioning") == 0, plan
-        assert "Bucketed: true" in plan
-
-        # ONE FILE PER BUCKET: the write repartitions on the bucket key so
-        # the table's SORTED BY order is visible to the planner (Spark
-        # ignores bucket sort order when a bucket spans several files).
-        import glob as _glob
-        import re as _re
-        for st in ("extract", "mentions"):
-            files = _glob.glob(str(tmp_path / "bkt" / st / "*.parquet"))
-            assert len(files) == 4, (st, files)
-
-        # the PIPELINE-shaped triples plan (in-row maximal flag -> filter,
-        # no anti-join) reads every url-keyed SMJ side pre-sorted: the
-        # only Sort in the whole plan is the candidate side of the
-        # (url, obj_start) join — the object side's (url, start) bucket
-        # sort satisfies that ordering through the obj_start alias.
-        tr2 = pattern_triples(
-            p2.table("mentions").where("maximal").drop("maximal"),
-            p2.table("extract"), corpus.PREDICATES, id_col="url")
-        tr2.collect()
-        plan2 = tr2._jdf.queryExecution().executedPlan().toString()
-        assert plan2.count("Exchange hashpartitioning") == 0, plan2
-        final = plan2.split("== Initial Plan ==")[0]
-        n_sorts = len(_re.findall(r"\bSort \[", final))
-        assert n_sorts == 1, final
-        # metrics still flow through the parquet-footer path
-        assert p2.metrics().count() > 0
-
-        # selective bucketing: only stages whose consumers join on url
-        # (extract, mentions) pay the write-time bucket sort; the two
-        # largest outputs (linked, triples) must stay un-bucketed
-        def _is_bucketed(tbl: str) -> bool:
-            rows = spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()
-            return any(r[0] == "Num Buckets" for r in rows)
-
-        assert _is_bucketed("tbkt_extract")
-        assert _is_bucketed("tbkt_mentions")
-        assert not _is_bucketed("tbkt_linked")
-        assert not _is_bucketed("tbkt_triples")
-
-        # fresh-session resume: the in-memory metastore forgets the
-        # tables (simulated by dropping them); a rebuilt pipeline must
-        # re-register the surviving committed data and skip every stage,
-        # with the bucket spec (and the partitioned edges table) intact
-        n_mentions = p2.table("mentions").count()
-        n_edges = p2.table("edges").count()
-        for st in ("extract", "mentions", "linked", "triples", "aliases",
-                   "nodes", "edges"):
-            spark.sql(f"DROP TABLE IF EXISTS tbkt_{st}")
-        p3 = build_kg_pipeline(spark, str(tmp_path / "bkt"), pages_path, gaz,
-                               corpus.PREDICATES, bucket=("url", 4),
-                               table_prefix="tbkt")
-        assert set(p3.run().values()) == {"skipped"}
-        assert p3.table("mentions").count() == n_mentions
-        assert p3.table("edges").count() == n_edges
-        mm3 = maximal_mentions(p3.table("mentions"), id_col="url")
-        tr3 = pattern_triples(mm3, p3.table("extract"), corpus.PREDICATES,
-                              id_col="url")
-        plan3 = tr3._jdf.queryExecution().executedPlan().toString()
-        assert plan3.count("Exchange hashpartitioning") == 0, plan3
-        assert "Bucketed: true" in plan3
-    finally:
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition",
-                       "true")
-        for st in ("extract", "mentions", "linked", "triples", "aliases",
-                   "nodes", "edges"):
-            spark.sql(f"DROP TABLE IF EXISTS tbkt_{st}")
-
-
 def test_edges_weighted(pipe):
     edges = pipe.table("edges")
     assert set(edges.columns) == {"src", "dst", "pred", "weight"}
@@ -416,47 +312,46 @@ def test_link_large_alias_table_plan_builds_fast(spark):
     assert out.count() == 1
 
 
-def test_bucket_mode_table_unknown_stage_raises_value_error(spark, tmp_path):
-    """In bucket mode, table() on a name that is not a pipeline stage must
-    raise a ValueError naming the valid stages — not a bare StopIteration
-    (which turns into RuntimeError inside generators)."""
-    from quickner_spark.kg.pipeline import Pipeline, Stage
-
-    p = Pipeline(spark, str(tmp_path / "vt"),
-                 [Stage("extract", lambda s, c: None)],
-                 bucket=("url", 4), table_prefix="vt")
-    with pytest.raises(ValueError, match="unknown stage 'tyops'.*extract"):
-        p.table("tyops")
-
-
 def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
                                               tmp_path):
-    """fuse=False (separate extract + annotate stages) must produce
-    row-identical mentions/extract-text/triples to the fused default —
-    the fused pass is a bandwidth optimization, never a semantic change."""
+    """The fused pipeline must produce row-identical tables to the
+    relational oracle pipeline (tests/kg_oracle.py: separate extract and
+    annotate passes, link_mentions, the maximal_mentions anti-join and
+    pattern_triples) — the fused pass is a bandwidth optimization, never
+    a semantic change. Every table compares as a multiset."""
+    from collections import Counter
+
+    from tests.kg_oracle import build_oracle_pipeline
+
     gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
-    p2 = build_kg_pipeline(spark, str(tmp_path / "unfused"), pages_path,
-                           gaz, corpus.PREDICATES, fuse=False)
+    p2 = build_oracle_pipeline(spark, str(tmp_path / "oracle"), pages_path,
+                               gaz, corpus.PREDICATES)
     p2.run()
-    for st, cols in (("extract", ["url", "text"]),
-                     ("mentions", None), ("triples", None), ("edges", None),
-                     ("aliases", None), ("nodes", None)):
+
+    def bag(df, cols):
+        return Counter(tuple(tuple(v) if isinstance(v, list) else v
+                             for v in r)
+                       for r in df.select(*cols).collect())
+
+    cols5 = ["url", "start", "end", "label", "surface"]
+    for st, cols in (("extract", ["url", "text"]), ("mentions", cols5),
+                     ("triples", None), ("aliases", None), ("nodes", None),
+                     ("edges", None)):
         a_df, b_df = pipe.table(st), p2.table(st)
-        sel = cols or sorted(set(a_df.columns) & set(b_df.columns))
-        a, b = ({tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                 for r in df.select(*sel).collect()} for df in (a_df, b_df))
+        if cols is None:  # the whole table: same columns on both sides
+            cols = sorted(a_df.columns)
+            assert sorted(b_df.columns) == cols, st
+        a, b = bag(a_df, cols), bag(b_df, cols)
         assert a == b and a, st
 
-    # the in-row link (fused) vs the relational link_mentions (unfused):
-    # all 7 columns, score compared as the exact double, as a multiset
-    from collections import Counter
+    # the in-row link vs the relational link_mentions: all 7 columns,
+    # score compared as the exact double
     link_cols = ["url", "start", "end", "surface", "canonical_id", "label",
                  "score"]
     assert pipe.table("linked").columns == link_cols
-    fused_l = Counter(tuple(r) for r in pipe.table("linked").collect())
-    unfused_l = Counter(tuple(r) for r in
-                        p2.table("linked").select(*link_cols).collect())
-    assert fused_l == unfused_l and len(fused_l) > 100
+    fused_l = bag(pipe.table("linked"), link_cols)
+    assert fused_l == bag(p2.table("linked"), link_cols)
+    assert len(fused_l) > 100
 
     # driver canonicalization == the Spark similarity-join oracle on the
     # pipeline's own alias set
@@ -467,7 +362,6 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
 
     # the fused stage's in-row maximal flag must equal the anti-join
     # operator's longest-match decision exactly
-    cols5 = ["url", "start", "end", "label", "surface"]
     from quickner_spark.operators.annotate import maximal_mentions
     flagged = {tuple(r) for r in pipe.table("mentions")
                .where("maximal").select(*cols5).collect()}
@@ -613,13 +507,13 @@ def test_maximal_flags_property():
 
 
 def test_empty_predicates_fused_pipeline(spark, pages_path, tmp_path):
-    """build_kg_pipeline(..., predicates=(), fuse=True) must run end to
+    """build_kg_pipeline(..., predicates=()) must run end to
     end: at window=0 the fused extract emits no nxt field, the mentions
     stage must not select it, and the triples stage short-circuits to a
     typed empty result (no zero-element struct array reaches analysis)."""
     gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
     p = build_kg_pipeline(spark, str(tmp_path / "nopred"), pages_path, gaz,
-                          predicates=(), fuse=True)
+                          predicates=())
     status = p.run()
     assert all(v == "ran" for v in status.values()), status
     m = p.table("mentions")
@@ -632,106 +526,3 @@ def test_empty_predicates_fused_pipeline(spark, pages_path, tmp_path):
     # nodes/edges still materialize (edges empty, nodes from linked)
     assert p.table("nodes").count() > 0
     assert p.table("edges").count() == 0
-
-
-def test_bucket_spec_record_guards_reregistration(spark, pages_path,
-                                                  tmp_path):
-    """The writer persists the bucket/sort layout next to the committed
-    data; re-registration after a metastore loss must declare the RECORDED
-    spec (not the in-code Stage), fall back to no SORTED BY when the
-    record is absent (legacy data), and refuse a bucket-key/N mismatch."""
-    import json
-    import os
-
-    gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
-    base = str(tmp_path / "bspec")
-    mk = lambda bucket=("url", 4): build_kg_pipeline(
-        spark, base, pages_path, gaz, corpus.PREDICATES,
-        bucket=bucket, table_prefix="tspec")
-    spec_path = os.path.join(base, "mentions", "_bucket_spec.json")
-    crc_path = os.path.join(base, "mentions", "._bucket_spec.json.crc")
-
-    def drop_crc() -> None:
-        # tampering with plain open() invalidates the Hadoop local-FS
-        # checksum sidecar the writer created — remove it
-        if os.path.exists(crc_path):
-            os.remove(crc_path)
-
-    def sort_cols(tbl: str) -> str:
-        rows = spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()
-        return next((r[1] for r in rows if r[0] == "Sort Columns"), "")
-
-    def drop_all() -> None:
-        for st in ("extract", "mentions", "linked", "triples", "aliases",
-                   "nodes", "edges"):
-            spark.sql(f"DROP TABLE IF EXISTS tspec_{st}")
-
-    try:
-        mk().run()
-        with open(spec_path) as fh:
-            rec = json.load(fh)
-        assert rec == {"bucketed": True, "key": "url", "n": 4,
-                       "sort": ["url", "start"]}
-
-        # (1) data written under an OLDER sort spec (url only): the
-        # re-registration must declare url-only, not today's (url, start)
-        with open(spec_path, "w") as fh:
-            json.dump({"bucketed": True, "key": "url", "n": 4,
-                       "sort": ["url"]}, fh)
-        drop_crc()
-        drop_all()
-        p2 = mk()
-        assert p2.table("mentions").count() > 0  # triggers re-register
-        cols = sort_cols("tspec_mentions")
-        assert "url" in cols and "start" not in cols, cols
-
-        # (2) no record at all (pre-record data): bucketing is declared
-        # (file names carry it), the unknown sort order is NOT
-        os.remove(spec_path)
-        drop_crc()
-        drop_all()
-        p3 = mk()
-        assert p3.table("mentions").count() > 0
-        assert sort_cols("tspec_mentions") in ("", "[]")
-        rows = spark.sql("DESCRIBE EXTENDED tspec_mentions").collect()
-        assert any(r[0] == "Num Buckets" for r in rows)
-
-        # (3) record contradicts this pipeline's bucket spec -> refuse
-        with open(spec_path, "w") as fh:
-            json.dump({"bucketed": True, "key": "url", "n": 8,
-                       "sort": ["url", "start"]}, fh)
-        drop_crc()
-        drop_all()
-        p4 = mk(bucket=("url", 4))
-        with pytest.raises(ValueError, match="bucketed as"):
-            p4.table("mentions")
-    finally:
-        drop_all()
-
-
-def test_restore_session_confs(spark, pages_path, tmp_path):
-    """Bucket mode tunes two session confs and documents the leak; the
-    restore hook must put back the pre-pipeline values (including unset)."""
-    k_ord = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    k_auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prior_ord = spark.conf.get(k_ord, None)
-    prior_auto = spark.conf.get(k_auto, None)
-    gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
-    p = build_kg_pipeline(spark, str(tmp_path / "cres"), pages_path, gaz,
-                          corpus.PREDICATES, bucket=("url", 4),
-                          table_prefix="tcres")
-    try:
-        p.run()
-        assert spark.conf.get(k_ord) == "true"
-        assert spark.conf.get(k_auto) == "false"
-        p.restore_session_confs()
-        assert spark.conf.get(k_ord, None) == prior_ord
-        assert spark.conf.get(k_auto, None) == prior_auto
-    finally:
-        for st in ("extract", "mentions", "linked", "triples", "aliases",
-                   "nodes", "edges"):
-            spark.sql(f"DROP TABLE IF EXISTS tcres_{st}")
-        if prior_ord is None:
-            spark.conf.unset(k_ord)
-        if prior_auto is None:
-            spark.conf.unset(k_auto)

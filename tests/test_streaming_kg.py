@@ -1,8 +1,11 @@
 """Incremental KG construction: streaming over N crawl batches must be
-row-identical to one batch run over the union (mentions AND triples), and
-the checkpoint must resume at the first uncommitted batch."""
+row-identical to one batch run over the union (mentions AND triples) and
+to the relational oracle chain, and the checkpoint must resume at the
+first uncommitted batch."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 
@@ -29,7 +32,21 @@ def crawl_batches(spark, tmp_path_factory):
     return str(src), full
 
 
+def _bag(df, cols):
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+M_COLS = ["url", "start", "end", "label", "surface"]
+T_COLS = ["url", "subj", "pred", "obj", "subj_start", "obj_start"]
+
+
 def test_streaming_kg_equals_batch(spark, crawl_batches, tmp_path):
+    """The stream over two crawl batches must be row-identical to its own
+    batch twin over the union, and — as multisets — to the relational
+    oracle chain (tests/kg_oracle.py), which catches a semantic change
+    the two fused paths would share."""
+    from tests.kg_oracle import oracle_increment
+
     src, full = crawl_batches
     gaz = corpus.synth_gazetteer(GAZ_SIZE, 7)
     mpath = str(tmp_path / "mentions")
@@ -51,6 +68,42 @@ def test_streaming_kg_equals_batch(spark, crawl_batches, tmp_path):
     assert got_t == exp_t and got_t
     # multiple micro-batches actually happened (maxFilesPerTrigger=1)
     assert len(list((tmp_path / "ckpt" / "commits").iterdir())) >= 2
+
+    _, om, ot = oracle_increment(full, gaz, corpus.PREDICATES)
+    assert _bag(spark.read.parquet(mpath), M_COLS) == _bag(om, M_COLS)
+    assert _bag(spark.read.parquet(tpath), T_COLS) == _bag(ot, T_COLS)
+
+
+def test_streaming_mixed_case_gazetteer(spark, tmp_path):
+    """Gazetteer names in mixed case must match the lowered page text,
+    as in the batch pipeline: the increment normalizes the gazetteer
+    before matching, in the batch function and in the stream."""
+    from tests.kg_oracle import oracle_increment
+
+    gaz = [("Acme", "ORG"), ("Globex", "ORG")]
+    preds = ("acquired",)
+    src = tmp_path / "pages_in"
+    pages = spark.createDataFrame(
+        [("u0", corpus.page_html("Acme acquired Globex .", "u0"))],
+        "url string, html binary")
+    pages.coalesce(1).write.parquet(str(src / "b0"))
+    want_m = [("u0", 0, 4, "ORG", "acme"), ("u0", 14, 20, "ORG", "globex")]
+    want_t = [("u0", "acme", "acquired", "globex", 0, 14)]
+
+    m, t = kg_batch_increment(pages, gaz, preds)
+    assert sorted(tuple(r) for r in m.collect()) == want_m
+    assert sorted(tuple(r) for r in t.collect()) == want_t
+    _, om, ot = oracle_increment(pages, gaz, preds)
+    assert _bag(om, M_COLS) == Counter(want_m)
+    assert _bag(ot, T_COLS) == Counter(want_t)
+
+    mpath, tpath = str(tmp_path / "m"), str(tmp_path / "t")
+    stream = spark.readStream.schema(pages.schema).parquet(str(src) + "/*")
+    q = incremental_kg(stream, gaz, preds, mpath, tpath,
+                       checkpoint_dir=str(tmp_path / "ckpt"))
+    assert q.awaitTermination(180)
+    assert _bag(spark.read.parquet(mpath), M_COLS) == Counter(want_m)
+    assert _bag(spark.read.parquet(tpath), T_COLS) == Counter(want_t)
 
 
 def test_streaming_kg_resumes_from_checkpoint(spark, crawl_batches, tmp_path):
@@ -92,34 +145,23 @@ def test_default_writer_replay_is_idempotent(spark, tmp_path):
 
 
 def test_legacy_two_arg_writer_adapted(spark, crawl_batches, tmp_path):
-    """writer(df, path) callables from before the batch_id contract must
-    still work (adapted at call time), and a wrong arity must fail fast at
-    incremental_kg() time, not inside the first micro-batch."""
+    """The legacy two-argument writer(df, path) is no longer adapted: like
+    any writer that cannot take (df, path, batch_id), it must fail fast
+    at incremental_kg() time, not inside the first micro-batch."""
     src, full = crawl_batches
     gaz = corpus.synth_gazetteer(GAZ_SIZE, 7)
-    calls = []
-
-    def legacy_writer(df, path):
-        calls.append(path)
-        df.write.mode("append").parquet(path)
-
     stream = (spark.readStream.schema(full.schema)
               .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    q = incremental_kg(stream, gaz, corpus.PREDICATES,
-                       str(tmp_path / "m"), str(tmp_path / "t"),
-                       checkpoint_dir=str(tmp_path / "ckpt"),
-                       writer=legacy_writer)
-    q.awaitTermination(180)
-    assert calls and all(p.endswith(("m", "t")) for p in calls)
-    bm, _ = kg_batch_increment(full, gaz, corpus.PREDICATES)
-    got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "m")).collect()}
-    assert got == {tuple(r) for r in bm.collect()}
 
-    with pytest.raises(TypeError, match="writer must accept"):
-        incremental_kg(stream, gaz, corpus.PREDICATES,
-                       str(tmp_path / "m2"), str(tmp_path / "t2"),
-                       checkpoint_dir=str(tmp_path / "ckpt2"),
-                       writer=lambda df: None)
+    def two_arg_writer(df, path):
+        df.write.mode("append").parquet(path)
+
+    for w in (two_arg_writer, lambda df: None):
+        with pytest.raises(TypeError, match="writer must accept"):
+            incremental_kg(stream, gaz, corpus.PREDICATES,
+                           str(tmp_path / "m"), str(tmp_path / "t"),
+                           checkpoint_dir=str(tmp_path / "ckpt"), writer=w)
+    assert not (tmp_path / "m").exists()
 
 
 def test_var_positional_writer_accepted(spark, crawl_batches, tmp_path):
