@@ -6,30 +6,40 @@ Common-Crawl-style corpora change a few percent of urls per snapshot, and
 the doc-local stages (extract -> mentions -> link -> triples) are
 embarrassingly parallel per document, so the correct operating mode is:
 
-1. **Digest diff.** One narrow pass computes ``xxhash64(html)`` per url;
-   a doc-keyed left join against the previous snapshot's manifest
-   ``(url, digest, snap)`` classifies every page as unchanged (skip),
-   changed (reprocess + subtract its old contributions) or new
-   (reprocess). The per-row invariant the whole pipeline is built on —
-   byte-identical extraction per url (BASELINE.json input_hint) — is what
-   makes the digest a sound skip condition: same bytes ==> same text ==>
-   same mentions/links/triples.
+1. **Digest diff.** One narrow pass computes ``xxhash64(html)`` per url
+   and writes it under ``digests/snap=K``; a doc-keyed left join against
+   the previous snapshot's manifest ``(url, digest, snap)`` classifies
+   every page as unchanged (skip), changed (reprocess + subtract its old
+   contributions) or new (reprocess). The classification is written once,
+   under ``changes/snap=K``, and every later step reads it; the page,
+   change and replaced-url counts are ``Observation`` metrics of these
+   two writes, so no count job runs. The per-row invariant the whole
+   pipeline is built on — byte-identical extraction per url
+   (BASELINE.json input_hint) — is what makes the digest a sound skip
+   condition: same bytes ==> same text ==> same mentions/links/triples.
 2. **Doc-local stages run on the changed subset only** and append under
    ``<table>/snap=K`` partitions — the same fused Arrow pass (which also
    links every span in-row) and windowed triple extractor the full
    pipeline uses
    (``kg.pipeline.build_kg_pipeline``), so a snapshot-0 ``update()`` is
-   row-identical to the batch pipeline (pinned by tests).
+   row-identical to the batch pipeline (pinned by tests). After snapshot
+   0 the pages are cut to the changed urls by a semi-join BEFORE the
+   in-snapshot revisit dedup, so only changed pages' html is shuffled a
+   second time.
 3. **Aggregates merge, never rebuild.** nodes/edges derive from two
    cumulative count tables — ``linked_stats(surface, label, n)`` and
    ``triple_stats(subj, pred, obj, n)``, both bounded by the gazetteer /
    predicate vocabulary, not the corpus — updated as
-   ``old + counts(new rows) - counts(replaced urls' old rows)``. The
-   subtraction reads the replaced urls' previous rows from their
-   ``snap=<old>`` partitions via a (url, snap) join, touching candidates
-   only. Alias canonicalization reruns on the driver over the (tiny,
-   gazetteer-bounded) surviving surface set — and only when that set
-   differs from the previous snapshot's, a driver-side set comparison.
+   ``old + counts(new rows) - counts(replaced urls' old rows)`` in ONE
+   aggregation: the old counts, the new rows at +1 and the replaced rows
+   at -1 are unioned and summed by a single groupBy (one exchange). The
+   subtraction lists only the replaced urls' ``snap=<old>`` partitions
+   and keeps their rows by a (url, snap) semi-join, touching candidates
+   only. Alias canonicalization reruns on the driver
+   over the (tiny, gazetteer-bounded) surviving surface set — and only
+   when that set differs from the previous snapshot's, a driver-side set
+   comparison. Every table the update reads back is read under its known
+   schema, so no read launches a schema-inference job.
 4. **Commit = one pointer write.** Every versioned artifact for snapshot
    K (manifest, stats, aliases, nodes, edges) is written first;
    ``_CURRENT`` is written last. A crash mid-update leaves orphan
@@ -56,7 +66,9 @@ import json
 import time
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
+                         functions as F)
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from quickner_spark.kg.canonicalize import canonicalize_aliases
 from quickner_spark.kg.extract import (extract_annotate_stage,
@@ -75,6 +87,12 @@ from quickner_spark.operators.annotate import normalize_gazetteer
 __all__ = ["SnapshotKg", "snapshot_delta"]
 
 _CURRENT = "_CURRENT"
+# schemas of the tables a previous snapshot committed, which update()
+# reads without inferring them
+_MANIFEST = "url string, digest bigint, snap int"
+_LINKED_STATS = "surface string, label string, n bigint"
+_TRIPLE_STATS = "subj string, pred string, obj string, n bigint"
+_ALIASES = "alias string, canonical_id string"
 
 
 def snapshot_delta(new_digests: DataFrame, old_manifest: DataFrame,
@@ -176,40 +194,65 @@ class SnapshotKg:
         return self.spark.read.parquet(self._v(name, k))
 
     # -- update -----------------------------------------------------------
+    def _commit(self, df: DataFrame, path: str) -> DataFrame:
+        """Overwrite ``path`` with ``df``; return the written table read
+        back under ``df``'s own schema, so the read infers nothing."""
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
+
     def update(self, pages: DataFrame) -> dict:
         """Ingest one snapshot; returns
         ``{"snap", "pages_in", "changed", "committed"}``. ``changed`` is
         the number of pages the doc-local stages actually processed —
-        the incrementality contract the tests assert on."""
+        the incrementality contract the tests assert on.
+
+        Every Spark job it runs is a write, a join's exchange, or one of
+        three bounded collects (the replaced-url IN-list when it is
+        short, and the two alias sets). ``pages_in``,
+        ``changed`` and the replaced-url count are ``Observation`` metrics
+        of the digest and classification writes, and every table it reads
+        back is read under its known schema."""
         spark = self.spark
         prev = self.snap()
         k = 0 if prev is None else prev + 1
 
-        if "warc_ts" in pages.columns:
+        def latest(df: DataFrame) -> DataFrame:
+            # revisits within the snapshot resolve to the latest capture
+            if "warc_ts" not in df.columns:
+                return df
             from quickner_spark.operators.events import latest_by_key
-            pages = latest_by_key(pages, "url", "warc_ts")
+            return latest_by_key(df, "url", "warc_ts")
 
         # 1. digest pass — the ONLY scan of unchanged pages' html; persist
-        # (url, digest) so the classification joins below are narrow
-        # parquet scans, not repeated hashes of the html column.
-        (pages.select("url", F.xxhash64("html").alias("digest"))
-         .write.mode("overwrite").parquet(self._part("digests", k)))
-        nd = spark.read.parquet(self._part("digests", k))
-
-        if prev is None:
-            changed = nd
-            replaced = None
-            old_manifest = None
-        else:
-            old_manifest = spark.read.parquet(self._v("manifest", prev))
-            delta = snapshot_delta(nd, old_manifest)
-            changed = delta.select("url", "digest")
-            # urls whose OLD rows must be subtracted from the aggregates
-            replaced = (delta.where(F.col("status") == "changed")
-                        .select("url", F.col("old_snap").alias("snap")))
+        # (url, digest) so the classification join is a narrow parquet
+        # scan. Its row count, NULL digests included, is pages_in.
+        seen = Observation("digests")
+        nd = self._commit(
+            latest(pages).select("url", F.xxhash64("html").alias("digest"))
+            .observe(seen, F.count(F.lit(1)).alias("n")),
+            self._part("digests", k))
         t0 = time.time()
-        n_in = nd.count()
-        n_changed = changed.count()
+        if prev is None:
+            # snapshot 0 processes every page, NULL digests included
+            old_manifest = None
+            delta = nd.select("url", "digest", F.lit("new").alias("status"),
+                              F.lit(None).cast("int").alias("old_snap"))
+        else:
+            old_manifest = spark.read.schema(_MANIFEST).parquet(
+                self._v("manifest", prev))
+            delta = snapshot_delta(nd, old_manifest)
+        # the classification is computed once, here; every later step
+        # reads its changes/snap=K partition
+        classified = Observation("changes")
+        changes = self._commit(
+            delta.observe(classified, F.count(F.lit(1)).alias("n"),
+                          F.count_if(F.col("status") == "changed")
+                          .alias("replaced"),
+                          F.collect_set("old_snap").alias("old_snaps")),
+            self._part("changes", k))
+        n_in = seen.get["n"]
+        counts = classified.get
+        n_changed = counts["n"]
         if n_changed == 0 and prev is not None:
             self._log_update(k, n_in, 0, committed=False,
                              wall_ms=int((time.time() - t0) * 1000))
@@ -217,52 +260,57 @@ class SnapshotKg:
                     "committed": False}
 
         # 2. doc-local stages over the changed subset only (the second and
-        # last scan of any html bytes, and only the changed ones)
-        proc = pages.join(changed.select("url"), "url", "left_semi")
-        ext = extract_annotate_stage(proc, self.gaz,
-                                     case_sensitive=self.case_sensitive,
-                                     window=self.pred_window,
-                                     extractor=self.extractor)
-        ext.write.mode("overwrite").parquet(self._part("extract", k))
-        ext = spark.read.parquet(self._part("extract", k))
-
-        mentions_from_spans(ext).write.mode("overwrite").parquet(
-            self._part("mentions", k))
-        mentions = spark.read.parquet(self._part("mentions", k))
-
+        # last scan of any html bytes). Snapshot 0 changes every page;
+        # later, filtering before the arg-max is exact — it is per url —
+        # and shuffles only the changed pages. The changed set has no size
+        # bound, so the planner decides whether to broadcast it.
+        changed_urls = changes.select("url")
+        proc = latest(pages if prev is None else
+                      pages.join(changed_urls, "url", "left_semi"))
+        ext = self._commit(
+            extract_annotate_stage(proc, self.gaz,
+                                   case_sensitive=self.case_sensitive,
+                                   window=self.pred_window,
+                                   extractor=self.extractor),
+            self._part("extract", k))
+        mentions = self._commit(mentions_from_spans(ext),
+                                self._part("mentions", k))
         # every span was linked in-row by the fused pass
-        linked_from_spans(ext).write.mode("overwrite").parquet(
-            self._part("linked", k))
-        linked = spark.read.parquet(self._part("linked", k))
-
+        linked = self._commit(linked_from_spans(ext),
+                              self._part("linked", k))
         maximal = mentions.where(F.col("maximal")).drop("maximal")
-        triples = window_triples(maximal, self.predicates, id_col="url")
-        triples.write.mode("overwrite").parquet(self._part("triples", k))
-        triples = spark.read.parquet(self._part("triples", k))
+        triples = self._commit(
+            window_triples(maximal, self.predicates, id_col="url"),
+            self._part("triples", k))
 
         # 3. merge the cumulative aggregate-grain count tables
-        plus_l = linked.groupBy("surface", "label").agg(
-            F.count("*").alias("n"))
-        plus_t = triples.groupBy("subj", "pred", "obj").agg(
-            F.count("*").alias("n"))
-        if prev is not None:
-            pruning = self._replaced_pruning(replaced, replaced.count())
-            lstats = self._merge(self._cur_stats("linked_stats", prev),
-                                 plus_l, self._minus("linked", replaced,
-                                                     ["surface", "label"],
-                                                     pruning),
-                                 ["surface", "label"])
-            tstats = self._merge(self._cur_stats("triple_stats", prev),
-                                 plus_t, self._minus("triples", replaced,
-                                                     ["subj", "pred", "obj"],
-                                                     pruning),
-                                 ["subj", "pred", "obj"])
+        lkeys, tkeys = ["surface", "label"], ["subj", "pred", "obj"]
+        if prev is None:
+            lstats = self._merge(linked, lkeys)
+            tstats = self._merge(triples, tkeys)
         else:
-            lstats, tstats = plus_l, plus_t
-        lstats.write.mode("overwrite").parquet(self._v("linked_stats", k))
-        tstats.write.mode("overwrite").parquet(self._v("triple_stats", k))
-        lstats = spark.read.parquet(self._v("linked_stats", k))
-        tstats = spark.read.parquet(self._v("triple_stats", k))
+            replaced = (changes.where(F.col("status") == "changed")
+                        .select("url", F.col("old_snap").alias("snap")))
+            snaps = sorted(counts["old_snaps"])
+            # built once: every literal of the IN-list is a py4j call
+            url_in = (F.col("url").isin(
+                [r[0] for r in replaced.select("url").collect()])
+                if 0 < counts["replaced"] <= self.MINUS_PUSHDOWN_MAX
+                else None)
+            lstats = self._merge(
+                linked, lkeys,
+                spark.read.schema(_LINKED_STATS).parquet(
+                    self._v("linked_stats", prev)),
+                self._minus("linked", linked.schema, replaced, snaps,
+                            url_in))
+            tstats = self._merge(
+                triples, tkeys,
+                spark.read.schema(_TRIPLE_STATS).parquet(
+                    self._v("triple_stats", prev)),
+                self._minus("triples", triples.schema, replaced, snaps,
+                            url_in))
+        lstats = self._commit(lstats, self._v("linked_stats", k))
+        tstats = self._commit(tstats, self._v("triple_stats", k))
 
         # 4. canonicalization + derived nodes/edges — gazetteer-bounded
         # inputs, the batch pipeline's derivation over the merged stats.
@@ -273,7 +321,8 @@ class SnapshotKg:
         surfaces = {r[0] for r in lstats.select("surface").collect()}
         aliases_reused = False
         if prev is not None:
-            prev_amap = spark.read.parquet(self._v("aliases", prev))
+            prev_amap = spark.read.schema(_ALIASES).parquet(
+                self._v("aliases", prev))
             if surfaces == {r[0] for r in
                             prev_amap.select("alias").collect()}:
                 aliases = prev_amap
@@ -281,8 +330,7 @@ class SnapshotKg:
         if not aliases_reused:
             aliases = canonicalize_aliases(spark.createDataFrame(
                 pa.table({"alias": pa.array(list(surfaces), pa.string())})))
-        aliases.write.mode("overwrite").parquet(self._v("aliases", k))
-        amap = spark.read.parquet(self._v("aliases", k))
+        amap = self._commit(aliases, self._v("aliases", k))
 
         (nodes_from_counts(lstats, amap)
          .write.mode("overwrite").parquet(self._v("nodes", k)))
@@ -290,12 +338,10 @@ class SnapshotKg:
          .write.mode("overwrite").parquet(self._v("edges", k)))
 
         # 5. new manifest: unchanged urls keep their (digest, snap) row
-        if prev is None:
-            manifest = changed.withColumn("snap", F.lit(k))
-        else:
-            manifest = (old_manifest
-                        .join(changed.select("url"), "url", "left_anti")
-                        .unionByName(changed.withColumn("snap", F.lit(k))))
+        fresh = changes.select("url", "digest", F.lit(k).alias("snap"))
+        manifest = fresh if prev is None else (
+            old_manifest.join(changed_urls, "url", "left_anti")
+            .unionByName(fresh))
         manifest.write.mode("overwrite").parquet(self._v("manifest", k))
 
         # 6. commit
@@ -318,67 +364,69 @@ class SnapshotKg:
         return self.update(read_warc(self.spark, path, strict=strict,
                                      path_glob=path_glob))
 
-    def _cur_stats(self, name: str, k: int) -> DataFrame:
-        return self.spark.read.parquet(self._v(name, k))
-
     # below this many replaced urls, the subtraction scan pushes a
     # literal IN-list into the parquet source (row-group min/max skipping
-    # on url-sorted files); above it, the join's runtime filtering is the
-    # scale mechanism and a megabyte-scale literal plan would hurt
+    # on url-sorted files); above it only the (url, snap) semi-join
+    # selects, and a megabyte-scale literal plan would hurt
     MINUS_PUSHDOWN_MAX = 10_000
 
-    def _replaced_pruning(self, replaced: DataFrame, n_replaced: int):
-        """Bounded driver-side pruning info for the subtraction scans,
-        computed ONCE per update: the distinct OLD snaps (at most the
-        snapshot count — always collectable) and, only when the delta is
-        small, the url IN-list. Never collects an unbounded url set."""
-        snaps = sorted(r["snap"] for r in
-                       replaced.select("snap").distinct().collect())
-        urls = ([r["url"] for r in replaced.select("url").collect()]
-                if n_replaced <= self.MINUS_PUSHDOWN_MAX else None)
-        return snaps, urls
-
-    def _minus(self, table: str, replaced: DataFrame, keys,
-               pruning) -> DataFrame:
-        """Negative counts of the replaced urls' OLD rows: read the
-        per-snapshot partitions, join on (url, snap) — exactly the rows
-        the old manifest pointed at (each url's rows are written once per
+    def _minus(self, table: str, schema: StructType, replaced: DataFrame,
+               snaps: list, url_in: Column | None) -> DataFrame | None:
+        """The replaced urls' OLD rows of a per-snapshot table (``schema``
+        is its partition's), or None when nothing is replaced: a
+        (url, snap) semi-join keeps exactly the rows the
+        old manifest pointed at (each url's rows are written once per
         content change, under the snap that processed it).
 
-        Scan pruning, two levels: (a) the replaced rows' distinct OLD
-        snaps become a literal partition filter — snapshots no replaced
-        url lives in are never listed; (b) when the delta is small the
-        url list is additionally pushed into the parquet scan as an IN
-        filter, so row-group min/max stats skip unrelated data. The
-        (url, snap) join stays either way — it is the correctness
-        contract; the pushdowns only shrink what the scan feeds it."""
-        snaps, urls = pruning
-        old = self.spark.read.parquet(f"{self.base}/{table}")
-        old = old.where(F.col("snap").isin(snaps) if snaps else F.lit(False))
-        if urls is not None:
-            old = old.where(F.col("url").isin(urls))
-        return (old.join(replaced, ["url", "snap"])
-                .groupBy(*keys).agg((-F.count("*")).alias("n")))
+        Scan pruning, two levels: (a) only the ``snap=s`` directories of
+        the replaced urls' OLD snaps are listed and read (``basePath``
+        keeps ``snap`` a column) — snapshots no replaced url lives in are
+        never touched; (b) when the delta is small, ``url_in`` (the url
+        IN-list) is additionally pushed into the parquet scan, so
+        row-group min/max stats skip unrelated data. The (url, snap)
+        selection stays either way — it is the correctness contract; the
+        pushdowns only shrink what the scan feeds it."""
+        if not snaps:
+            return None
+        root = f"{self.base}/{table}"
+        old = (self.spark.read
+               .schema(StructType([*schema.fields,
+                                   StructField("snap", IntegerType())]))
+               .option("basePath", root)
+               .parquet(*[f"{root}/snap={s}" for s in snaps]))
+        if url_in is not None:
+            old = old.where(url_in)
+        return old.join(replaced, ["url", "snap"], "left_semi")
 
     @staticmethod
-    def _merge(old: DataFrame, plus: DataFrame, minus: DataFrame,
-               keys) -> DataFrame:
-        """old + plus - minus on the aggregate grain; rows that reach
-        n == 0 disappear (a surface whose last mention was replaced must
-        not survive into the alias set). n < 0 is impossible when the
-        subtraction reads the same rows the addition once counted."""
-        return (old.unionByName(plus).unionByName(minus)
-                .groupBy(*keys).agg(F.sum("n").alias("n"))
+    def _merge(plus: DataFrame, keys, old: DataFrame | None = None,
+               minus: DataFrame | None = None) -> DataFrame:
+        """old + counts(plus) - counts(minus) on the aggregate grain, as
+        ONE aggregation (one exchange): every ``plus`` row counts +1,
+        every ``minus`` row -1, and a single groupBy sums them with the
+        ``old`` counts. Rows that reach n == 0 disappear (a surface whose
+        last mention was replaced must not survive into the alias set).
+        n < 0 is impossible when the subtraction reads the same rows the
+        addition once counted."""
+        rows = plus.select(*keys, F.lit(1).cast("long").alias("n"))
+        if old is not None:
+            rows = rows.unionByName(old)
+        if minus is not None:
+            rows = rows.unionByName(
+                minus.select(*keys, F.lit(-1).cast("long").alias("n")))
+        return (rows.groupBy(*keys).agg(F.sum("n").alias("n"))
                 .where(F.col("n") > 0))
 
     def _log_update(self, k: int, pages_in: int, changed: int,
                     committed: bool, wall_ms: int) -> None:
-        (self.spark.createDataFrame(
-            [(k, pages_in, changed, committed, wall_ms)],
-            "snap int, pages_in long, changed long, committed boolean, "
-            "wall_ms long")
-         .repartition(1).write.mode("append")
-         .parquet(f"{self.base}/_updates"))
+        # an Arrow table plans as a LocalTableScan: no Python-RDD job
+        (self.spark.createDataFrame(pa.table({
+            "snap": pa.array([k], pa.int32()),
+            "pages_in": pa.array([pages_in], pa.int64()),
+            "changed": pa.array([changed], pa.int64()),
+            "committed": pa.array([committed], pa.bool_()),
+            "wall_ms": pa.array([wall_ms], pa.int64())}))
+         .write.mode("append").parquet(f"{self.base}/_updates"))
 
     # -- reads ------------------------------------------------------------
     def nodes(self, snap: int | None = None) -> DataFrame:
@@ -442,7 +490,8 @@ class SnapshotKg:
         at snap=K and the current-view join prunes to one partition.
         Amortized full rewrite of the doc-local tables — run it when the
         snapshot count (not the data size) starts to hurt the view join.
-        Returns the snapshot number everything now lives under."""
+        The per-update ``changes`` classifications are dropped. Returns
+        the snapshot number everything now lives under."""
         k = self.snap()
         if k is None:
             raise ValueError(f"no committed snapshot under {self.base}")
@@ -462,6 +511,7 @@ class SnapshotKg:
             (self.spark.read.parquet(tmp)
              .write.mode("overwrite").parquet(self._part(table, k)))
             fs.delete(_hadoop_path(self.spark, tmp)[1], True)
+        fs.delete(_hadoop_path(self.spark, f"{self.base}/changes")[1], True)
         # repoint every manifest row at snap=K — same two-step (the new
         # manifest reads the file it replaces)
         tmp = f"{self.base}/manifest__compact"

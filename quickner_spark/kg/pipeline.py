@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["Stage", "Pipeline", "build_kg_pipeline", "nodes_from_counts",
            "edges_from_counts"]
@@ -98,6 +99,9 @@ class Pipeline:
         self.stages = stages
         self.catalog = catalog
         self.run_id = uuid.uuid4().hex[:12]
+        # schemas of the stages this object wrote; a stage skipped on
+        # resume is absent and its reads infer
+        self._schemas: dict[str, StructType] = {}
 
     def path(self, stage_name: str) -> str:
         if self.catalog:
@@ -107,7 +111,12 @@ class Pipeline:
     def table(self, stage_name: str) -> DataFrame:
         if self.catalog:
             return self.spark.read.table(self.path(stage_name))
-        return self.spark.read.parquet(self.path(stage_name))
+        # under the written schema, the read launches no schema-inference
+        # job and matches an inferred read, partition columns last
+        schema = self._schemas.get(stage_name)
+        reader = (self.spark.read if schema is None
+                  else self.spark.read.schema(schema))
+        return reader.parquet(self.path(stage_name))
 
     def _stage_exists(self, stage: Stage) -> bool:
         out = self.path(stage.name)
@@ -149,6 +158,7 @@ class Pipeline:
         if stage.partition_by:
             writer = writer.partitionBy(*stage.partition_by)
         writer.parquet(out)
+        self._schemas[stage.name] = df.schema
         if stage.partition_by:
             self._ensure_readable(df, out)
 

@@ -16,3 +16,18 @@ def spark() -> SparkSession:
         .getOrCreate()
     )
     yield s
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids()`` -> ids of the Spark jobs the session has run so far.
+    The status store is filled from the listener bus asynchronously, so
+    the bus is drained first; a set difference around a call counts the
+    jobs it ran (the store keeps the latest ``spark.ui.retainedJobs``)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def ids() -> set[int]:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+    return ids

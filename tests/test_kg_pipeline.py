@@ -114,6 +114,19 @@ def test_metrics_with_file_scheme_base(spark, pages_path, tmp_path):
     assert total == p.table("mentions").count()
 
 
+def test_table_reads_back_with_written_schema(spark, pipe, job_ids):
+    """table() reads a stage this Pipeline wrote under the schema it was
+    written with: no schema-inference job, and the columns, types and
+    order of an inferred read — partition columns last."""
+    for st, part in (("mentions", "label"), ("triples", "pred"),
+                     ("edges", "pred")):
+        before = job_ids()
+        got = pipe.table(st)
+        assert not job_ids() - before, st
+        assert got.schema == spark.read.parquet(pipe.path(st)).schema, st
+        assert got.columns[-1] == part, st
+
+
 def test_catalog_mode_writer_selection(spark, monkeypatch):
     """Catalog (Iceberg) mode routes through writeTo + tableExists instead
     of parquet dirs + _SUCCESS. No Iceberg runtime ships in this container,
