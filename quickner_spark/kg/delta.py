@@ -19,8 +19,7 @@ embarrassingly parallel per document, so the correct operating mode is:
    condition: same bytes ==> same text ==> same mentions/links/triples.
 2. **Doc-local stages run on the changed subset only** and append under
    ``<table>/snap=K`` partitions — the same fused Arrow pass (which also
-   links every span in-row) and windowed triple extractor the full
-   pipeline uses
+   links every span and finds every triple in-row) the full pipeline uses
    (``kg.pipeline.build_kg_pipeline``), so a snapshot-0 ``update()`` is
    row-identical to the batch pipeline (pinned by tests). After snapshot
    0 the pages are cut to the changed urls by a semi-join BEFORE the
@@ -73,15 +72,17 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from quickner_spark.kg.canonicalize import canonicalize_aliases
 from quickner_spark.kg.extract import (extract_annotate_stage,
                                        mentions_from_spans)
-# alias_table_from_gazetteer and link_mentions are no longer called here
-# (update() links in-row), but stay importable from this module: the
-# benchmark's layer ledger wraps these five layer names on kg.delta by
-# name, and a missing one breaks its traced snapshot_update runs.
+# alias_table_from_gazetteer, link_mentions and window_triples are no
+# longer called here (update() links and finds triples in-row), but stay
+# importable from this module: the benchmark's layer ledger wraps these
+# five layer names on kg.delta by name, and a missing one breaks its
+# traced snapshot_update runs.
 from quickner_spark.kg.link import (alias_table_from_gazetteer,  # noqa: F401
                                     link_mentions, linked_from_spans)
 from quickner_spark.kg.pipeline import (_read_text, _write_text,
                                         edges_from_counts, nodes_from_counts)
-from quickner_spark.kg.triples import predicate_window, window_triples
+from quickner_spark.kg.triples import (triples_from_spans,  # noqa: F401
+                                       window_triples)
 from quickner_spark.operators.annotate import normalize_gazetteer
 
 __all__ = ["SnapshotKg", "snapshot_delta"]
@@ -161,7 +162,6 @@ class SnapshotKg:
         self.gaz = normalize_gazetteer(gazetteer,
                                        case_sensitive=case_sensitive)
         self.predicates = tuple(predicates)
-        self.pred_window = predicate_window(self.predicates)
         self.extractor = extractor
 
     # -- layout -----------------------------------------------------------
@@ -270,18 +270,16 @@ class SnapshotKg:
         ext = self._commit(
             extract_annotate_stage(proc, self.gaz,
                                    case_sensitive=self.case_sensitive,
-                                   window=self.pred_window,
-                                   extractor=self.extractor),
+                                   extractor=self.extractor,
+                                   predicates=self.predicates),
             self._part("extract", k))
-        mentions = self._commit(mentions_from_spans(ext),
-                                self._part("mentions", k))
-        # every span was linked in-row by the fused pass
+        self._commit(mentions_from_spans(ext), self._part("mentions", k))
+        # every span was linked, and every triple found, in-row by the
+        # fused pass
         linked = self._commit(linked_from_spans(ext),
                               self._part("linked", k))
-        maximal = mentions.where(F.col("maximal")).drop("maximal")
-        triples = self._commit(
-            window_triples(maximal, self.predicates, id_col="url"),
-            self._part("triples", k))
+        triples = self._commit(triples_from_spans(ext),
+                               self._part("triples", k))
 
         # 3. merge the cumulative aggregate-grain count tables
         lkeys, tkeys = ["surface", "label"], ["subj", "pred", "obj"]

@@ -65,11 +65,11 @@ def extract_annotate_stage(pages: DataFrame,
                            html_col: str = "html", url_col: str = "url",
                            case_sensitive: bool = False,
                            extractor=None,
-                           window: int = 0) -> DataFrame:
+                           predicates: Sequence[str] = ()) -> DataFrame:
     """FUSED extract + annotate: pages(url, html, ...) ->
     (url, text, spans array<struct<start, end, label, surface, maximal,
-    canonical_id, link_label, link_overlap[, nxt]>>) in ONE Arrow-batched
-    Python pass.
+    canonical_id, link_label, link_overlap>>, triples array<struct<subj,
+    pred, obj, subj_start, obj_start>>) in ONE Arrow-batched Python pass.
 
     Rationale (the 100 TB bandwidth argument): run separately, the text
     corpus crosses the JVM<->Python Arrow boundary three times (extract
@@ -95,17 +95,17 @@ def extract_annotate_stage(pages: DataFrame,
     corpus-sized mention×mention anti-join downstream — at 100 TB that
     join simply never exists. Differential-tested against the operator.
 
-    ``window > 0`` additionally emits per span a ``nxt`` column: the
-    ``window`` characters of (matcher-cased) text following the span.
-    Python string slicing is O(window) — fixed-width char array — so
-    this costs nothing here, but it lets the triples stage test its
-    connective predicates as a plain ``startswith`` on a 16-char column
-    INSTEAD of joining the document text back onto every mention and
-    seeking into a ~1 KB string per mention×predicate (a JVM
-    ``substring`` re-scans the UTF-8 bytes up to the offset — measured
-    as the triples stage's dominant cost). Pass
-    ``window = max(len(p) for p in predicates) + 2`` (the two framing
-    spaces; ``kg.triples.predicate_window``).
+    Each document's ``triples`` are found here too, from its maximal
+    spans and the matcher-cased text: a maximal span ending at ``e`` is a
+    subject of predicate ``p`` when the text continues with ``" p "`` at
+    ``e``, and every maximal span starting at ``e + len(p) + 2`` is its
+    object — one triple per (subject span, object span) pair, so one
+    surface under two labels counts twice, exactly as
+    ``kg.triples.window_triples`` over the maximal mentions. A triple
+    never spans documents, so the (doc, offset) join of the relational
+    form becomes a dict lookup per document; ``kg.triples.
+    triples_from_spans`` explodes the column JVM-side. With
+    ``predicates=()`` every array is empty.
 
     Each span is also LINKED in-row (always): ``canonical_id``,
     ``link_label`` and ``link_overlap`` are the winner's fields under
@@ -130,18 +130,20 @@ def extract_annotate_stage(pages: DataFrame,
     bc = pages.sparkSession.sparkContext.broadcast(ents)
     lower = not case_sensitive
     extractor = extractor or extract_text
+    framed = tuple((p, f" {p} ") for p in predicates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matcher = get_matcher(bc.value)
         find = matcher.find_spans
         cands = gazetteer_candidates(bc.value)
         for pdf in batches:
-            texts, spans = [], []
+            texts, spans, triples = [], [], []
             for h in pdf[html_col].values:
                 text = extractor(h)
                 texts.append(text)
                 if text is None:
                     spans.append([])
+                    triples.append([])
                     continue
                 t = text.lower() if lower else text
                 found = find(t)
@@ -157,33 +159,51 @@ def extract_annotate_stage(pages: DataFrame,
                             toks = set((t if lower else t.lower()).split(" "))
                         links[surface] = (link_winner(c, toks) if c
                                           else (None, None, None))
-                    span = (s, e, lab, surface, flags[i], *links[surface])
-                    row.append(span + (t[e:e + window],) if window else span)
+                    row.append((s, e, lab, surface, flags[i],
+                                *links[surface]))
                 spans.append(row)
-            yield pd.DataFrame({url_col: pdf[url_col],
-                                "text": texts, "spans": spans})
+                triples.append(_doc_triples(t, row, framed))
+            yield pd.DataFrame({url_col: pdf[url_col], "text": texts,
+                                "spans": spans, "triples": triples})
 
-    nxt = ", nxt: string" if window else ""
     return pages.select(url_col, html_col).mapInPandas(
         gen,
         f"{url_col} string, text string, "
         "spans array<struct<start: long, end: long, label: string, "
         "surface: string, maximal: boolean, canonical_id: string, "
-        f"link_label: string, link_overlap: int{nxt}>>")
+        "link_label: string, link_overlap: int>>, "
+        "triples array<struct<subj: string, pred: string, obj: string, "
+        "subj_start: long, obj_start: long>>")
+
+
+def _doc_triples(t: str, spans, framed) -> list[tuple]:
+    """One document's (subj, pred, obj, subj_start, obj_start) triples
+    over its maximal ``spans`` (start, end, label, surface, maximal, ...);
+    ``framed`` holds (pred, " pred ") per predicate."""
+    objs: dict[int, list[str]] = {}
+    for sp in spans:
+        if sp[4]:
+            objs.setdefault(sp[0], []).append(sp[3])
+    out = []
+    for s, e, _, subj, maximal, *_ in spans:
+        if not maximal:
+            continue
+        for p, fp in framed:
+            if t.startswith(fp, e):
+                o = e + len(fp)
+                out.extend((subj, p, obj, s, o) for obj in objs.get(o, ()))
+    return out
 
 
 def mentions_from_spans(extract: DataFrame,
                         url_col: str = "url") -> DataFrame:
     """The mentions table of a fused extract: one row per span with
-    (url, start, end, label, surface, maximal[, nxt]) — a JVM-only
-    explode. ``nxt`` is present only when the extract ran with
-    ``window > 0``; the in-row link fields stay behind (the linked table
-    reads them, :func:`kg.link.linked_from_spans`)."""
-    fields = extract.schema["spans"].dataType.elementType.fieldNames()
-    keep = [f for f in ("start", "end", "label", "surface", "maximal", "nxt")
-            if f in fields]
+    (url, start, end, label, surface, maximal) — a JVM-only explode. The
+    in-row link fields stay behind (the linked table reads them,
+    :func:`kg.link.linked_from_spans`)."""
     return (extract.select(url_col, F.explode("spans").alias("__m"))
-            .select(url_col, *[F.col(f"__m.{f}").alias(f) for f in keep]))
+            .select(url_col, "__m.start", "__m.end", "__m.label",
+                    "__m.surface", "__m.maximal"))
 
 
 def _maximal_flags(spans) -> list[bool]:

@@ -15,9 +15,9 @@ the audit trail the north rule requires.
 
 The full pipeline::
 
-    pages --extract+annotate+link--> extract --explode--> mentions / linked
-          --triples--> triples --canonicalize--> alias_map
-          --materialize--> nodes / edges
+    pages --extract+annotate+link+triples--> extract
+          --explode--> mentions / linked / triples
+          --canonicalize--> alias_map --materialize--> nodes / edges
 """
 
 from __future__ import annotations
@@ -297,14 +297,15 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     Iceberg namespace to write catalog tables into instead of parquet
     directories (see ``Pipeline``).
 
-    Extract, annotate AND gazetteer linking run as ONE Arrow-batched
-    Python pass (``extract_annotate_stage``): the extract table carries a
-    ``spans`` array column whose spans already hold their ``maximal``
-    flag, link winner and post-span ``nxt`` window. The mentions and
-    linked stages reduce to JVM-only explodes (``mentions_from_spans``,
-    ``linked_from_spans``) and the triples stage tests its predicates on
-    the mention rows themselves (``window_triples``), so the text corpus
-    crosses the JVM<->Python boundary once and no stage joins documents.
+    Extract, annotate, gazetteer linking AND triple extraction run as ONE
+    Arrow-batched Python pass (``extract_annotate_stage``): the extract
+    table carries a ``spans`` array column whose spans already hold their
+    ``maximal`` flag and link winner, and a ``triples`` array column of
+    the document's triples over its maximal spans. The mentions, linked
+    and triples stages reduce to JVM-only explodes
+    (``mentions_from_spans``, ``linked_from_spans``,
+    ``triples_from_spans``), so the text corpus crosses the JVM<->Python
+    boundary once and no stage joins documents or mentions.
     The relational composition of the same tables (separate annotate,
     ``link_mentions``, ``maximal_mentions``, ``pattern_triples``) is the
     test oracle in ``tests/kg_oracle.py``.
@@ -341,7 +342,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     from quickner_spark.kg.extract import (extract_annotate_stage,
                                            mentions_from_spans)
     from quickner_spark.kg.link import linked_from_spans
-    from quickner_spark.kg.triples import predicate_window, window_triples
+    from quickner_spark.kg.triples import triples_from_spans
     from quickner_spark.operators.annotate import normalize_gazetteer
 
     gaz = normalize_gazetteer(gazetteer, case_sensitive=False)
@@ -360,8 +361,8 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
 
     def s_extract(spark, ctx):
         return extract_annotate_stage(_read_pages(spark), gaz,
-                                      window=predicate_window(predicates),
-                                      extractor=extractor)
+                                      extractor=extractor,
+                                      predicates=predicates)
 
     def s_mentions(spark, ctx):
         return mentions_from_spans(ctx["pipeline"].table("extract"))
@@ -371,15 +372,9 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
         return linked_from_spans(ctx["pipeline"].table("extract"))
 
     def s_triples(spark, ctx):
-        # longest-match resolution first: truncated overlapping mentions
-        # ('acme systems' inside 'acme systems works') must not become
-        # truncated triple arguments. The fused pass flagged them in-row,
-        # so resolution is a scan-level FILTER, and the predicate test
-        # runs on each mention's own `nxt` window — the triples stage
-        # never joins or seeks the document text.
-        m = ctx["pipeline"].table("mentions")
-        return window_triples(m.where(F.col("maximal")).drop("maximal"),
-                              predicates, id_col="url")
+        # the fused pass found each document's triples over its maximal
+        # spans: a narrow explode
+        return triples_from_spans(ctx["pipeline"].table("extract"))
 
     def s_aliases(spark, ctx):
         # the distinct surfaces are gazetteer-bounded: one aggregate job,

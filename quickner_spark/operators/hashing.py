@@ -50,16 +50,6 @@ def portable_hash64_hi(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 17, _HEX60), 16, 10).cast("long")
 
 
-def portable_hash64_sql(expr: str) -> str:
-    """DuckDB twin of :func:`portable_hash64` over a SQL expression."""
-    return f"('0x' || substr(md5({expr}), 1, {_HEX60}))::BIGINT"
-
-
-def portable_hash64_hi_sql(expr: str) -> str:
-    """DuckDB twin of :func:`portable_hash64_hi`."""
-    return f"('0x' || substr(md5({expr}), 17, {_HEX60}))::BIGINT"
-
-
 def _const60(tag: str) -> int:
     """Driver-side md5-derived 60-bit constant; identical to what either
     engine would compute for the same tag string."""
@@ -73,9 +63,3 @@ def minhash_mix_constants(num_hashes: int) -> tuple[list[int], list[int]]:
     a = [1 + _const60(f"mh-a:{i}") % (MIX_P - 1) for i in range(num_hashes)]
     b = [_const60(f"mh-b:{i}") % MIX_P for i in range(num_hashes)]
     return a, b
-
-
-def mix_sql(h_expr: str, a: str, b: str) -> str:
-    """DuckDB affine mix over a 60-bit hash expression. ``a``/``b`` are SQL
-    expressions for the constants (must already be BIGINT-typed)."""
-    return f"(({a}) * (({h_expr}) % {MIX_M}) + ({b})) % {MIX_P}"

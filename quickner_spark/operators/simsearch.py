@@ -183,32 +183,14 @@ def embedding_dup_pairs(df: DataFrame, threshold_pct: int = 95,
         score_pair, "id_a long, id_b long, dot long, n2_a long, n2_b long")
 
 
-def _assign_cells(v: DataFrame, cdf, id_col: str) -> DataFrame:
-    """(id, v) x broadcast centroids -> (id, v, cid) by min L2 distance
-    (deterministic tie-break on cid).
-
-    argmin as ``min_by(cid, struct(dist2, cid))`` — one hash aggregate
-    whose partial (map-side) phase collapses the nlist candidate rows
-    before the exchange, so the shuffle carries ~1 row per vector. The
-    previous window form (partitionBy(id).orderBy(dist2)) shuffled all
-    N x nlist rows and sorted them."""
-    dist2 = F.aggregate(F.zip_with("v", "c", lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0), lambda a, b: a + b)
-    return (v.crossJoin(cdf)
-            .select(id_col, "v", "cid", dist2.alias("dist2"))
-            .groupBy(id_col)
-            .agg(F.first("v").alias("v"),  # constant within the group
-                 F.min_by("cid", F.struct(F.col("dist2"), F.col("cid")))
-                 .alias("cid")))
-
-
 def _assign_cells_int(q: DataFrame, cdf, id_col: str, res: int) -> DataFrame:
     """Integer-exact cell assignment for the portable IVF mode: vectors
     are scale-quantized int64, centroids live at ``res``× that scale, so
     ``dist2 = Σ (res·x_d − c_d)²`` is exact int64 arithmetic — identical
-    on any engine, no float-summation order anywhere. Same min_by shape
-    as :func:`_assign_cells` (map-side partial collapses the nlist
-    candidates before the exchange)."""
+    on any engine, no float-summation order anywhere. argmin as
+    ``min_by(cid, struct(dist2, cid))`` (deterministic tie-break on cid):
+    one hash aggregate whose map-side partial collapses the nlist
+    candidates before the exchange."""
     dist2 = F.aggregate(
         F.zip_with("q", "c", lambda x, y: (x * res - y) * (x * res - y)),
         F.lit(0).cast("long"), lambda a, b: a + b)

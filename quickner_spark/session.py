@@ -52,5 +52,8 @@ def get_spark(app_name: str = "quickner-spark", cores: int | None = None,
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # off: every DataFrame/Column call would otherwise walk the Python
+        # stack for a call-site origin (and retry `import ipykernel`)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -26,13 +26,6 @@ __all__ = [
     "infer_gazetteer",
 ]
 
-DOC_SCHEMA = StructType([
-    StructField("id", StringType(), True),
-    StructField("text", StringType(), True),
-    StructField("label", ArrayType(ArrayType(StringType())), True),
-])
-
-
 def doc_id_col(text_col="text"):
     """Deterministic document id from text: lowercase hex of xxhash64.
     (Divergence from reference DefaultHasher — documented, never asserted.)"""

@@ -4,21 +4,19 @@ A continuously-crawled corpus should not rebuild the KG from scratch per
 crawl batch. ``incremental_kg`` wires a streaming pages source into the
 batch pipeline's fused pass via ``foreachBatch``: each micro-batch runs
 :func:`kg_batch_increment` — ONE Arrow-batched Python pass that extracts,
-annotates and flags maximal spans (``kg.extract.extract_annotate_stage``),
-then JVM-only explodes for the mentions and the windowed triple test
-(``kg.triples.window_triples``) — and appends its mentions and triples to
-the target tables. Because every stage is a deterministic function of the
+annotates, flags maximal spans and finds each document's triples
+(``kg.extract.extract_annotate_stage``), then JVM-only explodes for the
+mentions and the triples — and appends its mentions and triples to the
+target tables. Because every stage is a deterministic function of the
 page row alone (no cross-document state — the per-document invariant the
 batch pipeline already relies on for resumability), streaming output over
 N batches is row-identical to one batch run over the union;
 ``tests/test_streaming_kg.py`` asserts exactly that, and checks both
 against the relational oracle chain in ``tests/kg_oracle.py``.
 
-foreachBatch (not a pure streaming DAG) is the right tool here: triple
-extraction self-joins mentions within a micro-batch, which a continuous
-DAG disallows but per-batch batch-semantics permit — and each batch's
-join stays within the batch because triples never span documents, let
-alone crawl batches.
+foreachBatch (not a pure streaming DAG) is the right tool here: one
+micro-batch feeds two output tables from one Python pass, and each
+output needs the idempotent per-batch writer below.
 
 foreachBatch itself is only at-least-once (a failure mid-process() replays
 the batch), so end-to-end exactly-once requires the WRITER to be
@@ -44,7 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from quickner_spark.kg.extract import (extract_annotate_stage,
                                        mentions_from_spans)
-from quickner_spark.kg.triples import predicate_window, window_triples
+from quickner_spark.kg.triples import triples_from_spans
 from quickner_spark.operators.annotate import normalize_gazetteer
 
 __all__ = ["kg_batch_increment", "incremental_kg", "default_batch_writer",
@@ -75,16 +73,12 @@ def kg_batch_increment(pages: DataFrame, entities: Sequence[tuple[str, str]],
     fused extract is local-checkpointed lazily: the first action over
     either output runs the Python pass once, and the other output reads
     the checkpoint instead of re-running it."""
-    predicates = tuple(predicates)
     gaz = normalize_gazetteer(entities, case_sensitive=case_sensitive)
     ext = extract_annotate_stage(
         pages, gaz, case_sensitive=case_sensitive,
-        window=predicate_window(predicates)).localCheckpoint(eager=False)
-    spans = mentions_from_spans(ext)
-    mentions = spans.select("url", "start", "end", "label", "surface")
-    triples = window_triples(spans.where(F.col("maximal")), predicates,
-                             id_col="url")
-    return mentions, triples
+        predicates=predicates).localCheckpoint(eager=False)
+    mentions = mentions_from_spans(ext).drop("maximal")
+    return mentions, triples_from_spans(ext)
 
 
 def host_edges_view(spark, path: str) -> DataFrame:

@@ -1,8 +1,8 @@
 """The relational KG composition: the test oracle for the fused KG build.
 
 Production builds the doc-local KG tables from one Arrow-batched pass
-(``kg.extract.extract_annotate_stage``: extract, annotate, maximal flags
-and the in-row link) plus JVM-only explodes and the windowed triple test.
+(``kg.extract.extract_annotate_stage``: extract, annotate, maximal flags,
+the in-row link and the in-row triples) plus JVM-only explodes.
 This is the composition of public operators it replaced — a separate
 extract pass, ``annotate_mentions``, ``link_mentions`` over
 ``alias_table_from_gazetteer``, the ``maximal_mentions`` anti-join and the
@@ -12,7 +12,7 @@ compare the two on the same pages.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from quickner_spark.kg.extract import extract_stage
 from quickner_spark.kg.link import alias_table_from_gazetteer, link_mentions
@@ -39,14 +39,29 @@ def oracle_increment(pages: DataFrame, entities, predicates,
     return ext, mentions, triples
 
 
+def attach_nxt(mentions: DataFrame, documents: DataFrame, predicates,
+               lower_text: bool = True) -> DataFrame:
+    """url-keyed ``mentions`` plus ``nxt``, the post-span text window
+    ``kg.triples.window_triples`` reads, sliced from the documents' joined
+    ``text`` as q35 does: the longest predicate plus its two framing
+    spaces."""
+    text = F.lower("text") if lower_text else F.col("text")
+    width = max(map(len, predicates), default=0) + 2
+    return (mentions
+            .join(documents.select("url", text.alias("__t")), "url")
+            .withColumn("nxt", F.col("__t").substr(F.col("end") + 1,
+                                                   F.lit(width)))
+            .drop("__t"))
+
+
 def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
                           predicates, extractor=None) -> Pipeline:
     """``build_kg_pipeline`` with its four doc-local stages (extract,
     mentions, linked, triples) swapped for the relational chain. Stage
     names and layouts are production's, and so are the ``aliases``,
     ``nodes`` and ``edges`` stages, so a difference anywhere comes from
-    the doc-local stages. The extract table lacks the fused ``spans``
-    column, the mentions table the fused ``maximal``/``nxt`` columns."""
+    the doc-local stages. The extract table lacks the fused ``spans`` and
+    ``triples`` columns, the mentions table the fused ``maximal`` column."""
     gaz = normalize_gazetteer(gazetteer, case_sensitive=False)
     predicates = tuple(predicates)
 

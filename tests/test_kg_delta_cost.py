@@ -19,9 +19,9 @@ from quickner_spark.kg.delta import SnapshotKg, snapshot_delta
 from tests.test_kg_delta import (  # noqa: F401
     N_DOCS, N_NEW, SEED, gaz, snapshots, store)
 
-# measured: 31 jobs at local[4] with 4 shuffle partitions; the slack
+# measured: 29 jobs at local[4] with 4 shuffle partitions; the slack
 # absorbs adaptive-execution plan changes, not a new inference or count
-JOB_BUDGET = 34
+JOB_BUDGET = 32
 
 
 def _rows(spark, kg, table, k):

@@ -383,16 +383,19 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
           .select(*cols5).collect()}
     assert flagged == op
 
-    # the nxt-window predicate test (no document join) must produce the
-    # same triples as the generic text-joining operator
+    # both relational forms over the maximal mentions — the text-joining
+    # operator and the window rule over a relationally attached nxt —
+    # equal the fused in-row triples table, as multisets
     from quickner_spark.kg.triples import pattern_triples, window_triples
-    mx = pipe.table("mentions").where("maximal")
-    wt = {tuple(r) for r in
-          window_triples(mx, corpus.PREDICATES, id_col="url").collect()}
-    pt = {tuple(r) for r in
-          pattern_triples(mx.drop("maximal", "nxt"), pipe.table("extract"),
-                          corpus.PREDICATES, id_col="url").collect()}
-    assert wt == pt and len(wt) > 0
+    from tests.kg_oracle import attach_nxt
+    mx = pipe.table("mentions").where("maximal").drop("maximal")
+    ext = pipe.table("extract")
+    tcols = ["url", "subj", "pred", "obj", "subj_start", "obj_start"]
+    pt = bag(pattern_triples(mx, ext, corpus.PREDICATES, id_col="url"),
+             tcols)
+    wt = bag(window_triples(attach_nxt(mx, ext, corpus.PREDICATES),
+                            corpus.PREDICATES, id_col="url"), tcols)
+    assert pt == wt == bag(pipe.table("triples"), tcols) and pt
 
 
 def _inrow_vs_relational(spark, gaz, texts, case_sensitive=False):
@@ -460,6 +463,76 @@ def test_inrow_link_cases(spark):
     assert won(inrow) == {("u0", 1): ("AB_CD", "Z", 0)}
 
 
+def _inrow_vs_window(spark, gaz, texts, predicates, case_sensitive=False):
+    """Triples of the fused extract (``triples_from_spans``) and of
+    ``window_triples`` over the ``maximal_mentions`` of the same spans,
+    ``nxt`` attached relationally as q35 does: both as Counters of full
+    provenance rows, after asserting equal column names and types."""
+    from collections import Counter
+
+    from quickner_spark.kg.extract import (extract_annotate_stage,
+                                           mentions_from_spans)
+    from quickner_spark.kg.triples import triples_from_spans, window_triples
+    from quickner_spark.operators.annotate import (maximal_mentions,
+                                                   normalize_gazetteer)
+    from tests.kg_oracle import attach_nxt
+
+    gaz = normalize_gazetteer(gaz, case_sensitive=case_sensitive)
+    pages = spark.createDataFrame(
+        [(f"u{i}", corpus.page_html(t, f"u{i}")) for i, t in enumerate(texts)],
+        "url string, html binary")
+    ext = extract_annotate_stage(pages, gaz, case_sensitive=case_sensitive,
+                                 predicates=predicates).localCheckpoint()
+    fused = triples_from_spans(ext)
+    mx = maximal_mentions(mentions_from_spans(ext).drop("maximal"),
+                          id_col="url")
+    rel = window_triples(attach_nxt(mx, ext, predicates,
+                                    lower_text=not case_sensitive),
+                         predicates, id_col="url")
+    assert [(f.name, f.dataType) for f in fused.schema] == \
+        [(f.name, f.dataType) for f in rel.schema]
+    return (Counter(tuple(r) for r in fused.collect()),
+            Counter(tuple(r) for r in rel.collect()))
+
+
+def test_inrow_triples_cases(spark):
+    """In-row triples edge cases, each against window_triples over the
+    maximal mentions: one surface under two labels (one triple per
+    subject row and object row), non-maximal subject and object, chained
+    predicates, a predicate or object at the end of the text,
+    case-sensitive matching and the empty predicate tuple."""
+    gaz = [("acme", "ORG"), ("acme", "PROD"), ("beta", "ORG"),
+           ("gamma", "ORG")]
+    texts = ["acme owns beta buys gamma",  # two labels; chained; obj at end
+             "beta owns acme .",           # object under two labels
+             "gamma owns",                 # predicate at the end
+             "gamma owns  beta"]           # object one char too far
+    fused, rel = _inrow_vs_window(spark, gaz, texts, ("owns", "buys"))
+    assert fused == rel
+    assert fused == {("u0", "acme", "owns", "beta", 0, 10): 2,
+                     ("u0", "beta", "buys", "gamma", 10, 20): 1,
+                     ("u1", "beta", "owns", "acme", 0, 10): 2}
+
+    # the empty predicate tuple: typed, empty on both sides
+    fused, rel = _inrow_vs_window(spark, gaz, texts, ())
+    assert fused == rel == {}
+
+    # 'acme' and 'beta' are strictly inside the maximal 'acme owns beta':
+    # neither is a subject or an object
+    fused, rel = _inrow_vs_window(
+        spark, [("acme owns beta", "X"), ("acme", "ORG"), ("beta", "ORG"),
+                ("delta", "ORG")],
+        ["acme owns beta owns delta"], ("owns",))
+    assert fused == rel == {("u0", "acme owns beta", "owns", "delta", 0, 20): 1}
+
+    # case-sensitive: names and predicates match the raw text's case
+    fused, rel = _inrow_vs_window(
+        spark, [("Acme", "ORG"), ("Beta", "ORG"), ("beta", "ORG")],
+        ["Acme owns Beta", "Acme Owns Beta", "acme owns beta"], ("owns",),
+        case_sensitive=True)
+    assert fused == rel == {("u0", "Acme", "owns", "Beta", 0, 10): 1}
+
+
 def test_zero_hit_corpus_commits_readable_stages(spark, pipe, tmp_path):
     """Pages with no gazetteer hit: every stage still commits a readable
     table with the same columns and types as a non-empty build."""
@@ -520,10 +593,9 @@ def test_maximal_flags_property():
 
 
 def test_empty_predicates_fused_pipeline(spark, pages_path, tmp_path):
-    """build_kg_pipeline(..., predicates=()) must run end to
-    end: at window=0 the fused extract emits no nxt field, the mentions
-    stage must not select it, and the triples stage short-circuits to a
-    typed empty result (no zero-element struct array reaches analysis)."""
+    """build_kg_pipeline(..., predicates=()) must run end to end: the
+    fused extract emits empty triples arrays, and the triples stage still
+    commits a readable, typed, empty table."""
     gaz = corpus.synth_gazetteer(GAZ_SIZE, SEED)
     p = build_kg_pipeline(spark, str(tmp_path / "nopred"), pages_path, gaz,
                           predicates=())

@@ -256,6 +256,27 @@ def test_gazetteer_link_plans_are_local_and_narrow(spark, tmp_path):
     assert lk.count() > 0
 
 
+def test_fused_triples_plan_is_local_and_narrow(spark, tmp_path):
+    """The fused build's triples stage is a narrow explode of the
+    committed extract: no exchange and no sort-merge join."""
+    from quickner_spark.kg import corpus
+    from quickner_spark.kg.extract import extract_annotate_stage
+    from quickner_spark.kg.triples import triples_from_spans
+    from quickner_spark.operators.annotate import normalize_gazetteer
+
+    gaz = normalize_gazetteer(corpus.synth_gazetteer(50, 1),
+                              case_sensitive=False)
+    ext_p = str(tmp_path / "ext")
+    pages = corpus.synth_pages(spark, 30, seed=1, gaz_size=50, partitions=2)
+    extract_annotate_stage(pages, gaz, predicates=corpus.PREDICATES
+                           ).write.parquet(ext_p)
+    tr = triples_from_spans(spark.read.parquet(ext_p))
+    plan = _executed(tr)
+    for op in ("Exchange", "SortMergeJoin"):
+        assert op not in plan, plan
+    assert tr.count() > 0
+
+
 def test_kg_edges_plan_broadcasts_maps(spark):
     df = E.q28_kg_edges(spark, SF)
     plan = _executed(df)
