@@ -17,14 +17,16 @@ embarrassingly parallel per document, so the correct operating mode is:
    pipeline is built on — byte-identical extraction per url
    (BASELINE.json input_hint) — is what makes the digest a sound skip
    condition: same bytes ==> same text ==> same mentions/links/triples.
-2. **Doc-local stages run on the changed subset only** and append under
-   ``<table>/snap=K`` partitions — the same fused Arrow pass (which also
-   links every span and finds every triple in-row) the full pipeline uses
+2. **Doc-local stages run on the changed subset only** and append
+   ``extract``, ``mentions`` and ``triples`` under ``<table>/snap=K``
+   partitions — the same fused Arrow pass (which also links every span
+   and finds every triple in-row) the full pipeline uses
    (``kg.pipeline.build_kg_pipeline``), so a snapshot-0 ``update()`` is
-   row-identical to the batch pipeline (pinned by tests). After snapshot
-   0 the pages are cut to the changed urls by a semi-join BEFORE the
-   in-snapshot revisit dedup, so only changed pages' html is shuffled a
-   second time.
+   row-identical to the batch pipeline (pinned by tests). The linked
+   spans are not committed: they are exploded from ``extract``'s
+   ``spans`` wherever they are read. After snapshot 0 the pages are cut
+   to the changed urls by a semi-join BEFORE the in-snapshot revisit
+   dedup, so only changed pages' html is shuffled a second time.
 3. **Aggregates merge, never rebuild.** nodes/edges derive from two
    cumulative count tables — ``linked_stats(surface, label, n)`` and
    ``triple_stats(subj, pred, obj, n)``, both bounded by the gazetteer /
@@ -33,25 +35,31 @@ embarrassingly parallel per document, so the correct operating mode is:
    aggregation: the old counts, the new rows at +1 and the replaced rows
    at -1 are unioned and summed by a single groupBy (one exchange). The
    subtraction lists only the replaced urls' ``snap=<old>`` partitions
-   and keeps their rows by a (url, snap) semi-join, touching candidates
-   only. Alias canonicalization reruns on the driver
-   over the (tiny, gazetteer-bounded) surviving surface set — and only
-   when that set differs from the previous snapshot's, a driver-side set
-   comparison. Every table the update reads back is read under its known
-   schema, so no read launches a schema-inference job.
+   of ``extract`` (for the linked spans) and ``triples`` and keeps their
+   rows by a (url, snap) semi-join, touching candidates only. The
+   triples are subtracted from ``triples``, not ``extract``: extract
+   partitions written by older versions have no ``triples`` column.
+   Alias canonicalization reruns on the driver over the (tiny,
+   gazetteer-bounded) surviving surface set — and only when that set
+   differs from the previous snapshot's, a driver-side set comparison.
+   Every table the update reads back is read under its known schema, so
+   no read launches a schema-inference job.
 4. **Commit = one pointer write.** Every versioned artifact for snapshot
-   K (manifest, stats, aliases, nodes, edges) is written first;
-   ``_CURRENT`` is written last. A crash mid-update leaves orphan
+   K (manifest, stats, aliases, nodes, edges) is written first, then
+   ``_CURRENT``. A crash mid-update leaves orphan
    ``v{K}`` / ``snap=K`` files that the retry overwrites — readers never
-   see a half-committed snapshot. (With an Iceberg catalog the same
-   design maps onto MERGE + snapshot commits; this parquet layout keeps
-   the identical semantics runnable without a catalog jar.)
+   see a half-committed snapshot. The ``_updates`` lineage row is
+   appended after the pointer flips, so a retried update logs its
+   snapshot once (a crash between the two loses the row, never
+   duplicates it). (With an Iceberg catalog the same design maps onto
+   MERGE + snapshot commits; this parquet layout keeps the identical
+   semantics runnable without a catalog jar.)
 
-Current-view reads (``current_mentions()`` / ``current_triples()``) join
-the per-snapshot partitions with the manifest on ``(url, snap)`` — a
-doc-keyed equi-join on the partition column, eligible for dynamic
-partition pruning; ``compact()`` folds history back into a single
-snapshot when the join tax outgrows the rewrite cost.
+Current-view reads (``current_mentions()`` / ``current_triples()`` /
+``current_linked()``) join the per-snapshot partitions with the manifest
+on ``(url, snap)`` — a doc-keyed equi-join on the partition column,
+eligible for dynamic partition pruning; ``compact()`` folds history back
+into a single snapshot when the join tax outgrows the rewrite cost.
 
 Beyond the reference surface (quickner rebuilds its document store per
 run — pyquickner.rs has no incremental path); the operating mode is the
@@ -147,11 +155,11 @@ class SnapshotKg:
 
     Single-writer contract: one ``update``/``compact`` at a time per
     ``base_dir`` (crawl snapshots are inherently sequential). A crashed
-    writer is safe — the ``_CURRENT`` pointer is written last, so a
-    retry overwrites the orphan ``v{K}``/``snap=K`` files; two LIVE
-    writers racing the same snapshot number are not coordinated (use an
-    external scheduler lock, or Iceberg catalog mode where commits are
-    atomic)."""
+    writer is safe — the ``_CURRENT`` pointer is written after every
+    table, so a retry overwrites the orphan ``v{K}``/``snap=K`` files;
+    two LIVE writers racing the same snapshot number are not coordinated
+    (use an external scheduler lock, or Iceberg catalog mode where
+    commits are atomic)."""
 
     def __init__(self, spark: SparkSession, base_dir: str,
                  gazetteer, predicates=(), extractor=None,
@@ -275,9 +283,9 @@ class SnapshotKg:
             self._part("extract", k))
         self._commit(mentions_from_spans(ext), self._part("mentions", k))
         # every span was linked, and every triple found, in-row by the
-        # fused pass
-        linked = self._commit(linked_from_spans(ext),
-                              self._part("linked", k))
+        # fused pass; the linked spans are not committed, and the triples
+        # write stays the update's last doc-local write
+        linked = linked_from_spans(ext)
         triples = self._commit(triples_from_spans(ext),
                                self._part("triples", k))
 
@@ -295,12 +303,13 @@ class SnapshotKg:
                 [r[0] for r in replaced.select("url").collect()])
                 if 0 < counts["replaced"] <= self.MINUS_PUSHDOWN_MAX
                 else None)
+            old_ext = self._minus("extract", ext.schema, replaced, snaps,
+                                  url_in)
             lstats = self._merge(
                 linked, lkeys,
                 spark.read.schema(_LINKED_STATS).parquet(
                     self._v("linked_stats", prev)),
-                self._minus("linked", linked.schema, replaced, snaps,
-                            url_in))
+                None if old_ext is None else linked_from_spans(old_ext))
             tstats = self._merge(
                 triples, tkeys,
                 spark.read.schema(_TRIPLE_STATS).parquet(
@@ -342,11 +351,12 @@ class SnapshotKg:
             .unionByName(fresh))
         manifest.write.mode("overwrite").parquet(self._v("manifest", k))
 
-        # 6. commit
-        self._log_update(k, n_in, n_changed, committed=True,
-                         wall_ms=int((time.time() - t0) * 1000))
+        # 6. commit, then log: a retry after a failed pointer write
+        # logs the snapshot once
         _write_text(self.spark, f"{self.base}/{_CURRENT}",
                     json.dumps({"snap": k}))
+        self._log_update(k, n_in, n_changed, committed=True,
+                         wall_ms=int((time.time() - t0) * 1000))
         return {"snap": k, "pages_in": n_in, "changed": n_changed,
                 "committed": True, "aliases_reused": aliases_reused}
 
@@ -479,7 +489,7 @@ class SnapshotKg:
         return self._current_rows("triples", snap)
 
     def current_linked(self, snap: int | None = None) -> DataFrame:
-        return self._current_rows("linked", snap)
+        return linked_from_spans(self._current_rows("extract", snap))
 
     # -- maintenance ------------------------------------------------------
     def compact(self) -> int:
@@ -488,16 +498,17 @@ class SnapshotKg:
         at snap=K and the current-view join prunes to one partition.
         Amortized full rewrite of the doc-local tables — run it when the
         snapshot count (not the data size) starts to hurt the view join.
-        The per-update ``changes`` classifications are dropped. Returns
-        the snapshot number everything now lives under."""
+        The per-update ``changes`` classifications are dropped, and so is
+        the ``linked`` table of a store written when the linked spans
+        were still committed (no read uses it). Returns the snapshot
+        number everything now lives under."""
         k = self.snap()
         if k is None:
             raise ValueError(f"no committed snapshot under {self.base}")
         from quickner_spark.kg.pipeline import _hadoop_path
 
         cur_ptr = self.manifest().select("url", "snap")
-        for table in ("mentions", "linked", "triples", "extract",
-                      "digests"):
+        for table in ("mentions", "triples", "extract", "digests"):
             rows = self.spark.read.parquet(f"{self.base}/{table}")
             cur = rows.join(cur_ptr, ["url", "snap"]).drop("snap")
             # two-step: materialize the view to a scratch dir BEFORE
@@ -509,7 +520,9 @@ class SnapshotKg:
             (self.spark.read.parquet(tmp)
              .write.mode("overwrite").parquet(self._part(table, k)))
             fs.delete(_hadoop_path(self.spark, tmp)[1], True)
-        fs.delete(_hadoop_path(self.spark, f"{self.base}/changes")[1], True)
+        for gone in ("changes", "linked"):
+            fs.delete(_hadoop_path(self.spark, f"{self.base}/{gone}")[1],
+                      True)
         # repoint every manifest row at snap=K — same two-step (the new
         # manifest reads the file it replaces)
         tmp = f"{self.base}/manifest__compact"

@@ -16,8 +16,9 @@ the audit trail the north rule requires.
 The full pipeline::
 
     pages --extract+annotate+link+triples--> extract
-          --explode--> mentions / linked / triples
-          --canonicalize--> alias_map --materialize--> nodes / edges
+          --explode--> mentions / triples
+    extract --explode linked spans--> canonicalize --> alias_map
+            --materialize--> nodes / edges
 """
 
 from __future__ import annotations
@@ -260,9 +261,9 @@ def nodes_from_counts(surface_counts: DataFrame,
     (NOT the link-stage candidate id) with its min label, sorted alias
     list and total mention count. The counts are gazetteer-bounded, so
     the join and the canonical regroup run on hundreds of rows — the
-    batch pipeline passes a map-side pre-aggregate of ``linked`` (7x over
-    join-then-aggregate at 114.7M linked rows), ``SnapshotKg`` its merged
-    cumulative stats."""
+    batch pipeline passes a map-side pre-aggregate of the linked spans
+    (7x over join-then-aggregate at 114.7M linked rows), ``SnapshotKg``
+    its merged cumulative stats."""
     return (surface_counts
             .join(amap, surface_counts["surface"] == amap["alias"])
             .groupBy("canonical_id")
@@ -293,7 +294,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                       link_graph: bool = False,
                       host_rank: bool = False,
                       host_rank_iters: int = 5) -> Pipeline:
-    """The standard 7-stage KG build over a pages table. ``catalog``: an
+    """The standard 6-stage KG build over a pages table. ``catalog``: an
     Iceberg namespace to write catalog tables into instead of parquet
     directories (see ``Pipeline``).
 
@@ -301,10 +302,12 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     Arrow-batched Python pass (``extract_annotate_stage``): the extract
     table carries a ``spans`` array column whose spans already hold their
     ``maximal`` flag and link winner, and a ``triples`` array column of
-    the document's triples over its maximal spans. The mentions, linked
-    and triples stages reduce to JVM-only explodes
-    (``mentions_from_spans``, ``linked_from_spans``,
-    ``triples_from_spans``), so the text corpus crosses the JVM<->Python
+    the document's triples over its maximal spans. The mentions and
+    triples stages reduce to JVM-only explodes (``mentions_from_spans``,
+    ``triples_from_spans``), and the linked spans are never committed:
+    the ``aliases`` and ``nodes`` stages aggregate ``linked_from_spans``
+    over the extract table, whose scan reads only its ``url`` and
+    ``spans`` columns. So the text corpus crosses the JVM<->Python
     boundary once and no stage joins documents or mentions.
     The relational composition of the same tables (separate annotate,
     ``link_mentions``, ``maximal_mentions``, ``pattern_triples``) is the
@@ -367,10 +370,6 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     def s_mentions(spark, ctx):
         return mentions_from_spans(ctx["pipeline"].table("extract"))
 
-    def s_linked(spark, ctx):
-        # the fused pass linked every span in-row: a narrow explode
-        return linked_from_spans(ctx["pipeline"].table("extract"))
-
     def s_triples(spark, ctx):
         # the fused pass found each document's triples over its maximal
         # spans: a narrow explode
@@ -379,15 +378,14 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     def s_aliases(spark, ctx):
         # the distinct surfaces are gazetteer-bounded: one aggregate job,
         # then driver-side clustering into a local relation
-        p = ctx["pipeline"]
-        aliases = (p.table("linked").select(F.col("surface").alias("alias"))
-                   .distinct())
+        aliases = (linked_from_spans(ctx["pipeline"].table("extract"))
+                   .select(F.col("surface").alias("alias")).distinct())
         return canonicalize_aliases(aliases)
 
     def s_nodes(spark, ctx):
         p = ctx["pipeline"]
-        counts = (p.table("linked").groupBy("surface", "label")
-                  .agg(F.count("*").alias("n")))
+        counts = (linked_from_spans(p.table("extract"))
+                  .groupBy("surface", "label").agg(F.count("*").alias("n")))
         return nodes_from_counts(counts, p.table("aliases"))
 
     def s_edges(spark, ctx):
@@ -412,12 +410,11 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                 .select(F.col("node").alias("host"), "rank"))
 
     # partition layout: mention/triple tables by label/pred (low-cardinality,
-    # prunable); with an Iceberg catalog these become
-    # writeTo(...).partitionedBy(bucket(N, "url"), "pred").
+    # prunable); with an Iceberg catalog the same identity columns become
+    # writeTo(...).partitionedBy(...).
     stages = [
         Stage("extract", s_extract),
         Stage("mentions", s_mentions, partition_by=("label",)),
-        Stage("linked", s_linked),
         Stage("triples", s_triples, partition_by=("pred",)),
         Stage("aliases", s_aliases),
         Stage("nodes", s_nodes),

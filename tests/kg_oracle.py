@@ -14,9 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from quickner_spark.kg.canonicalize import canonicalize_aliases
 from quickner_spark.kg.extract import extract_stage
 from quickner_spark.kg.link import alias_table_from_gazetteer, link_mentions
-from quickner_spark.kg.pipeline import Pipeline, build_kg_pipeline
+from quickner_spark.kg.pipeline import (Pipeline, Stage, build_kg_pipeline,
+                                        nodes_from_counts)
 from quickner_spark.kg.triples import pattern_triples
 from quickner_spark.operators.annotate import (annotate_mentions,
                                                maximal_mentions,
@@ -56,12 +58,15 @@ def attach_nxt(mentions: DataFrame, documents: DataFrame, predicates,
 
 def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
                           predicates, extractor=None) -> Pipeline:
-    """``build_kg_pipeline`` with its four doc-local stages (extract,
-    mentions, linked, triples) swapped for the relational chain. Stage
-    names and layouts are production's, and so are the ``aliases``,
-    ``nodes`` and ``edges`` stages, so a difference anywhere comes from
-    the doc-local stages. The extract table lacks the fused ``spans`` and
-    ``triples`` columns, the mentions table the fused ``maximal`` column."""
+    """``build_kg_pipeline`` with its three doc-local stages (extract,
+    mentions, triples) swapped for the relational chain, plus a committed
+    relational ``linked`` stage. Stage names and layouts are
+    production's, and so is the ``edges`` stage. The extract table lacks
+    the fused ``spans`` and ``triples`` columns, the mentions table the
+    fused ``maximal`` column; so ``aliases`` and ``nodes``, which
+    production aggregates from the extract's linked spans, aggregate the
+    ``linked`` stage here, and a difference anywhere comes from the
+    doc-local stages."""
     gaz = normalize_gazetteer(gazetteer, case_sensitive=False)
     predicates = tuple(predicates)
 
@@ -85,10 +90,23 @@ def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
             maximal_mentions(p.table("mentions"), id_col="url"),
             p.table("extract"), predicates, id_col="url")
 
+    def s_aliases(spark, ctx):
+        return canonicalize_aliases(ctx["pipeline"].table("linked")
+                                    .selectExpr("surface AS alias")
+                                    .distinct())
+
+    def s_nodes(spark, ctx):
+        p = ctx["pipeline"]
+        counts = (p.table("linked").groupBy("surface", "label")
+                  .agg(F.count("*").alias("n")))
+        return nodes_from_counts(counts, p.table("aliases"))
+
     oracle = {"extract": s_extract, "mentions": s_mentions,
-              "linked": s_linked, "triples": s_triples}
+              "triples": s_triples, "aliases": s_aliases, "nodes": s_nodes}
     pipe = build_kg_pipeline(spark, base_dir, pages_path, gazetteer,
                              predicates, extractor=extractor)
     for stage in pipe.stages:
         stage.fn = oracle.get(stage.name, stage.fn)
+    at = [s.name for s in pipe.stages].index("mentions") + 1
+    pipe.stages.insert(at, Stage("linked", s_linked))
     return pipe

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
@@ -19,9 +20,9 @@ from quickner_spark.kg.delta import SnapshotKg, snapshot_delta
 from tests.test_kg_delta import (  # noqa: F401
     N_DOCS, N_NEW, SEED, gaz, snapshots, store)
 
-# measured: 29 jobs at local[4] with 4 shuffle partitions; the slack
+# measured: 28 jobs at local[4] with 4 shuffle partitions; the slack
 # absorbs adaptive-execution plan changes, not a new inference or count
-JOB_BUDGET = 32
+JOB_BUDGET = 31
 
 
 def _rows(spark, kg, table, k):
@@ -88,6 +89,37 @@ def test_null_html_page_counts(spark, tmp_path):
     _assert_counts_match_tables(spark, kg, s1)
     assert {r["canonical_id"]: r["n_mentions"]
             for r in kg.nodes().collect()} == {"acme": 3}
+
+
+def test_retried_update_logs_its_snapshot_once(spark, tmp_path,
+                                               monkeypatch):
+    """An update that fails at the ``_CURRENT`` pointer write and is
+    retried leaves one committed ``_updates`` row for its snapshot."""
+    from quickner_spark.kg import delta
+
+    def pages(rows):
+        return spark.createDataFrame(
+            [(u, corpus.page_html(t, u), t, "en") for u, t in rows],
+            "url string, html binary, text string, lang string")
+
+    kg = SnapshotKg(spark, str(tmp_path / "kg"), [("acme", "ORG")], ())
+    kg.update(pages([("u1", "acme .")]))
+    write_text, failed = delta._write_text, []
+
+    def flaky(spark_, path, text):
+        if path.endswith(f"/{delta._CURRENT}") and not failed:
+            failed.append(path)
+            raise OSError("pointer write failed")
+        return write_text(spark_, path, text)
+
+    monkeypatch.setattr(delta, "_write_text", flaky)
+    batch = pages([("u1", "acme acme ."), ("u2", "acme again .")])
+    with pytest.raises(OSError, match="pointer write failed"):
+        kg.update(batch)
+    assert failed and kg.snap() == 0
+    s = kg.update(batch)
+    assert (s["snap"], s["committed"]) == (1, True)
+    assert [r for r in _logged(kg, 1) if r[2]] == [(2, 2, True)]
 
 
 def test_one_page_update_job_budget(spark, store, gaz, snapshots,

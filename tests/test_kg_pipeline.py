@@ -5,6 +5,7 @@ ground truth, resumability, and per-partition metrics."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
 from quickner_spark.kg.extract import extract_stage
+from quickner_spark.kg.link import linked_from_spans
 from quickner_spark.kg.pipeline import build_kg_pipeline
 
 N_DOCS = 300
@@ -47,9 +49,12 @@ def test_extraction_byte_identical(spark, pages_path):
 
 
 def test_pipeline_all_stages_ran(pipe):
-    for stage in ("extract", "mentions", "linked", "triples", "aliases",
-                  "nodes", "edges"):
+    for stage in ("extract", "mentions", "triples", "aliases", "nodes",
+                  "edges"):
         assert pipe.table(stage).count() > 0
+    # the linked spans are read from extract, never committed
+    assert linked_from_spans(pipe.table("extract")).count() > 0
+    assert not os.path.exists(pipe.path("linked"))
 
 
 def test_triple_precision_recall(spark, pipe):
@@ -67,7 +72,7 @@ def test_triple_precision_recall(spark, pipe):
 
 
 def test_linking_resolves_canonicals(pipe):
-    linked = pipe.table("linked")
+    linked = linked_from_spans(pipe.table("extract"))
     assert linked.where(F.col("canonical_id").isNull()).count() == 0
     # canonical ids are underscore-joined gazetteer names
     row = linked.first()
@@ -361,15 +366,16 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
     # score compared as the exact double
     link_cols = ["url", "start", "end", "surface", "canonical_id", "label",
                  "score"]
-    assert pipe.table("linked").columns == link_cols
-    fused_l = bag(pipe.table("linked"), link_cols)
+    fused_linked = linked_from_spans(pipe.table("extract"))
+    assert fused_linked.columns == link_cols
+    fused_l = bag(fused_linked, link_cols)
     assert fused_l == bag(p2.table("linked"), link_cols)
     assert len(fused_l) > 100
 
     # driver canonicalization == the Spark similarity-join oracle on the
     # pipeline's own alias set
     from tests.canon_oracle import canonicalize_aliases_spark
-    surfaces = pipe.table("linked").selectExpr("surface AS alias").distinct()
+    surfaces = fused_linked.selectExpr("surface AS alias").distinct()
     assert {tuple(r) for r in pipe.table("aliases").collect()} == \
         {tuple(r) for r in canonicalize_aliases_spark(surfaces).collect()}
 
@@ -547,12 +553,17 @@ def test_zero_hit_corpus_commits_readable_stages(spark, pipe, tmp_path):
                           corpus.PREDICATES)
     status = p.run()
     assert set(status.values()) == {"ran"}, status
+
+    def table(pl, st):  # the linked spans are an explode, not a stage
+        return (linked_from_spans(pl.table("extract")) if st == "linked"
+                else pl.table(st))
+
     for st in ("extract", "mentions", "linked", "triples", "aliases",
                "nodes", "edges"):
-        got = p.table(st)
+        got = table(p, st)
         assert {(f.name, f.dataType.simpleString()) for f in got.schema} \
             == {(f.name, f.dataType.simpleString())
-                for f in pipe.table(st).schema}, st
+                for f in table(pipe, st).schema}, st
         assert got.count() == (2 if st == "extract" else 0), st
 
 

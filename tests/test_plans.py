@@ -230,9 +230,10 @@ def test_corpus_sized_joins_never_broadcast_from_parquet(spark, tmp_path):
 
 def test_gazetteer_link_plans_are_local_and_narrow(spark, tmp_path):
     """alias_table_from_gazetteer is a local relation (LocalTableScan, not
-    a Python-RDD scan that re-runs Python tasks per scan), and the fused
-    build's linked stage is a narrow explode of the committed extract: no
-    join, no exchange, no aggregate."""
+    a Python-RDD scan that re-runs Python tasks per scan), and the linked
+    spans are a narrow explode of the committed extract: no join, no
+    exchange, no aggregate, and a scan that prunes the extract's ``text``
+    (the aggregates that read the linked spans rely on it)."""
     from quickner_spark.kg import corpus
     from quickner_spark.kg.extract import extract_annotate_stage
     from quickner_spark.kg.link import (alias_table_from_gazetteer,
@@ -253,6 +254,9 @@ def test_gazetteer_link_plans_are_local_and_narrow(spark, tmp_path):
     plan = _executed(lk)
     for op in ("Join", "Exchange", "Aggregate"):
         assert op not in plan, plan
+    scan = [l for l in plan.splitlines() if "ReadSchema" in l]
+    assert len(scan) == 1 and "spans:" in scan[0], plan
+    assert "text:" not in scan[0] and "triples:" not in scan[0], scan
     assert lk.count() > 0
 
 

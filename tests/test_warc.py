@@ -117,7 +117,7 @@ def test_path_glob_prunes_non_archives(spark, tmp_path):
 
 
 def test_pipeline_from_warc_matches_parquet(spark, tmp_path):
-    """Full 7-stage KG build off WARC archives is row-identical to the
+    """The full KG build off WARC archives is row-identical to the
     same build off the parquet pages table — the Common-Crawl ingest
     path end to end (north rule input shape)."""
     n, gaz_size, seed = 80, 60, 7
