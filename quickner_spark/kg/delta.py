@@ -40,8 +40,9 @@ embarrassingly parallel per document, so the correct operating mode is:
    triples are subtracted from ``triples``, not ``extract``: extract
    partitions written by older versions have no ``triples`` column.
    Alias canonicalization reruns on the driver over the (tiny,
-   gazetteer-bounded) surviving surface set — and only when that set
-   differs from the previous snapshot's, a driver-side set comparison.
+   gazetteer-bounded) surviving surface set on every update — the
+   batch pipeline's one derivation; the canonical map is a pure function
+   of that set, so an unchanged set yields the same map.
    Every table the update reads back is read under its known schema, so
    no read launches a schema-inference job.
 4. **Commit = one pointer write.** Every versioned artifact for snapshot
@@ -87,8 +88,9 @@ from quickner_spark.kg.extract import (extract_annotate_stage,
 # traced snapshot_update runs.
 from quickner_spark.kg.link import (alias_table_from_gazetteer,  # noqa: F401
                                     link_mentions, linked_from_spans)
-from quickner_spark.kg.pipeline import (_read_text, _write_text,
-                                        edges_from_counts, nodes_from_counts)
+from quickner_spark.kg.pipeline import (_read_hidden_dir, _read_text,
+                                        _write_text, edges_from_counts,
+                                        nodes_from_counts)
 from quickner_spark.kg.triples import (triples_from_spans,  # noqa: F401
                                        window_triples)
 from quickner_spark.operators.annotate import normalize_gazetteer
@@ -101,7 +103,6 @@ _CURRENT = "_CURRENT"
 _MANIFEST = "url string, digest bigint, snap int"
 _LINKED_STATS = "surface string, label string, n bigint"
 _TRIPLE_STATS = "subj string, pred string, obj string, n bigint"
-_ALIASES = "alias string, canonical_id string"
 
 
 def snapshot_delta(new_digests: DataFrame, old_manifest: DataFrame,
@@ -215,8 +216,8 @@ class SnapshotKg:
         the incrementality contract the tests assert on.
 
         Every Spark job it runs is a write, a join's exchange, or one of
-        three bounded collects (the replaced-url IN-list when it is
-        short, and the two alias sets). ``pages_in``,
+        two bounded collects (the replaced-url IN-list when it is short,
+        and the alias set). ``pages_in``,
         ``changed`` and the replaced-url count are ``Observation`` metrics
         of the digest and classification writes, and every table it reads
         back is read under its known schema."""
@@ -320,24 +321,10 @@ class SnapshotKg:
         tstats = self._commit(tstats, self._v("triple_stats", k))
 
         # 4. canonicalization + derived nodes/edges — gazetteer-bounded
-        # inputs, the batch pipeline's derivation over the merged stats.
-        # The alias SET usually survives a snapshot unchanged (counts move,
-        # surfaces rarely appear/disappear), and the canonical map is a
-        # pure function of it: both sets are gazetteer-bounded, so compare
-        # them on the driver and reuse the previous map when they match.
-        surfaces = {r[0] for r in lstats.select("surface").collect()}
-        aliases_reused = False
-        if prev is not None:
-            prev_amap = spark.read.schema(_ALIASES).parquet(
-                self._v("aliases", prev))
-            if surfaces == {r[0] for r in
-                            prev_amap.select("alias").collect()}:
-                aliases = prev_amap
-                aliases_reused = True
-        if not aliases_reused:
-            aliases = canonicalize_aliases(spark.createDataFrame(
-                pa.table({"alias": pa.array(list(surfaces), pa.string())})))
-        amap = self._commit(aliases, self._v("aliases", k))
+        # inputs, the batch pipeline's derivation over the merged stats
+        amap = self._commit(canonicalize_aliases(
+            lstats.select(F.col("surface").alias("alias"))),
+            self._v("aliases", k))
 
         (nodes_from_counts(lstats, amap)
          .write.mode("overwrite").parquet(self._v("nodes", k)))
@@ -358,7 +345,7 @@ class SnapshotKg:
         self._log_update(k, n_in, n_changed, committed=True,
                          wall_ms=int((time.time() - t0) * 1000))
         return {"snap": k, "pages_in": n_in, "changed": n_changed,
-                "committed": True, "aliases_reused": aliases_reused}
+                "committed": True}
 
     def update_from_warc(self, path: str, *, path_glob: str = "*.warc*",
                          strict: bool = False) -> dict:
@@ -451,7 +438,7 @@ class SnapshotKg:
 
     def updates(self) -> DataFrame:
         """Per-update lineage rows (snap, pages_in, changed, wall_ms)."""
-        return self.spark.read.parquet(f"{self.base}/_updates")
+        return _read_hidden_dir(self.spark, f"{self.base}/_updates")
 
     def _current_rows(self, table: str,
                       snap: int | None = None) -> DataFrame:

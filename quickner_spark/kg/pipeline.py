@@ -4,14 +4,19 @@ Each stage writes its output table + per-partition lineage/metrics rows;
 a rerun skips stages whose committed output already exists, so the job is
 resumable mid-pipeline after a failure.
 
-Storage: parquet directories with Spark's atomic ``_SUCCESS`` commit marker
-(swap for Iceberg ``writeTo(...).createOrReplace()`` + snapshot-existence
-checks on a cluster with an Iceberg catalog — the driver logic is
-identical; this container ships no Iceberg runtime).
+Storage: unpartitioned parquet directories with Spark's atomic
+``_SUCCESS`` commit marker (swap for Iceberg ``writeTo(...).createOrReplace()``
++ snapshot-existence checks on a cluster with an Iceberg catalog — the
+driver logic is identical; no Iceberg runtime is bundled). Every
+table has the column order of its ``SnapshotKg`` counterpart
+(``mentions``/``triples`` as ``<table>/snap=K``, ``edges`` as
+``edges/vK``), so the batch build and the incremental store commit one
+table shape.
 
 Metrics rows: (stage, partition_id, rows_out, wall_ms, run_id) appended
-under ``<base>/_metrics`` — per-partition lineage for skew forensics and
-the audit trail the north rule requires.
+under ``<base>/_metrics``, one file per stage run written under a hidden
+name and renamed into place — per-partition lineage for skew forensics
+and the audit trail the north rule requires.
 
 The full pipeline::
 
@@ -38,12 +43,10 @@ __all__ = ["Stage", "Pipeline", "build_kg_pipeline", "nodes_from_counts",
 @dataclass
 class Stage:
     """One pipeline stage: ``fn(spark, ctx)`` builds the stage's output,
-    committed under ``name``; ``partition_by`` columns become the
-    output's partition layout."""
+    committed under ``name``."""
 
     name: str
     fn: Callable[[SparkSession, dict], DataFrame]
-    partition_by: tuple[str, ...] = ()
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -70,6 +73,18 @@ def _write_text(spark: SparkSession, path: str, content: str) -> None:
         out.close()
 
 
+def _read_hidden_dir(spark: SparkSession, path: str) -> DataFrame:
+    """Read a ``_``-prefixed parquet directory through its listed part
+    files: Spark skips such a directory as hidden when it is read by its
+    own path (and logs a warning for it). Hidden files in it are left
+    out, like the temp file of a write that did not finish."""
+    fs, p = _hadoop_path(spark, path)
+    names = [s.getPath().getName() for s in fs.listStatus(p) if s.isFile()]
+    return spark.read.parquet(*[f"{path}/{n}" for n in names
+                                if n.endswith(".parquet")
+                                and n[0] not in "._"])
+
+
 def _read_text(spark: SparkSession, path: str) -> str | None:
     fs, p = _hadoop_path(spark, path)
     if not fs.exists(p):
@@ -88,10 +103,9 @@ class Pipeline:
     * ``catalog=None`` (default): stage outputs are parquet directories
       under ``base_dir`` with ``_SUCCESS`` commit markers.
     * ``catalog="iceberg.kg"``: outputs become Iceberg catalog tables
-      written with ``writeTo(...).partitionedBy(...).createOrReplace()``
-      and resumability checks ``tableExists`` (this container ships no
-      Iceberg runtime; the path is unit-tested via writer-selection
-      tests, runtime-gated)."""
+      written with ``writeTo(...).createOrReplace()`` and resumability
+      checks ``tableExists`` (no Iceberg runtime is bundled; the path is
+      unit-tested via writer-selection tests, runtime-gated)."""
 
     def __init__(self, spark: SparkSession, base_dir: str, stages: list[Stage],
                  catalog: str | None = None):
@@ -113,7 +127,7 @@ class Pipeline:
         if self.catalog:
             return self.spark.read.table(self.path(stage_name))
         # under the written schema, the read launches no schema-inference
-        # job and matches an inferred read, partition columns last
+        # job and matches an inferred read
         schema = self._schemas.get(stage_name)
         reader = (self.spark.read if schema is None
                   else self.spark.read.schema(schema))
@@ -125,43 +139,18 @@ class Pipeline:
             return self.spark.catalog.tableExists(out)
         return _exists(self.spark, out)
 
-    def _has_data_files(self, path: str) -> bool:
-        fs, p = _hadoop_path(self.spark, path)
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
-
-    def _ensure_readable(self, df: DataFrame, data_path: str) -> None:
-        """A dynamic-partitioned write of an EMPTY stage output creates no
-        data files at all — the directory commits (_SUCCESS) but cannot be
-        read back (no footer to infer a schema from). Land one footer-only
-        unpartitioned file recording the schema; a root-level file in a
-        partitioned layout is harmless when real partitions appear later
-        (they never do on a committed stage — outputs are immutable)."""
-        if not self._has_data_files(data_path):
-            (self.spark.createDataFrame([], df.schema).repartition(1)
-             .write.mode("append").parquet(data_path))
-
     def _write_stage(self, df: DataFrame, stage: Stage, out: str) -> None:
         """Writer selection: Iceberg v2 ``writeTo`` when a catalog is
         configured, parquet directory otherwise. An Iceberg
         ``createOrReplace`` is a single atomic snapshot commit — the
-        catalog-mode counterpart of the parquet ``_SUCCESS`` marker."""
+        catalog-mode counterpart of the parquet ``_SUCCESS`` marker. An
+        empty output stays readable: an unpartitioned write's first task
+        lands a footer even with no rows."""
         if self.catalog:
-            w = df.writeTo(out)
-            if stage.partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in stage.partition_by])
-            w.createOrReplace()
+            df.writeTo(out).createOrReplace()
             return
-        writer = df.write.mode("overwrite")
-        if stage.partition_by:
-            writer = writer.partitionBy(*stage.partition_by)
-        writer.parquet(out)
+        df.write.mode("overwrite").parquet(out)
         self._schemas[stage.name] = df.schema
-        if stage.partition_by:
-            self._ensure_readable(df, out)
 
     def _write_metrics(self, stage: str, out_path: str, wall_ms: int):
         """Per-partition lineage rows from the written files' parquet
@@ -225,8 +214,12 @@ class Pipeline:
         })
         mdir = os.path.join(_local(self.base), "_metrics")
         os.makedirs(mdir, exist_ok=True)
-        pq.write_table(table, os.path.join(
-            mdir, f"metrics-{stage}-{self.run_id}.parquet"))
+        # a crash mid-write leaves only a hidden temp file, which every
+        # reader of _metrics skips; the rename publishes a whole file
+        name = f"metrics-{stage}-{self.run_id}.parquet"
+        tmp = os.path.join(mdir, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(mdir, name))
 
     def run(self, force: bool = False, ctx: dict | None = None) -> dict[str, str]:
         """Execute all stages; returns {stage: 'ran'|'skipped'}. ``ctx`` is
@@ -251,7 +244,7 @@ class Pipeline:
     def metrics(self) -> DataFrame:
         if self.catalog:
             return self.spark.read.table(f"{self.catalog}.metrics")
-        return self.spark.read.parquet(f"{self.base}/_metrics")
+        return _read_hidden_dir(self.spark, f"{self.base}/_metrics")
 
 
 def nodes_from_counts(surface_counts: DataFrame,
@@ -409,16 +402,14 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                          weight="n_links", iters=host_rank_iters)
                 .select(F.col("node").alias("host"), "rank"))
 
-    # partition layout: mention/triple tables by label/pred (low-cardinality,
-    # prunable); with an Iceberg catalog the same identity columns become
-    # writeTo(...).partitionedBy(...).
+    # unpartitioned tables in the column order of SnapshotKg's
     stages = [
         Stage("extract", s_extract),
-        Stage("mentions", s_mentions, partition_by=("label",)),
-        Stage("triples", s_triples, partition_by=("pred",)),
+        Stage("mentions", s_mentions),
+        Stage("triples", s_triples),
         Stage("aliases", s_aliases),
         Stage("nodes", s_nodes),
-        Stage("edges", s_edges, partition_by=("pred",)),
+        Stage("edges", s_edges),
     ]
     if link_graph:
         stages.append(Stage("host_edges", s_host_edges))

@@ -49,8 +49,9 @@ HOT_DOMAIN = 0.10
 
 def partition_balance(pipe) -> dict[str, dict]:
     """Per-stage balance from the committed metrics rows: max / median
-    rows per written partition (file). 1.0 = perfectly even; a straggler
-    partition shows up as a large ratio AND as stage wall."""
+    rows per written file, and every stage table is unpartitioned, so a
+    file is one write task's output. 1.0 = perfectly even; a straggler
+    task shows up as a large ratio AND as stage wall."""
     rows = pipe.metrics().collect()
     by_stage: dict[str, list[int]] = {}
     wall: dict[str, int] = {}

@@ -101,7 +101,7 @@ def rebuild(spark, tmp_path_factory, gaz, snapshots):
 def test_update_stats_count_only_changed(store, snapshots):
     _, s0, s1 = store
     assert s0 == {"snap": 0, "pages_in": N_DOCS, "changed": N_DOCS,
-                  "committed": True, "aliases_reused": False}
+                  "committed": True}
     assert s1["snap"] == 1 and s1["committed"]
     assert s1["pages_in"] == N_DOCS + N_NEW
     assert s1["changed"] == len(snapshots["changed"]) + N_NEW
@@ -116,6 +116,13 @@ def test_snap0_matches_batch_pipeline(spark, store, snapshots, gaz,
     p.run()
     m0 = (spark.read.parquet(f"{kg.base}/mentions/snap=0"))
     assert _row_set(m0) == _row_set(p.table("mentions"))
+    # one table shape: the batch tables carry the store's columns, in
+    # the store's order, with its types
+    for table, stored in (("mentions", "mentions/snap=0"),
+                          ("triples", "triples/snap=0"),
+                          ("edges", "edges/v0")):
+        assert (spark.read.parquet(p.path(table)).dtypes
+                == spark.read.parquet(f"{kg.base}/{stored}").dtypes), table
 
 
 def test_delta_nodes_equal_full_rebuild(store, rebuild):
@@ -323,7 +330,7 @@ def test_update_from_warc_snapshots(spark, tmp_path):
     kg = SnapshotKg(spark, str(tmp_path / "kg"), gaz, ("acquired",))
     s0 = kg.update_from_warc(str(s0_dir))
     assert s0 == {"snap": 0, "pages_in": 2, "changed": 2,
-                  "committed": True, "aliases_reused": False}
+                  "committed": True}
 
     # snapshot 1: u1 revisited twice (latest capture has different text),
     # u2 unchanged byte-identical recrawl
@@ -338,10 +345,10 @@ def test_update_from_warc_snapshots(spark, tmp_path):
     assert got == {("acme", "acquired", "globex")}
 
 
-def test_alias_set_reuse_fast_path(spark, tmp_path):
-    """An update that changes counts but not the alias SET reuses the
-    previous canonical map (no CC rerun); one that changes the set
-    recomputes it."""
+def test_alias_map_follows_alias_set(spark, tmp_path):
+    """The canonical map is rederived on every update: an update that
+    changes counts but not the alias SET keeps the same map, and one that
+    shrinks the set drops the gone alias."""
     gaz = [("acme", "ORG"), ("globex", "ORG")]
 
     def pages(rows):
@@ -352,15 +359,14 @@ def test_alias_set_reuse_fast_path(spark, tmp_path):
     kg = SnapshotKg(spark, str(tmp_path / "kg"), gaz, ())
     kg.update(pages([("u1", "acme and globex ."), ("u2", "acme again .")]))
     # u2 changes but still mentions only acme: alias set unchanged
-    s1 = kg.update(pages([("u1", "acme and globex ."),
-                          ("u2", "acme acme twice .")]))
-    assert s1["aliases_reused"] is True
+    kg.update(pages([("u1", "acme and globex ."),
+                     ("u2", "acme acme twice .")]))
+    assert {r["alias"] for r in kg.aliases().collect()} == {"acme", "globex"}
     assert {r["canonical_id"]: r["n_mentions"]
             for r in kg.nodes().collect()} == {"acme": 3, "globex": 1}
     # u1 drops globex: alias set shrinks -> recompute
-    s2 = kg.update(pages([("u1", "acme alone ."),
-                          ("u2", "acme acme twice .")]))
-    assert s2["aliases_reused"] is False
+    kg.update(pages([("u1", "acme alone ."),
+                     ("u2", "acme acme twice .")]))
     assert {r["alias"] for r in kg.aliases().collect()} == {"acme"}
 
 

@@ -20,9 +20,9 @@ from quickner_spark.kg.delta import SnapshotKg, snapshot_delta
 from tests.test_kg_delta import (  # noqa: F401
     N_DOCS, N_NEW, SEED, gaz, snapshots, store)
 
-# measured: 28 jobs at local[4] with 4 shuffle partitions; the slack
+# measured: 27 jobs at local[4] with 4 shuffle partitions; the slack
 # absorbs adaptive-execution plan changes, not a new inference or count
-JOB_BUDGET = 31
+JOB_BUDGET = 30
 
 
 def _rows(spark, kg, table, k):

@@ -119,17 +119,51 @@ def test_metrics_with_file_scheme_base(spark, pages_path, tmp_path):
     assert total == p.table("mentions").count()
 
 
+def test_metrics_write_is_atomic(spark, monkeypatch, tmp_path):
+    """A metrics write that dies mid-file leaves no visible truncated
+    file: the first stage's rows stay readable through ``metrics()`` and
+    through a pyarrow read of ``_metrics``."""
+    import io
+
+    import pyarrow.parquet as pq
+    from quickner_spark.kg.pipeline import Pipeline, Stage
+
+    write_table, writes = pq.write_table, []
+
+    def dying(table, where, *args, **kwargs):
+        writes.append(where)
+        if len(writes) < 2:
+            return write_table(table, where, *args, **kwargs)
+        buf = io.BytesIO()
+        write_table(table, buf, *args, **kwargs)
+        with open(where, "wb") as f:
+            f.write(buf.getvalue()[:len(buf.getvalue()) // 2])
+        raise OSError("metrics write died")
+
+    df = spark.createDataFrame([(1, "a")], "k long, pred string")
+    base = str(tmp_path / "kg")
+    p = Pipeline(spark, base, [Stage("one", lambda s, ctx: df),
+                               Stage("two", lambda s, ctx: df)])
+    monkeypatch.setattr(pq, "write_table", dying)
+    with pytest.raises(OSError, match="metrics write died"):
+        p.run()
+    monkeypatch.undo()
+    assert len(writes) == 2
+    assert {r["stage"] for r in p.metrics().collect()} == {"one"}
+    assert {r["stage"] for r in
+            pq.read_table(os.path.join(base, "_metrics")).to_pylist()} \
+        == {"one"}
+
+
 def test_table_reads_back_with_written_schema(spark, pipe, job_ids):
     """table() reads a stage this Pipeline wrote under the schema it was
     written with: no schema-inference job, and the columns, types and
-    order of an inferred read — partition columns last."""
-    for st, part in (("mentions", "label"), ("triples", "pred"),
-                     ("edges", "pred")):
+    order of an inferred read."""
+    for st in ("mentions", "triples", "edges"):
         before = job_ids()
         got = pipe.table(st)
         assert not job_ids() - before, st
         assert got.schema == spark.read.parquet(pipe.path(st)).schema, st
-        assert got.columns[-1] == part, st
 
 
 def test_catalog_mode_writer_selection(spark, monkeypatch):
@@ -145,20 +179,15 @@ def test_catalog_mode_writer_selection(spark, monkeypatch):
     class FakeWriterV2:
         def __init__(self, ident):
             self.ident = ident
-            self.parts = None
-
-        def partitionedBy(self, *cols):
-            self.parts = cols
-            return self
 
         def createOrReplace(self):
-            calls.append(("createOrReplace", self.ident, self.parts))
+            calls.append(("createOrReplace", self.ident))
 
         def create(self):
-            calls.append(("create", self.ident, self.parts))
+            calls.append(("create", self.ident))
 
         def append(self):
-            calls.append(("append", self.ident, self.parts))
+            calls.append(("append", self.ident))
 
     df = spark.createDataFrame([(1, "a")], "k long, pred string")
     # patch the CONCRETE classes: pyspark 4's classic DataFrame overrides
@@ -173,7 +202,7 @@ def test_catalog_mode_writer_selection(spark, monkeypatch):
     monkeypatch.setattr(type(spark.read), "table", lambda self, ident: df)
 
     p = Pipeline(spark, "/ignored", [
-        Stage("stg", lambda s, ctx: df, partition_by=("pred",)),
+        Stage("stg", lambda s, ctx: df),
     ], catalog="ice.kg")
     assert p.path("stg") == "ice.kg.stg"
     status = p.run()
@@ -181,7 +210,6 @@ def test_catalog_mode_writer_selection(spark, monkeypatch):
     kinds = [c[0] for c in calls]
     assert kinds == ["createOrReplace", "create"]  # stage write + metrics
     assert calls[0][1] == "ice.kg.stg"
-    assert [str(c) for c in calls[0][2]] == ["Column<'pred'>"]
     assert calls[1][1] == "ice.kg.metrics"
     # resumability: tableExists -> skip
     monkeypatch.setattr(type(spark.catalog), "tableExists",
