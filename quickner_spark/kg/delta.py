@@ -7,13 +7,14 @@ the doc-local stages (extract -> mentions -> link -> triples) are
 embarrassingly parallel per document, so the correct operating mode is:
 
 1. **Digest diff.** One narrow pass computes ``xxhash64(html)`` per url
-   and writes it under ``digests/snap=K``; a doc-keyed left join against
-   the previous snapshot's manifest ``(url, digest, snap)`` classifies
-   every page as unchanged (skip), changed (reprocess + subtract its old
-   contributions) or new (reprocess). The classification is written once,
-   under ``changes/snap=K``, and every later step reads it; the page,
-   change and replaced-url counts are ``Observation`` metrics of these
-   two writes, so no count job runs. The per-row invariant the whole
+   and a doc-keyed left join against the previous snapshot's manifest
+   ``(url, digest, snap)`` classifies every page as unchanged (skip),
+   changed (reprocess + subtract its old contributions) or new
+   (reprocess). The digests are not persisted: the classification is
+   written once, under ``changes/snap=K``, that write runs the digest
+   scan, and every later step reads it; the page and change counts and
+   the replaced urls' old snapshots are ``Observation`` metrics of this
+   one write, so no count job runs. The per-row invariant the whole
    pipeline is built on — byte-identical extraction per url
    (BASELINE.json input_hint) — is what makes the digest a sound skip
    condition: same bytes ==> same text ==> same mentions/links/triples.
@@ -74,8 +75,7 @@ import json
 import time
 
 import pyarrow as pa
-from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
-                         functions as F)
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from quickner_spark.kg.canonicalize import canonicalize_aliases
@@ -215,12 +215,11 @@ class SnapshotKg:
         the number of pages the doc-local stages actually processed —
         the incrementality contract the tests assert on.
 
-        Every Spark job it runs is a write, a join's exchange, or one of
-        two bounded collects (the replaced-url IN-list when it is short,
-        and the alias set). ``pages_in``,
-        ``changed`` and the replaced-url count are ``Observation`` metrics
-        of the digest and classification writes, and every table it reads
-        back is read under its known schema."""
+        Every Spark job it runs is a write, a join's exchange, or the one
+        bounded collect of the alias set. ``pages_in``, ``changed`` and
+        the replaced urls' old snapshots are ``Observation`` metrics of
+        the classification write, which runs the digest scan, and every
+        table it reads back is read under its known schema."""
         spark = self.spark
         prev = self.snap()
         k = 0 if prev is None else prev + 1
@@ -232,15 +231,13 @@ class SnapshotKg:
             from quickner_spark.operators.events import latest_by_key
             return latest_by_key(df, "url", "warc_ts")
 
-        # 1. digest pass — the ONLY scan of unchanged pages' html; persist
-        # (url, digest) so the classification join is a narrow parquet
-        # scan. Its row count, NULL digests included, is pages_in.
-        seen = Observation("digests")
-        nd = self._commit(
-            latest(pages).select("url", F.xxhash64("html").alias("digest"))
-            .observe(seen, F.count(F.lit(1)).alias("n")),
-            self._part("digests", k))
+        # 1. digest pass — the ONLY scan of unchanged pages' html, run by
+        # the classification write. Its row count, NULL digests included,
+        # is pages_in.
         t0 = time.time()
+        seen = Observation("digests")
+        nd = (latest(pages).select("url", F.xxhash64("html").alias("digest"))
+              .observe(seen, F.count(F.lit(1)).alias("n")))
         if prev is None:
             # snapshot 0 processes every page, NULL digests included
             old_manifest = None
@@ -255,8 +252,6 @@ class SnapshotKg:
         classified = Observation("changes")
         changes = self._commit(
             delta.observe(classified, F.count(F.lit(1)).alias("n"),
-                          F.count_if(F.col("status") == "changed")
-                          .alias("replaced"),
                           F.collect_set("old_snap").alias("old_snaps")),
             self._part("changes", k))
         n_in = seen.get["n"]
@@ -299,13 +294,7 @@ class SnapshotKg:
             replaced = (changes.where(F.col("status") == "changed")
                         .select("url", F.col("old_snap").alias("snap")))
             snaps = sorted(counts["old_snaps"])
-            # built once: every literal of the IN-list is a py4j call
-            url_in = (F.col("url").isin(
-                [r[0] for r in replaced.select("url").collect()])
-                if 0 < counts["replaced"] <= self.MINUS_PUSHDOWN_MAX
-                else None)
-            old_ext = self._minus("extract", ext.schema, replaced, snaps,
-                                  url_in)
+            old_ext = self._minus("extract", ext.schema, replaced, snaps)
             lstats = self._merge(
                 linked, lkeys,
                 spark.read.schema(_LINKED_STATS).parquet(
@@ -315,8 +304,7 @@ class SnapshotKg:
                 triples, tkeys,
                 spark.read.schema(_TRIPLE_STATS).parquet(
                     self._v("triple_stats", prev)),
-                self._minus("triples", triples.schema, replaced, snaps,
-                            url_in))
+                self._minus("triples", triples.schema, replaced, snaps))
         lstats = self._commit(lstats, self._v("linked_stats", k))
         tstats = self._commit(tstats, self._v("triple_stats", k))
 
@@ -359,39 +347,30 @@ class SnapshotKg:
         return self.update(read_warc(self.spark, path, strict=strict,
                                      path_glob=path_glob))
 
-    # below this many replaced urls, the subtraction scan pushes a
-    # literal IN-list into the parquet source (row-group min/max skipping
-    # on url-sorted files); above it only the (url, snap) semi-join
-    # selects, and a megabyte-scale literal plan would hurt
-    MINUS_PUSHDOWN_MAX = 10_000
-
     def _minus(self, table: str, schema: StructType, replaced: DataFrame,
-               snaps: list, url_in: Column | None) -> DataFrame | None:
+               snaps: list) -> DataFrame | None:
         """The replaced urls' OLD rows of a per-snapshot table (``schema``
         is its partition's), or None when nothing is replaced: a
         (url, snap) semi-join keeps exactly the rows the
         old manifest pointed at (each url's rows are written once per
         content change, under the snap that processed it).
 
-        Scan pruning, two levels: (a) only the ``snap=s`` directories of
-        the replaced urls' OLD snaps are listed and read (``basePath``
-        keeps ``snap`` a column) — snapshots no replaced url lives in are
-        never touched; (b) when the delta is small, ``url_in`` (the url
-        IN-list) is additionally pushed into the parquet scan, so
-        row-group min/max stats skip unrelated data. The (url, snap)
-        selection stays either way — it is the correctness contract; the
-        pushdowns only shrink what the scan feeds it."""
+        Only the ``snap=s`` directories of the replaced urls' OLD snaps
+        are listed and read (``basePath`` keeps ``snap`` a column), so
+        snapshots no replaced url lives in are never touched. The
+        (url, snap) semi-join is the correctness contract. A url IN-list
+        pushed into the scan would skip no row group: above
+        ``spark.sql.parquet.pushdown.inFilterThreshold`` (10 values)
+        parquet receives only the list's [min, max] range."""
         if not snaps:
             return None
         root = f"{self.base}/{table}"
-        old = (self.spark.read
-               .schema(StructType([*schema.fields,
-                                   StructField("snap", IntegerType())]))
-               .option("basePath", root)
-               .parquet(*[f"{root}/snap={s}" for s in snaps]))
-        if url_in is not None:
-            old = old.where(url_in)
-        return old.join(replaced, ["url", "snap"], "left_semi")
+        return (self.spark.read
+                .schema(StructType([*schema.fields,
+                                    StructField("snap", IntegerType())]))
+                .option("basePath", root)
+                .parquet(*[f"{root}/snap={s}" for s in snaps])
+                .join(replaced, ["url", "snap"], "left_semi"))
 
     @staticmethod
     def _merge(plus: DataFrame, keys, old: DataFrame | None = None,
@@ -437,7 +416,9 @@ class SnapshotKg:
         return self._cur("manifest", snap)
 
     def updates(self) -> DataFrame:
-        """Per-update lineage rows (snap, pages_in, changed, wall_ms)."""
+        """Per-update lineage rows (snap, pages_in, changed, committed,
+        wall_ms); ``wall_ms`` spans the whole update, digest scan
+        included."""
         return _read_hidden_dir(self.spark, f"{self.base}/_updates")
 
     def _current_rows(self, table: str,
@@ -485,17 +466,17 @@ class SnapshotKg:
         at snap=K and the current-view join prunes to one partition.
         Amortized full rewrite of the doc-local tables — run it when the
         snapshot count (not the data size) starts to hurt the view join.
-        The per-update ``changes`` classifications are dropped, and so is
-        the ``linked`` table of a store written when the linked spans
-        were still committed (no read uses it). Returns the snapshot
-        number everything now lives under."""
+        The per-update ``changes`` classifications are dropped, and so are
+        the ``linked`` and ``digests`` tables of a store written when the
+        linked spans or the digests were still committed (no read uses
+        them). Returns the snapshot number everything now lives under."""
         k = self.snap()
         if k is None:
             raise ValueError(f"no committed snapshot under {self.base}")
         from quickner_spark.kg.pipeline import _hadoop_path
 
         cur_ptr = self.manifest().select("url", "snap")
-        for table in ("mentions", "triples", "extract", "digests"):
+        for table in ("mentions", "triples", "extract"):
             rows = self.spark.read.parquet(f"{self.base}/{table}")
             cur = rows.join(cur_ptr, ["url", "snap"]).drop("snap")
             # two-step: materialize the view to a scratch dir BEFORE
@@ -507,7 +488,7 @@ class SnapshotKg:
             (self.spark.read.parquet(tmp)
              .write.mode("overwrite").parquet(self._part(table, k)))
             fs.delete(_hadoop_path(self.spark, tmp)[1], True)
-        for gone in ("changes", "linked"):
+        for gone in ("changes", "linked", "digests"):
             fs.delete(_hadoop_path(self.spark, f"{self.base}/{gone}")[1],
                       True)
         # repoint every manifest row at snap=K — same two-step (the new

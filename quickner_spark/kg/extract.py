@@ -18,8 +18,7 @@ from typing import Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["extract_text", "extract_stage", "extract_annotate_stage",
-           "mentions_from_spans"]
+__all__ = ["extract_text", "extract_annotate_stage", "mentions_from_spans"]
 
 _P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
 
@@ -39,30 +38,8 @@ def extract_text(html: bytes) -> str | None:
         return None
 
 
-def extract_stage(pages: DataFrame, html_col: str = "html",
-                  url_col: str = "url", extractor=None) -> DataFrame:
-    """pages(url, html, ...) -> (url, text). Narrow map, no shuffle; only
-    (url, html) columns are read (column pruning drops the rest at the
-    scan). ``extractor``: any deterministic ``bytes -> str | None``
-    (default :func:`extract_text`, the synthetic-corpus inverse; pass
-    ``kg.webextract.extract_text_web`` for real-web boilerplate-aware
-    extraction — same contract, pinned by tests)."""
-    extractor = extractor or extract_text
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                url_col: pdf[url_col],
-                "text": [extractor(h) for h in pdf[html_col].values],
-            })
-
-    return pages.select(url_col, html_col).mapInPandas(
-        gen, f"{url_col} string, text string")
-
-
 def extract_annotate_stage(pages: DataFrame,
                            entities: Sequence[tuple[str, str]],
-                           html_col: str = "html", url_col: str = "url",
                            case_sensitive: bool = False,
                            extractor=None,
                            predicates: Sequence[str] = ()) -> DataFrame:
@@ -138,7 +115,7 @@ def extract_annotate_stage(pages: DataFrame,
         cands = gazetteer_candidates(bc.value)
         for pdf in batches:
             texts, spans, triples = [], [], []
-            for h in pdf[html_col].values:
+            for h in pdf["html"].values:
                 text = extractor(h)
                 texts.append(text)
                 if text is None:
@@ -163,12 +140,12 @@ def extract_annotate_stage(pages: DataFrame,
                                 *links[surface]))
                 spans.append(row)
                 triples.append(_doc_triples(t, row, framed))
-            yield pd.DataFrame({url_col: pdf[url_col], "text": texts,
+            yield pd.DataFrame({"url": pdf["url"], "text": texts,
                                 "spans": spans, "triples": triples})
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         gen,
-        f"{url_col} string, text string, "
+        "url string, text string, "
         "spans array<struct<start: long, end: long, label: string, "
         "surface: string, maximal: boolean, canonical_id: string, "
         "link_label: string, link_overlap: int>>, "
@@ -195,14 +172,13 @@ def _doc_triples(t: str, spans, framed) -> list[tuple]:
     return out
 
 
-def mentions_from_spans(extract: DataFrame,
-                        url_col: str = "url") -> DataFrame:
+def mentions_from_spans(extract: DataFrame) -> DataFrame:
     """The mentions table of a fused extract: one row per span with
     (url, start, end, label, surface, maximal) — a JVM-only explode. The
     in-row link fields stay behind (the linked table reads them,
     :func:`kg.link.linked_from_spans`)."""
-    return (extract.select(url_col, F.explode("spans").alias("__m"))
-            .select(url_col, "__m.start", "__m.end", "__m.label",
+    return (extract.select("url", F.explode("spans").alias("__m"))
+            .select("url", "__m.start", "__m.end", "__m.label",
                     "__m.surface", "__m.maximal"))
 
 

@@ -111,17 +111,17 @@ def link_winner(cands, doc_tokens) -> tuple[str, str, int]:
     return cid, label, overlap
 
 
-def linked_from_spans(extract: DataFrame, id_col: str = "url") -> DataFrame:
+def linked_from_spans(extract: DataFrame) -> DataFrame:
     """The linked table from the fused extract's in-row link fields:
-    (id, start, end, surface, canonical_id, label, score) — row-identical
+    (url, start, end, surface, canonical_id, label, score) — row-identical
     to ``link_mentions`` over ``alias_table_from_gazetteer(gaz)``. A narrow
     explode; spans with no candidate (null ``canonical_id``) yield no row,
     as the inner join does. ``score`` is computed here, JVM-side, with the
     same ``log1p`` and double addition, so it is bit-identical."""
     m = F.col("__m")
-    return (extract.select(id_col, F.explode("spans").alias("__m"))
+    return (extract.select("url", F.explode("spans").alias("__m"))
             .where(m["canonical_id"].isNotNull())
-            .select(id_col, m["start"].alias("start"),
+            .select("url", m["start"].alias("start"),
                     m["end"].alias("end"), m["surface"].alias("surface"),
                     m["canonical_id"].alias("canonical_id"),
                     m["link_label"].alias("label"),

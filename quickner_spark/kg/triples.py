@@ -34,13 +34,13 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["pattern_triples", "triples_from_spans", "window_triples"]
 
 
-def triples_from_spans(extract: DataFrame, id_col: str = "url") -> DataFrame:
+def triples_from_spans(extract: DataFrame) -> DataFrame:
     """The triples table of a fused extract
     (``kg.extract.extract_annotate_stage(predicates=...)``): one row per
-    element of its in-row ``triples`` array, as (id, subj, pred, obj,
+    element of its in-row ``triples`` array, as (url, subj, pred, obj,
     subj_start, obj_start) — the columns and types of
     :func:`window_triples`. A JVM-only explode: no join, no exchange."""
-    return extract.select(id_col, F.inline("triples"))
+    return extract.select("url", F.inline("triples"))
 
 
 def _pred_probe(predicates: Sequence[str], window_col: str):

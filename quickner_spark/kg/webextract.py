@@ -21,9 +21,8 @@ Algorithm:
    to single spaces, so output is deterministic byte-for-byte for a given
    input (pinned by tests).
 
-Same stage contract as ``extract_stage``: Arrow-batched ``mapInPandas``,
-``(url string, text string)`` output, column-pruned scan — swap via
-``extract_stage(pages, extractor=extract_text_web)`` or the fused
+Same contract as ``kg.extract.extract_text`` (deterministic
+``bytes -> str | None``), so it swaps into the fused pass as
 ``extract_annotate_stage(pages, gaz, extractor=extract_text_web)``.
 
 Two parsers, one behavior: the hot path is :func:`_blocks_fast`, a

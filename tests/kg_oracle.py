@@ -12,10 +12,11 @@ compare the two on the same pages.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from quickner_spark.kg.canonicalize import canonicalize_aliases
-from quickner_spark.kg.extract import extract_stage
+from quickner_spark.kg.extract import extract_text
 from quickner_spark.kg.link import alias_table_from_gazetteer, link_mentions
 from quickner_spark.kg.pipeline import (Pipeline, Stage, build_kg_pipeline,
                                         nodes_from_counts)
@@ -23,6 +24,24 @@ from quickner_spark.kg.triples import pattern_triples
 from quickner_spark.operators.annotate import (annotate_mentions,
                                                maximal_mentions,
                                                normalize_gazetteer)
+
+
+def extract_stage(pages: DataFrame, extractor=None) -> DataFrame:
+    """pages(url, html, ...) -> (url, text): the extract pass on its own,
+    a narrow Arrow-batched map over the (url, html) columns. ``extractor``
+    is any deterministic ``bytes -> str | None`` (default
+    ``kg.extract.extract_text``; ``kg.webextract.extract_text_web`` for
+    real-web pages), the same one the fused pass takes."""
+    extractor = extractor or extract_text
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame({
+                "url": pdf["url"],
+                "text": [extractor(h) for h in pdf["html"].values]})
+
+    return pages.select("url", "html").mapInPandas(
+        gen, "url string, text string")
 
 
 def oracle_increment(pages: DataFrame, entities, predicates,

@@ -9,6 +9,7 @@ while the doc-local stages only ever processed the changed pages (the
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -212,8 +213,12 @@ def test_compact_preserves_views(spark, store, rebuild):
     kg, _, _ = store
     cols = ["url", "subj", "pred", "obj", "subj_start", "obj_start"]
     before = _row_set(kg.current_triples(), cols)
+    # a store written when the digests were still committed
+    leftover = f"{kg.base}/digests/snap=0"
+    kg.manifest().select("url", "digest").write.parquet(leftover)
     k = kg.compact()
     assert k == kg.snap()
+    assert not os.path.exists(f"{kg.base}/digests")
     assert _row_set(kg.current_triples(), cols) == before
     snaps = {r["snap"] for r in kg.manifest().select("snap").collect()}
     assert snaps == {k}

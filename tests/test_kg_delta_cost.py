@@ -1,11 +1,12 @@
 """What one ``SnapshotKg.update`` reports and what it costs.
 
 ``pages_in`` and ``changed`` are ``Observation`` metrics of the update's
-own digest and classification writes, not separate count jobs: they must
-equal the committed tables' row counts on snapshot 0, the fixture's
-update, a zero-change update and an update with a NULL-html page. A
-one-page update must stay within a Spark job budget, so that
-schema-inference, count and collect jobs cannot creep back in."""
+own classification write, not separate count jobs: ``pages_in`` must
+equal the input's row count after the revisit dedup and ``changed`` the
+committed tables' row counts, on snapshot 0, the fixture's update, a
+zero-change update and an update with a NULL-html page. The digests are
+not persisted. A one-page update must stay within a Spark job budget, so
+that schema-inference, count and collect jobs cannot creep back in."""
 
 from __future__ import annotations
 
@@ -16,13 +17,14 @@ from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
 from quickner_spark.kg.delta import SnapshotKg, snapshot_delta
+from quickner_spark.operators.events import latest_by_key
 # the delta tests' fixtures; module-scoped, so this module builds its own
 from tests.test_kg_delta import (  # noqa: F401
     N_DOCS, N_NEW, SEED, gaz, snapshots, store)
 
-# measured: 27 jobs at local[4] with 4 shuffle partitions; the slack
+# measured: 25 jobs at local[4] with 4 shuffle partitions; the slack
 # absorbs adaptive-execution plan changes, not a new inference or count
-JOB_BUDGET = 30
+JOB_BUDGET = 28
 
 
 def _rows(spark, kg, table, k):
@@ -35,22 +37,31 @@ def _logged(kg, k):
             for r in kg.updates().where(F.col("snap") == k).collect()]
 
 
-def _assert_counts_match_tables(spark, kg, res):
+def _latest(pages):
+    """The update's input after its revisit dedup."""
+    return (latest_by_key(pages, "url", "warc_ts")
+            if "warc_ts" in pages.columns else pages)
+
+
+def _assert_counts_match_tables(spark, kg, res, pages):
     k = res["snap"]
-    assert res["pages_in"] == _rows(spark, kg, "digests", k)
+    assert res["pages_in"] == _latest(pages).count()
     assert res["changed"] == _rows(spark, kg, "changes", k) \
         == _rows(spark, kg, "extract", k)
     assert _logged(kg, k) == [(res["pages_in"], res["changed"], True)]
+    assert not os.path.exists(f"{kg.base}/digests")
 
 
 def test_observed_counts_match_tables(spark, store, snapshots):
     kg, s0, s1 = store
     assert (s0["pages_in"], s0["changed"]) == (N_DOCS, N_DOCS)
     assert s1["pages_in"] == N_DOCS + N_NEW
-    for res in (s0, s1):
-        _assert_counts_match_tables(spark, kg, res)
+    for res, snap in ((s0, "a"), (s1, "b")):
+        _assert_counts_match_tables(spark, kg, res,
+                                    spark.read.parquet(snapshots[snap]))
     # the observed change count is the classification join's row count
-    nd = spark.read.parquet(f"{kg.base}/digests/snap=1")
+    nd = (_latest(spark.read.parquet(snapshots["b"]))
+          .select("url", F.xxhash64("html").alias("digest")))
     assert s1["changed"] == snapshot_delta(nd, kg.manifest(0)).count() \
         == len(snapshots["changed"]) + N_NEW
 
@@ -60,11 +71,13 @@ def test_zero_change_update_counts_and_runs_no_extract(spark, store,
     kg, _, _ = store
     before = kg.snap()
     k = before + 1
-    s = kg.update(spark.read.parquet(snapshots["b"]))
+    pages = spark.read.parquet(snapshots["b"])
+    s = kg.update(pages)
     assert s == {"snap": before, "pages_in": N_DOCS + N_NEW, "changed": 0,
                  "committed": False}
-    assert _rows(spark, kg, "digests", k) == s["pages_in"]
+    assert _latest(pages).count() == s["pages_in"]
     assert _rows(spark, kg, "changes", k) == 0
+    assert not os.path.exists(f"{kg.base}/digests")
     assert not os.path.exists(f"{kg.base}/extract/snap={k}")
     assert _logged(kg, k) == [(N_DOCS + N_NEW, 0, False)]
 
@@ -80,13 +93,14 @@ def test_null_html_page_counts(spark, tmp_path):
             "url string, html binary, text string, lang string")
 
     kg = SnapshotKg(spark, str(tmp_path / "kg"), [("acme", "ORG")], ())
-    s0 = kg.update(pages([("u1", "acme ."), ("u2", None)]))
+    p0 = pages([("u1", "acme ."), ("u2", None)])
+    s0 = kg.update(p0)
     assert (s0["pages_in"], s0["changed"]) == (2, 2)
-    _assert_counts_match_tables(spark, kg, s0)
-    s1 = kg.update(pages([("u1", "acme acme ."), ("u2", None),
-                          ("u3", "acme again .")]))
+    _assert_counts_match_tables(spark, kg, s0, p0)
+    p1 = pages([("u1", "acme acme ."), ("u2", None), ("u3", "acme again .")])
+    s1 = kg.update(p1)
     assert (s1["pages_in"], s1["changed"]) == (3, 2)
-    _assert_counts_match_tables(spark, kg, s1)
+    _assert_counts_match_tables(spark, kg, s1, p1)
     assert {r["canonical_id"]: r["n_mentions"]
             for r in kg.nodes().collect()} == {"acme": 3}
 

@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
-from quickner_spark.kg.extract import extract_stage
 from quickner_spark.kg.link import linked_from_spans
 from quickner_spark.kg.pipeline import build_kg_pipeline
+from tests.kg_oracle import extract_stage
 
 N_DOCS = 300
 SEED = 42

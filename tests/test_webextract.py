@@ -73,7 +73,8 @@ def test_surrounded_headline_rule():
 
 
 def test_extract_stage_contract_with_web_extractor(spark):
-    from quickner_spark.kg.extract import extract_annotate_stage, extract_stage
+    from quickner_spark.kg.extract import extract_annotate_stage
+    from tests.kg_oracle import extract_stage
 
     pages = spark.createDataFrame(
         [("u0", bytearray(PAGE)), ("u1", None),
