@@ -176,7 +176,10 @@ def mentions_from_spans(extract: DataFrame) -> DataFrame:
     """The mentions table of a fused extract: one row per span with
     (url, start, end, label, surface, maximal) — a JVM-only explode. The
     in-row link fields stay behind (the linked table reads them,
-    :func:`kg.link.linked_from_spans`)."""
+    :func:`kg.link.linked_from_spans`). ``SnapshotKg`` commits it per
+    snapshot and the stream per micro-batch; the batch build commits only
+    ``extract``, so a reader of its mentions calls this on
+    ``pipe.table("extract")``."""
     return (extract.select("url", F.explode("spans").alias("__m"))
             .select("url", "__m.start", "__m.end", "__m.label",
                     "__m.surface", "__m.maximal"))

@@ -7,11 +7,13 @@ resumable mid-pipeline after a failure.
 Storage: unpartitioned parquet directories with Spark's atomic
 ``_SUCCESS`` commit marker (swap for Iceberg ``writeTo(...).createOrReplace()``
 + snapshot-existence checks on a cluster with an Iceberg catalog — the
-driver logic is identical; no Iceberg runtime is bundled). Every
-table has the column order of its ``SnapshotKg`` counterpart
-(``mentions``/``triples`` as ``<table>/snap=K``, ``edges`` as
+driver logic is identical; no Iceberg runtime is bundled). The
+standard build commits ``extract``, ``triples``, ``aliases``, ``nodes``
+and ``edges``; each has the column order of its ``SnapshotKg``
+counterpart (``triples`` as ``triples/snap=K``, ``edges`` as
 ``edges/vK``), so the batch build and the incremental store commit one
-table shape.
+table shape. Flat mentions are not committed: a reader explodes them
+from ``extract`` with ``kg.extract.mentions_from_spans``.
 
 Metrics rows: (stage, partition_id, rows_out, wall_ms, run_id) appended
 under ``<base>/_metrics``, one file per stage run written under a hidden
@@ -21,7 +23,7 @@ and the audit trail the north rule requires.
 The full pipeline::
 
     pages --extract+annotate+link+triples--> extract
-          --explode--> mentions / triples
+          --explode--> triples
     extract --explode linked spans--> canonicalize --> alias_map
             --materialize--> nodes / edges
 """
@@ -287,7 +289,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                       link_graph: bool = False,
                       host_rank: bool = False,
                       host_rank_iters: int = 5) -> Pipeline:
-    """The standard 6-stage KG build over a pages table. ``catalog``: an
+    """The standard 5-stage KG build over a pages table. ``catalog``: an
     Iceberg namespace to write catalog tables into instead of parquet
     directories (see ``Pipeline``).
 
@@ -295,13 +297,14 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     Arrow-batched Python pass (``extract_annotate_stage``): the extract
     table carries a ``spans`` array column whose spans already hold their
     ``maximal`` flag and link winner, and a ``triples`` array column of
-    the document's triples over its maximal spans. The mentions and
-    triples stages reduce to JVM-only explodes (``mentions_from_spans``,
-    ``triples_from_spans``), and the linked spans are never committed:
-    the ``aliases`` and ``nodes`` stages aggregate ``linked_from_spans``
-    over the extract table, whose scan reads only its ``url`` and
-    ``spans`` columns. So the text corpus crosses the JVM<->Python
-    boundary once and no stage joins documents or mentions.
+    the document's triples over its maximal spans. The triples stage
+    reduces to a JVM-only explode (``triples_from_spans``). Neither the
+    flat mentions nor the linked spans are committed: a reader explodes
+    them from the extract table (``mentions_from_spans``,
+    ``linked_from_spans``), and the ``aliases`` and ``nodes`` stages
+    aggregate ``linked_from_spans`` over it, a scan that reads only its
+    ``url`` and ``spans`` columns. So the text corpus crosses the
+    JVM<->Python boundary once and no stage joins documents or mentions.
     The relational composition of the same tables (separate annotate,
     ``link_mentions``, ``maximal_mentions``, ``pattern_triples``) is the
     test oracle in ``tests/kg_oracle.py``.
@@ -335,8 +338,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     (already output-bounded), so the stage costs iterations over a
     SMALL table, never the corpus."""
     from quickner_spark.kg.canonicalize import canonicalize_aliases
-    from quickner_spark.kg.extract import (extract_annotate_stage,
-                                           mentions_from_spans)
+    from quickner_spark.kg.extract import extract_annotate_stage
     from quickner_spark.kg.link import linked_from_spans
     from quickner_spark.kg.triples import triples_from_spans
     from quickner_spark.operators.annotate import normalize_gazetteer
@@ -359,9 +361,6 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
         return extract_annotate_stage(_read_pages(spark), gaz,
                                       extractor=extractor,
                                       predicates=predicates)
-
-    def s_mentions(spark, ctx):
-        return mentions_from_spans(ctx["pipeline"].table("extract"))
 
     def s_triples(spark, ctx):
         # the fused pass found each document's triples over its maximal
@@ -405,7 +404,6 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     # unpartitioned tables in the column order of SnapshotKg's
     stages = [
         Stage("extract", s_extract),
-        Stage("mentions", s_mentions),
         Stage("triples", s_triples),
         Stage("aliases", s_aliases),
         Stage("nodes", s_nodes),

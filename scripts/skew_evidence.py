@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from quickner_spark.kg import corpus  # noqa: E402
+from quickner_spark.kg.extract import mentions_from_spans  # noqa: E402
 from quickner_spark.kg.pipeline import build_kg_pipeline  # noqa: E402
 from quickner_spark.operators import indexes as ix  # noqa: E402
 from quickner_spark.session import get_spark  # noqa: E402
@@ -85,7 +86,7 @@ def run_variant(spark, name: str, **corpus_kw) -> dict:
     pipe.run()
     wall = round(time.time() - t0, 1)
 
-    mentions = pipe.table("mentions")
+    mentions = mentions_from_spans(pipe.table("extract"))
     hot = (mentions.groupBy("surface").count()
            .orderBy(F.desc("count")).limit(1).first())
     n_mentions = mentions.count()

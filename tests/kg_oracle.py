@@ -77,15 +77,15 @@ def attach_nxt(mentions: DataFrame, documents: DataFrame, predicates,
 
 def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
                           predicates, extractor=None) -> Pipeline:
-    """``build_kg_pipeline`` with its three doc-local stages (extract,
-    mentions, triples) swapped for the relational chain, plus a committed
-    relational ``linked`` stage. Stage names and layouts are
-    production's, and so is the ``edges`` stage. The extract table lacks
-    the fused ``spans`` and ``triples`` columns, the mentions table the
-    fused ``maximal`` column; so ``aliases`` and ``nodes``, which
-    production aggregates from the extract's linked spans, aggregate the
-    ``linked`` stage here, and a difference anywhere comes from the
-    doc-local stages."""
+    """``build_kg_pipeline`` with its two doc-local stages (extract,
+    triples) swapped for the relational chain, plus committed relational
+    ``mentions`` and ``linked`` stages after ``extract``. Stage names and
+    layouts are production's, and so is the ``edges`` stage. The extract
+    table lacks the fused ``spans`` and ``triples`` columns, and the
+    mentions table the fused ``maximal`` column; so the ``mentions`` and
+    ``linked`` stages stand in for production's explodes of the extract,
+    ``aliases`` and ``nodes`` aggregate the ``linked`` stage here, and a
+    difference anywhere comes from the doc-local stages."""
     gaz = normalize_gazetteer(gazetteer, case_sensitive=False)
     predicates = tuple(predicates)
 
@@ -120,12 +120,13 @@ def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
                   .agg(F.count("*").alias("n")))
         return nodes_from_counts(counts, p.table("aliases"))
 
-    oracle = {"extract": s_extract, "mentions": s_mentions,
-              "triples": s_triples, "aliases": s_aliases, "nodes": s_nodes}
+    oracle = {"extract": s_extract, "triples": s_triples,
+              "aliases": s_aliases, "nodes": s_nodes}
     pipe = build_kg_pipeline(spark, base_dir, pages_path, gazetteer,
                              predicates, extractor=extractor)
     for stage in pipe.stages:
         stage.fn = oracle.get(stage.name, stage.fn)
-    at = [s.name for s in pipe.stages].index("mentions") + 1
-    pipe.stages.insert(at, Stage("linked", s_linked))
+    at = [s.name for s in pipe.stages].index("extract") + 1
+    pipe.stages[at:at] = [Stage("mentions", s_mentions),
+                          Stage("linked", s_linked)]
     return pipe

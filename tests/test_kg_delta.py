@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
 from quickner_spark.kg.delta import SnapshotKg, snapshot_delta
+from quickner_spark.kg.extract import mentions_from_spans
 from quickner_spark.kg.pipeline import build_kg_pipeline
 
 N_DOCS = 120
@@ -116,11 +117,12 @@ def test_snap0_matches_batch_pipeline(spark, store, snapshots, gaz,
                           snapshots["a"], gaz, corpus.PREDICATES)
     p.run()
     m0 = (spark.read.parquet(f"{kg.base}/mentions/snap=0"))
-    assert _row_set(m0) == _row_set(p.table("mentions"))
+    batch_m = mentions_from_spans(p.table("extract"))
+    assert _row_set(m0) == _row_set(batch_m)
+    assert batch_m.dtypes == m0.dtypes
     # one table shape: the batch tables carry the store's columns, in
     # the store's order, with its types
-    for table, stored in (("mentions", "mentions/snap=0"),
-                          ("triples", "triples/snap=0"),
+    for table, stored in (("triples", "triples/snap=0"),
                           ("edges", "edges/v0")):
         assert (spark.read.parquet(p.path(table)).dtypes
                 == spark.read.parquet(f"{kg.base}/{stored}").dtypes), table
@@ -149,7 +151,7 @@ def test_delta_current_mentions_equal_full_rebuild(store, rebuild):
     kg, _, _ = store
     cols = ["url", "start", "end", "label", "surface", "maximal"]
     assert _row_set(kg.current_mentions(), cols) == \
-        _row_set(rebuild.table("mentions"), cols)
+        _row_set(mentions_from_spans(rebuild.table("extract")), cols)
 
 
 def test_asof_views_reproduce_earlier_snapshot(spark, store, snapshots,
@@ -163,7 +165,7 @@ def test_asof_views_reproduce_earlier_snapshot(spark, store, snapshots,
     p.run()
     mcols = ["url", "start", "end", "label", "surface", "maximal"]
     assert _row_set(kg.current_mentions(snap=0), mcols) == \
-        _row_set(p.table("mentions"), mcols)
+        _row_set(mentions_from_spans(p.table("extract")), mcols)
     tcols = ["url", "subj", "pred", "obj", "subj_start", "obj_start"]
     assert _row_set(kg.current_triples(snap=0), tcols) == \
         _row_set(p.table("triples"), tcols)
@@ -389,7 +391,6 @@ def test_case_sensitive_mixed_case_gazetteer(spark, tmp_path):
     overlaps no lowered document token and scores log1p(100) + 0."""
     import math
 
-    from quickner_spark.kg.extract import mentions_from_spans
     from quickner_spark.kg.link import (alias_table_from_gazetteer,
                                         link_mentions)
 

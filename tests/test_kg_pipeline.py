@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from quickner_spark.kg import corpus
+from quickner_spark.kg.extract import mentions_from_spans
 from quickner_spark.kg.link import linked_from_spans
 from quickner_spark.kg.pipeline import build_kg_pipeline
 from tests.kg_oracle import extract_stage
@@ -49,10 +50,11 @@ def test_extraction_byte_identical(spark, pages_path):
 
 
 def test_pipeline_all_stages_ran(pipe):
-    for stage in ("extract", "mentions", "triples", "aliases", "nodes",
-                  "edges"):
+    for stage in ("extract", "triples", "aliases", "nodes", "edges"):
         assert pipe.table(stage).count() > 0
-    # the linked spans are read from extract, never committed
+    # the mentions and linked spans are read from extract, never committed
+    assert mentions_from_spans(pipe.table("extract")).count() > 0
+    assert not os.path.exists(pipe.path("mentions"))
     assert linked_from_spans(pipe.table("extract")).count() > 0
     assert not os.path.exists(pipe.path("linked"))
 
@@ -94,14 +96,14 @@ def test_resumability_skips_completed_stages(spark, pipe):
 def test_metrics_lineage_rows(pipe):
     m = pipe.metrics()
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert {"extract", "mentions", "triples"} <= stages
+    assert {"extract", "triples", "aliases", "nodes", "edges"} <= stages
     cols = set(m.columns)
     assert {"stage", "partition_id", "rows_out", "wall_ms", "run_id"} <= cols
     # per-partition totals reconcile with table counts
-    total = (m.where(F.col("stage") == "mentions")
+    total = (m.where(F.col("stage") == "triples")
              .groupBy("stage").agg(F.sum("rows_out").alias("n"))
              .first()["n"])
-    assert total == pipe.table("mentions").count()
+    assert total == pipe.table("triples").count()
 
 
 def test_metrics_with_file_scheme_base(spark, pages_path, tmp_path):
@@ -114,9 +116,9 @@ def test_metrics_with_file_scheme_base(spark, pages_path, tmp_path):
     p.run()
     m = p.metrics()
     assert m.count() > 0
-    total = (m.where(F.col("stage") == "mentions")
+    total = (m.where(F.col("stage") == "triples")
              .agg(F.sum("rows_out")).first()[0])
-    assert total == p.table("mentions").count()
+    assert total == p.table("triples").count()
 
 
 def test_metrics_write_is_atomic(spark, monkeypatch, tmp_path):
@@ -159,7 +161,7 @@ def test_table_reads_back_with_written_schema(spark, pipe, job_ids):
     """table() reads a stage this Pipeline wrote under the schema it was
     written with: no schema-inference job, and the columns, types and
     order of an inferred read."""
-    for st in ("mentions", "triples", "edges"):
+    for st in ("extract", "triples", "edges"):
         before = job_ids()
         got = pipe.table(st)
         assert not job_ids() - before, st
@@ -383,7 +385,11 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
     for st, cols in (("extract", ["url", "text"]), ("mentions", cols5),
                      ("triples", None), ("aliases", None), ("nodes", None),
                      ("edges", None)):
-        a_df, b_df = pipe.table(st), p2.table(st)
+        # the fused build's mentions are an explode of extract, the
+        # oracle's a committed relational stage
+        a_df = (mentions_from_spans(pipe.table("extract"))
+                if st == "mentions" else pipe.table(st))
+        b_df = p2.table(st)
         if cols is None:  # the whole table: same columns on both sides
             cols = sorted(a_df.columns)
             assert sorted(b_df.columns) == cols, st
@@ -410,7 +416,8 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
     # the fused stage's in-row maximal flag must equal the anti-join
     # operator's longest-match decision exactly
     from quickner_spark.operators.annotate import maximal_mentions
-    flagged = {tuple(r) for r in pipe.table("mentions")
+    fused_m = mentions_from_spans(pipe.table("extract"))
+    flagged = {tuple(r) for r in fused_m
                .where("maximal").select(*cols5).collect()}
     op = {tuple(r) for r in
           maximal_mentions(p2.table("mentions"), id_col="url")
@@ -422,7 +429,7 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
     # equal the fused in-row triples table, as multisets
     from quickner_spark.kg.triples import pattern_triples, window_triples
     from tests.kg_oracle import attach_nxt
-    mx = pipe.table("mentions").where("maximal").drop("maximal")
+    mx = fused_m.where("maximal").drop("maximal")
     ext = pipe.table("extract")
     tcols = ["url", "subj", "pred", "obj", "subj_start", "obj_start"]
     pt = bag(pattern_triples(mx, ext, corpus.PREDICATES, id_col="url"),
@@ -436,8 +443,7 @@ def _inrow_vs_relational(spark, gaz, texts, case_sensitive=False):
     """Linked rows of the fused in-row link and of link_mentions over the
     same extract, both as sorted lists of (url, start, end, surface,
     canonical_id, label, score)."""
-    from quickner_spark.kg.extract import (extract_annotate_stage,
-                                           mentions_from_spans)
+    from quickner_spark.kg.extract import extract_annotate_stage
     from quickner_spark.kg.link import (alias_table_from_gazetteer,
                                         link_mentions, linked_from_spans)
     from quickner_spark.operators.annotate import normalize_gazetteer
@@ -504,8 +510,7 @@ def _inrow_vs_window(spark, gaz, texts, predicates, case_sensitive=False):
     provenance rows, after asserting equal column names and types."""
     from collections import Counter
 
-    from quickner_spark.kg.extract import (extract_annotate_stage,
-                                           mentions_from_spans)
+    from quickner_spark.kg.extract import extract_annotate_stage
     from quickner_spark.kg.triples import triples_from_spans, window_triples
     from quickner_spark.operators.annotate import (maximal_mentions,
                                                    normalize_gazetteer)
@@ -582,9 +587,10 @@ def test_zero_hit_corpus_commits_readable_stages(spark, pipe, tmp_path):
     status = p.run()
     assert set(status.values()) == {"ran"}, status
 
-    def table(pl, st):  # the linked spans are an explode, not a stage
-        return (linked_from_spans(pl.table("extract")) if st == "linked"
-                else pl.table(st))
+    def table(pl, st):  # mentions and linked spans are explodes
+        explode = {"mentions": mentions_from_spans,
+                   "linked": linked_from_spans}.get(st)
+        return explode(pl.table("extract")) if explode else pl.table(st)
 
     for st in ("extract", "mentions", "linked", "triples", "aliases",
                "nodes", "edges"):
@@ -640,7 +646,7 @@ def test_empty_predicates_fused_pipeline(spark, pages_path, tmp_path):
                           predicates=())
     status = p.run()
     assert all(v == "ran" for v in status.values()), status
-    m = p.table("mentions")
+    m = mentions_from_spans(p.table("extract"))
     assert m.count() > 0
     assert "nxt" not in m.columns
     t = p.table("triples")
