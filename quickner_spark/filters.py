@@ -1,16 +1,16 @@
 """Row validity filters (F1-F5) — reference parity + Spark SQL predicates.
 
 Port of ``Filters`` (quickner-core/src/config.rs:87-188) and the character
-predicates (quickner-core/src/utils.rs:19-78). Each filter exists twice with
-identical semantics:
+predicates (quickner-core/src/utils.rs:19-78). The reference applies
+``Filters::is_valid`` row-by-row at ingest (quickner.rs:505-514 / 543-547);
+here each filter exists twice with identical semantics:
 
-* ``Filters.is_valid(text)`` — pure Python, used inside UDF code paths and
-  unit tests (the reference applies it row-by-row at ingest,
-  quickner.rs:505-514 / 543-547).
 * ``Filters.spark_predicate(col)`` — a JVM-side Column expression so
   Catalyst can push the predicate into the Parquet/Iceberg scan. No Python
   is involved at scan time; ``.explain`` shows the conditions in
   PushedFilters / the scan Filter node.
+* ``Filters.duckdb_predicate(col)`` — the same predicate as DuckDB SQL,
+  for the oracle checks.
 
 Reference quirks replicated:
 
@@ -41,8 +41,6 @@ SPECIAL_CHARACTERS = frozenset(
      '|', '~', '`']
 )
 
-_ASCII_DIGITS = frozenset("0123456789")
-
 
 def _regex_char_class(chars: frozenset[str] | set[str]) -> str:
     """Build a safe [...] character class for Java/RE2/Python regex."""
@@ -68,28 +66,10 @@ class Filters:
         accept = set(self.accept_special_characters or "")
         self._special = frozenset(SPECIAL_CHARACTERS - accept)
 
-    # -- pure-Python path (config.rs:157-188) -------------------------------
-    def is_valid(self, text: str) -> bool:
-        if not text:
-            return False
-        if self.alphanumeric and all(c.isalnum() for c in text):
-            return False
-        if self.punctuation and any(c in ASCII_PUNCTUATION for c in text):
-            return False
-        if self.numbers and any(c in _ASCII_DIGITS for c in text):
-            return False
-        if self.special_characters and any(c in self._special for c in text):
-            return False
-        nbytes = len(text.encode("utf-8"))
-        if self.min_length >= 0 and nbytes < self.min_length:
-            return False
-        if self.max_length >= 0 and nbytes > self.max_length:
-            return False
-        return True
-
     # -- Spark path (identical semantics, JVM-side) --------------------------
     def spark_predicate(self, col):
-        """Column predicate equivalent to ``is_valid`` for Catalyst pushdown.
+        """Column predicate equivalent to the reference's ``is_valid``
+        (config.rs:157-188) for Catalyst pushdown.
 
         Unicode note: Rust ``char::is_alphanumeric`` ≈ Java ``[\\p{L}\\p{N}]``
         (both are Unicode Alphabetic+Number); edge-case code points may

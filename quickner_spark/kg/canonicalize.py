@@ -6,14 +6,14 @@ alias per component.
 
 Contract: the alias set is GAZETTEER-BOUNDED. Both callers (the batch
 pipeline's ``aliases`` stage and ``SnapshotKg.update``) canonicalize the
-distinct linked surfaces, and every surface is a gazetteer name, so the
-set never grows with the corpus. It is collected once and clustered on the
-driver in pure Python: an AllPairs prefix filter bounds the candidate
-pairs (never O(n²)), candidates verify exactly, and a min-alias union-find
-labels the components. The result is a local relation. A Spark similarity
-join here was a multi-job plan whose cost was all per-job floor at
-gazetteer size; it lives on in ``tests/canon_oracle.py`` as the
-differential oracle.
+surfaces of their committed ``linked_stats`` count table, and every
+surface is a gazetteer name, so the set never grows with the corpus. It
+is collected once and clustered on the driver in pure Python: an AllPairs
+prefix filter bounds the candidate pairs (never O(n²)), candidates verify
+exactly, and a min-alias union-find labels the components. The result is
+a local relation. A Spark similarity join here was a multi-job plan whose
+cost was all per-job floor at gazetteer size; it lives on in
+``tests/canon_oracle.py`` as the differential oracle.
 
 Lowercasing is Python ``str.lower`` (the Spark form used the JVM's, which
 differs only on code points that gained case pairs in Unicode 14; pipeline
@@ -92,24 +92,23 @@ def canonical_map(aliases: Iterable[str | None], n: int = 3,
     return {a: find(a) for a in names}
 
 
-def canonicalize_aliases(aliases: DataFrame, n: int = 3,
-                         threshold_pct: int = 60, col: str = "alias") -> DataFrame:
+def canonicalize_aliases(aliases: DataFrame) -> DataFrame:
     """aliases -> (alias, canonical_id), one row per distinct alias:
-    connected components over the trigram-Jaccard similarity graph;
-    canonical_id = lexicographic min alias of the component; singletons
-    map to themselves.
+    connected components over the trigram-Jaccard (>= 60%) similarity
+    graph; canonical_id = lexicographic min alias of the component;
+    singletons map to themselves.
 
-    The ``col`` column is collected to the driver (one job; none for a
-    local relation), so ``aliases`` must be a bounded SET — e.g. the
-    distinct linked surfaces, which the gazetteer bounds. Clustering runs
-    in pure Python (:func:`canonical_map`); the result is a local
-    relation (``LocalTableScan``)."""
+    The ``alias`` column is collected to the driver (one job; none for a
+    local relation), so ``aliases`` must be bounded — e.g. the surfaces
+    of a ``linked_stats`` table, which the gazetteer bounds; a repeated
+    alias yields one row. Clustering runs in pure Python
+    (:func:`canonical_map`); the result is a local relation
+    (``LocalTableScan``)."""
     import pyarrow as pa
 
-    cmap = canonical_map((r[0] for r in aliases.select(col).collect()),
-                         n, threshold_pct)
+    cmap = canonical_map(r[0] for r in aliases.select("alias").collect())
     keys = sorted(cmap, key=lambda a: (a is not None, a or ""))
     return aliases.sparkSession.createDataFrame(pa.Table.from_arrays(
         [pa.array(keys, pa.string()),
          pa.array([cmap[a] for a in keys], pa.string())],
-        names=[col, "canonical_id"]))
+        names=["alias", "canonical_id"]))

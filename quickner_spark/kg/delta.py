@@ -33,17 +33,20 @@ embarrassingly parallel per document, so the correct operating mode is:
    ``triple_stats(subj, pred, obj, n)``, both bounded by the gazetteer /
    predicate vocabulary, not the corpus — updated as
    ``old + counts(new rows) - counts(replaced urls' old rows)`` in ONE
-   aggregation: the old counts, the new rows at +1 and the replaced rows
-   at -1 are unioned and summed by a single groupBy (one exchange). The
-   subtraction lists only the replaced urls' ``snap=<old>`` partitions
+   aggregation (``kg.pipeline.merge_counts``): the old counts, the new
+   rows at +1 and the replaced rows at -1 are unioned and summed by a
+   single groupBy (one exchange). The batch build commits its
+   ``linked_stats`` with the same function, so snapshot 0's equals it.
+   The subtraction lists only the replaced urls' ``snap=<old>`` partitions
    of ``extract`` (for the linked spans) and ``triples`` and keeps their
    rows by a (url, snap) semi-join, touching candidates only. The
    triples are subtracted from ``triples``, not ``extract``: extract
    partitions written by older versions have no ``triples`` column.
    Alias canonicalization reruns on the driver over the (tiny,
-   gazetteer-bounded) surviving surface set on every update — the
-   batch pipeline's one derivation; the canonical map is a pure function
-   of that set, so an unchanged set yields the same map.
+   gazetteer-bounded) ``linked_stats`` surfaces on every update, and
+   nodes derive from ``linked_stats`` and the alias map — the batch
+   build's derivation, over the same table; the canonical map is a pure
+   function of the surface set, so an unchanged set yields the same map.
    Every table the update reads back is read under its known schema, so
    no read launches a schema-inference job.
 4. **Commit = one pointer write.** Every versioned artifact for snapshot
@@ -88,8 +91,9 @@ from quickner_spark.kg.extract import (extract_annotate_stage,
 # traced snapshot_update runs.
 from quickner_spark.kg.link import (alias_table_from_gazetteer,  # noqa: F401
                                     link_mentions, linked_from_spans)
-from quickner_spark.kg.pipeline import (_read_hidden_dir, _read_text,
-                                        _write_text, edges_from_counts,
+from quickner_spark.kg.pipeline import (_hadoop_path, _read_hidden_dir,
+                                        _read_text, _write_text,
+                                        edges_from_counts, merge_counts,
                                         nodes_from_counts)
 from quickner_spark.kg.triples import (triples_from_spans,  # noqa: F401
                                        window_triples)
@@ -194,7 +198,6 @@ class SnapshotKg:
                 raise ValueError(
                     f"snapshot {snap} outside committed range 0..{k}")
             k = int(snap)
-            from quickner_spark.kg.pipeline import _hadoop_path
             fs, path = _hadoop_path(self.spark, self._v(name, k))
             if not fs.exists(path):
                 raise ValueError(
@@ -288,19 +291,19 @@ class SnapshotKg:
         # 3. merge the cumulative aggregate-grain count tables
         lkeys, tkeys = ["surface", "label"], ["subj", "pred", "obj"]
         if prev is None:
-            lstats = self._merge(linked, lkeys)
-            tstats = self._merge(triples, tkeys)
+            lstats = merge_counts(linked, lkeys)
+            tstats = merge_counts(triples, tkeys)
         else:
             replaced = (changes.where(F.col("status") == "changed")
                         .select("url", F.col("old_snap").alias("snap")))
             snaps = sorted(counts["old_snaps"])
             old_ext = self._minus("extract", ext.schema, replaced, snaps)
-            lstats = self._merge(
+            lstats = merge_counts(
                 linked, lkeys,
                 spark.read.schema(_LINKED_STATS).parquet(
                     self._v("linked_stats", prev)),
                 None if old_ext is None else linked_from_spans(old_ext))
-            tstats = self._merge(
+            tstats = merge_counts(
                 triples, tkeys,
                 spark.read.schema(_TRIPLE_STATS).parquet(
                     self._v("triple_stats", prev)),
@@ -371,25 +374,6 @@ class SnapshotKg:
                 .option("basePath", root)
                 .parquet(*[f"{root}/snap={s}" for s in snaps])
                 .join(replaced, ["url", "snap"], "left_semi"))
-
-    @staticmethod
-    def _merge(plus: DataFrame, keys, old: DataFrame | None = None,
-               minus: DataFrame | None = None) -> DataFrame:
-        """old + counts(plus) - counts(minus) on the aggregate grain, as
-        ONE aggregation (one exchange): every ``plus`` row counts +1,
-        every ``minus`` row -1, and a single groupBy sums them with the
-        ``old`` counts. Rows that reach n == 0 disappear (a surface whose
-        last mention was replaced must not survive into the alias set).
-        n < 0 is impossible when the subtraction reads the same rows the
-        addition once counted."""
-        rows = plus.select(*keys, F.lit(1).cast("long").alias("n"))
-        if old is not None:
-            rows = rows.unionByName(old)
-        if minus is not None:
-            rows = rows.unionByName(
-                minus.select(*keys, F.lit(-1).cast("long").alias("n")))
-        return (rows.groupBy(*keys).agg(F.sum("n").alias("n"))
-                .where(F.col("n") > 0))
 
     def _log_update(self, k: int, pages_in: int, changed: int,
                     committed: bool, wall_ms: int) -> None:
@@ -473,7 +457,6 @@ class SnapshotKg:
         k = self.snap()
         if k is None:
             raise ValueError(f"no committed snapshot under {self.base}")
-        from quickner_spark.kg.pipeline import _hadoop_path
 
         cur_ptr = self.manifest().select("url", "snap")
         for table in ("mentions", "triples", "extract"):

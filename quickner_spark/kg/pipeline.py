@@ -8,12 +8,13 @@ Storage: unpartitioned parquet directories with Spark's atomic
 ``_SUCCESS`` commit marker (swap for Iceberg ``writeTo(...).createOrReplace()``
 + snapshot-existence checks on a cluster with an Iceberg catalog — the
 driver logic is identical; no Iceberg runtime is bundled). The
-standard build commits ``extract``, ``triples``, ``aliases``, ``nodes``
-and ``edges``; each has the column order of its ``SnapshotKg``
-counterpart (``triples`` as ``triples/snap=K``, ``edges`` as
-``edges/vK``), so the batch build and the incremental store commit one
-table shape. Flat mentions are not committed: a reader explodes them
-from ``extract`` with ``kg.extract.mentions_from_spans``.
+standard build commits ``extract``, ``triples``, ``linked_stats``,
+``aliases``, ``nodes`` and ``edges``; each has the column order of its
+``SnapshotKg`` counterpart (``triples`` as ``triples/snap=K``,
+``linked_stats`` as ``linked_stats/vK``, ``edges`` as ``edges/vK``), so
+the batch build and the incremental store commit one table shape. Flat
+mentions are not committed: a reader explodes them from ``extract`` with
+``kg.extract.mentions_from_spans``.
 
 Metrics rows: (stage, partition_id, rows_out, wall_ms, run_id) appended
 under ``<base>/_metrics``, one file per stage run written under a hidden
@@ -24,8 +25,9 @@ The full pipeline::
 
     pages --extract+annotate+link+triples--> extract
           --explode--> triples
-    extract --explode linked spans--> canonicalize --> alias_map
-            --materialize--> nodes / edges
+    extract --explode linked spans, count--> linked_stats
+    linked_stats --canonicalize surfaces--> aliases
+    linked_stats + aliases --> nodes;  triples + aliases --> edges
 """
 
 from __future__ import annotations
@@ -38,8 +40,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["Stage", "Pipeline", "build_kg_pipeline", "nodes_from_counts",
-           "edges_from_counts"]
+__all__ = ["Stage", "Pipeline", "build_kg_pipeline", "merge_counts",
+           "nodes_from_counts", "edges_from_counts"]
 
 
 @dataclass
@@ -249,16 +251,35 @@ class Pipeline:
         return _read_hidden_dir(self.spark, f"{self.base}/_metrics")
 
 
+def merge_counts(plus: DataFrame, keys, old: DataFrame | None = None,
+                 minus: DataFrame | None = None) -> DataFrame:
+    """old + counts(plus) - counts(minus) on the aggregate grain ``keys``,
+    as ONE aggregation (one exchange): every ``plus`` row counts +1,
+    every ``minus`` row -1, and a single groupBy sums them with the
+    ``old`` counts ``(*keys, n)``. Rows that reach n == 0 disappear (a
+    surface whose last mention was replaced must not survive into the
+    alias set). n < 0 is impossible when the subtraction reads the same
+    rows the addition once counted. With ``plus`` alone it is the plain
+    count the batch build commits."""
+    rows = plus.select(*keys, F.lit(1).cast("long").alias("n"))
+    if old is not None:
+        rows = rows.unionByName(old)
+    if minus is not None:
+        rows = rows.unionByName(
+            minus.select(*keys, F.lit(-1).cast("long").alias("n")))
+    return (rows.groupBy(*keys).agg(F.sum("n").alias("n"))
+            .where(F.col("n") > 0))
+
+
 def nodes_from_counts(surface_counts: DataFrame,
                       amap: DataFrame) -> DataFrame:
     """KG nodes from ``(surface, label, n)`` mention counts and the alias
     map ``(alias, canonical_id)``: one node per alias-cluster canonical
     (NOT the link-stage candidate id) with its min label, sorted alias
     list and total mention count. The counts are gazetteer-bounded, so
-    the join and the canonical regroup run on hundreds of rows — the
-    batch pipeline passes a map-side pre-aggregate of the linked spans
-    (7x over join-then-aggregate at 114.7M linked rows), ``SnapshotKg``
-    its merged cumulative stats."""
+    the join and the canonical regroup run on hundreds of rows. Both the
+    batch build and ``SnapshotKg`` pass their committed ``linked_stats``
+    (``merge_counts`` over the linked spans)."""
     return (surface_counts
             .join(amap, surface_counts["surface"] == amap["alias"])
             .groupBy("canonical_id")
@@ -289,7 +310,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
                       link_graph: bool = False,
                       host_rank: bool = False,
                       host_rank_iters: int = 5) -> Pipeline:
-    """The standard 5-stage KG build over a pages table. ``catalog``: an
+    """The standard 6-stage KG build over a pages table. ``catalog``: an
     Iceberg namespace to write catalog tables into instead of parquet
     directories (see ``Pipeline``).
 
@@ -301,17 +322,21 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     reduces to a JVM-only explode (``triples_from_spans``). Neither the
     flat mentions nor the linked spans are committed: a reader explodes
     them from the extract table (``mentions_from_spans``,
-    ``linked_from_spans``), and the ``aliases`` and ``nodes`` stages
-    aggregate ``linked_from_spans`` over it, a scan that reads only its
-    ``url`` and ``spans`` columns. So the text corpus crosses the
-    JVM<->Python boundary once and no stage joins documents or mentions.
+    ``linked_from_spans``). The ``linked_stats`` stage is the one stage
+    that reads the linked spans: it counts them per ``(surface, label)``
+    with ``merge_counts``, a scan that reads only ``extract``'s ``url``
+    and ``spans`` columns, into a gazetteer-bounded table. So the text
+    corpus crosses the JVM<->Python boundary once and no stage joins
+    documents or mentions.
     The relational composition of the same tables (separate annotate,
     ``link_mentions``, ``maximal_mentions``, ``pattern_triples``) is the
     test oracle in ``tests/kg_oracle.py``.
 
-    The ``aliases`` stage clusters the distinct linked surfaces — a
-    gazetteer-bounded set — on the driver (``canonicalize_aliases``) and
-    commits a local relation.
+    The ``aliases`` stage clusters the ``linked_stats`` surfaces on the
+    driver (``canonicalize_aliases``) and commits a local relation;
+    ``nodes`` is ``nodes_from_counts(linked_stats, aliases)``. Snapshot 0
+    of ``SnapshotKg`` commits the same ``linked_stats`` with the same
+    function and derives its aliases and nodes the same way.
 
     ``extractor``: deterministic ``bytes -> str | None`` for the extract
     stage (default ``kg.extract.extract_text``, the synthetic-corpus
@@ -367,18 +392,18 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
         # spans: a narrow explode
         return triples_from_spans(ctx["pipeline"].table("extract"))
 
+    def s_linked_stats(spark, ctx):
+        # the one read of the linked spans; gazetteer-bounded output
+        linked = linked_from_spans(ctx["pipeline"].table("extract"))
+        return merge_counts(linked, ["surface", "label"])
+
     def s_aliases(spark, ctx):
-        # the distinct surfaces are gazetteer-bounded: one aggregate job,
-        # then driver-side clustering into a local relation
-        aliases = (linked_from_spans(ctx["pipeline"].table("extract"))
-                   .select(F.col("surface").alias("alias")).distinct())
-        return canonicalize_aliases(aliases)
+        return canonicalize_aliases(ctx["pipeline"].table("linked_stats")
+                                    .select(F.col("surface").alias("alias")))
 
     def s_nodes(spark, ctx):
         p = ctx["pipeline"]
-        counts = (linked_from_spans(p.table("extract"))
-                  .groupBy("surface", "label").agg(F.count("*").alias("n")))
-        return nodes_from_counts(counts, p.table("aliases"))
+        return nodes_from_counts(p.table("linked_stats"), p.table("aliases"))
 
     def s_edges(spark, ctx):
         p = ctx["pipeline"]
@@ -405,6 +430,7 @@ def build_kg_pipeline(spark: SparkSession, base_dir: str,
     stages = [
         Stage("extract", s_extract),
         Stage("triples", s_triples),
+        Stage("linked_stats", s_linked_stats),
         Stage("aliases", s_aliases),
         Stage("nodes", s_nodes),
         Stage("edges", s_edges),

@@ -1,7 +1,6 @@
 """Graph primitives: connected components as an iterative DataFrame loop.
 
-GraphFrames is not assumed (gated import); the fallback is min-label
-propagation over the edge list:
+Connected components are min-label propagation over the edge list:
 
     comp(v) <- min(comp(v), min over neighbors u of comp(u))
 
@@ -370,20 +369,6 @@ def _driver_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return edges.sparkSession.createDataFrame(rows, schema)
 
 
-def _min_id_components(cc: DataFrame) -> DataFrame:
-    """Normalize a GraphFrames ``connectedComponents()`` result (id,
-    component) to this module's contract: component = MIN member node id,
-    in the node's own type. GraphFrames emits generated LONG component ids
-    (and for string vertex ids a type that doesn't even compare with the
-    node id), which would silently break consumers like
-    textops.dup_clusters whose keep-decision is ``cluster_id == doc_id``.
-    One aggregate plus a join keyed on the (small) component id set."""
-    rep = cc.groupBy("component").agg(F.min("id").alias("rep"))
-    return (cc.join(rep, "component")
-            .select(F.col("id").alias("node"),
-                    F.col("rep").alias("component")))
-
-
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 25,
                          driver_threshold: int = 100_000,
@@ -417,17 +402,6 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
             out = _driver_components(edges, src, dst)
             persisted.unpersist()
             return out
-    try:
-        from graphframes import GraphFrame  # type: ignore
-        vertices = (edges.select(F.col(src).alias("id"))
-                    .union(edges.select(F.col(dst).alias("id"))).distinct())
-        g = GraphFrame(vertices, edges.selectExpr(f"{src} as src", f"{dst} as dst"))
-        cc = g.connectedComponents()  # runs eagerly (internal checkpoints)
-        if persisted is not None:
-            persisted.unpersist()
-        return _min_id_components(cc)
-    except ImportError:
-        pass
 
     sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
            .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))))

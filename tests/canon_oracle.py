@@ -59,11 +59,11 @@ def canonicalize_aliases_spark(aliases: DataFrame, n: int = 3,
     similarity graph; canonical_id = lexicographic min alias of the
     component; singletons map to themselves."""
     edges = alias_similarity_edges(aliases, n, threshold_pct, col)
-    # connected_components materializes the edge list up front (count or
-    # GraphFrames checkpoint), so the shingle cache inside edges has done
-    # its job by the time it returns — release it here; `comp` no longer
-    # depends on it (driver path: createDataFrame; distributed path:
-    # localCheckpointed sym).
+    # connected_components materializes the edge list up front (its
+    # count), so the shingle cache inside edges has done its job by the
+    # time it returns — release it here; `comp` no longer depends on it
+    # (driver path: createDataFrame; distributed path: localCheckpointed
+    # sym).
     comp = connected_components(edges, "u", "v")
     release(edges)
     out = (aliases.select(F.col(col))

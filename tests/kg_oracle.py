@@ -15,11 +15,9 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from quickner_spark.kg.canonicalize import canonicalize_aliases
 from quickner_spark.kg.extract import extract_text
 from quickner_spark.kg.link import alias_table_from_gazetteer, link_mentions
-from quickner_spark.kg.pipeline import (Pipeline, Stage, build_kg_pipeline,
-                                        nodes_from_counts)
+from quickner_spark.kg.pipeline import Pipeline, Stage, build_kg_pipeline
 from quickner_spark.kg.triples import pattern_triples
 from quickner_spark.operators.annotate import (annotate_mentions,
                                                maximal_mentions,
@@ -80,11 +78,12 @@ def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
     """``build_kg_pipeline`` with its two doc-local stages (extract,
     triples) swapped for the relational chain, plus committed relational
     ``mentions`` and ``linked`` stages after ``extract``. Stage names and
-    layouts are production's, and so is the ``edges`` stage. The extract
-    table lacks the fused ``spans`` and ``triples`` columns, and the
-    mentions table the fused ``maximal`` column; so the ``mentions`` and
-    ``linked`` stages stand in for production's explodes of the extract,
-    ``aliases`` and ``nodes`` aggregate the ``linked`` stage here, and a
+    layouts are production's, and so are the ``aliases``, ``nodes`` and
+    ``edges`` stages. The extract table lacks the fused ``spans`` and
+    ``triples`` columns, and the mentions table the fused ``maximal``
+    column; so the ``mentions`` and ``linked`` stages stand in for
+    production's explodes of the extract, ``linked_stats`` is a plain
+    ``(surface, label)`` count over the ``linked`` stage here, and a
     difference anywhere comes from the doc-local stages."""
     gaz = normalize_gazetteer(gazetteer, case_sensitive=False)
     predicates = tuple(predicates)
@@ -109,19 +108,12 @@ def build_oracle_pipeline(spark, base_dir: str, pages_path: str, gazetteer,
             maximal_mentions(p.table("mentions"), id_col="url"),
             p.table("extract"), predicates, id_col="url")
 
-    def s_aliases(spark, ctx):
-        return canonicalize_aliases(ctx["pipeline"].table("linked")
-                                    .selectExpr("surface AS alias")
-                                    .distinct())
-
-    def s_nodes(spark, ctx):
-        p = ctx["pipeline"]
-        counts = (p.table("linked").groupBy("surface", "label")
-                  .agg(F.count("*").alias("n")))
-        return nodes_from_counts(counts, p.table("aliases"))
+    def s_linked_stats(spark, ctx):
+        return (ctx["pipeline"].table("linked").groupBy("surface", "label")
+                .agg(F.count("*").alias("n")))
 
     oracle = {"extract": s_extract, "triples": s_triples,
-              "aliases": s_aliases, "nodes": s_nodes}
+              "linked_stats": s_linked_stats}
     pipe = build_kg_pipeline(spark, base_dir, pages_path, gazetteer,
                              predicates, extractor=extractor)
     for stage in pipe.stages:

@@ -66,21 +66,6 @@ def test_driver_threshold_picks_fast_path(spark):
     assert set(got.values()) == {"c000"}
 
 
-def test_min_id_components_normalizes_generated_ids(spark):
-    # GraphFrames emits generated LONG component ids; the contract is
-    # component = min member node id in the node's own type. Simulate its
-    # output shape and assert the normalizer restores the contract.
-    from quickner_spark.operators.graph import _min_id_components
-
-    cc = spark.createDataFrame(
-        [("doc9", 71001), ("doc2", 71001), ("doc5", 71001),
-         ("zzz", 3), ("aaa", 3)],
-        "id string, component long")
-    got = {r["node"]: r["component"] for r in _min_id_components(cc).collect()}
-    assert got == {"doc9": "doc2", "doc2": "doc2", "doc5": "doc2",
-                   "zzz": "aaa", "aaa": "aaa"}
-
-
 def test_sparse_convergence_check_matches_every_round(spark):
     # check_every=3 saves 2 join+count actions per skipped round; the
     # labeling must be identical to per-round checking (propagation past

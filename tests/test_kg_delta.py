@@ -123,9 +123,14 @@ def test_snap0_matches_batch_pipeline(spark, store, snapshots, gaz,
     # one table shape: the batch tables carry the store's columns, in
     # the store's order, with its types
     for table, stored in (("triples", "triples/snap=0"),
+                          ("linked_stats", "linked_stats/v0"),
                           ("edges", "edges/v0")):
         assert (spark.read.parquet(p.path(table)).dtypes
                 == spark.read.parquet(f"{kg.base}/{stored}").dtypes), table
+    # ... and one count: the store's snapshot-0 linked_stats is the batch
+    # build's
+    assert _row_set(p.table("linked_stats")) == \
+        _row_set(spark.read.parquet(f"{kg.base}/linked_stats/v0"))
 
 
 def test_delta_nodes_equal_full_rebuild(store, rebuild):
@@ -258,7 +263,7 @@ def test_update_after_compact(spark, store, snapshots, gaz):
 
 def test_surface_vanishes(spark, tmp_path):
     """A surface whose ONLY mention is replaced must leave the alias set,
-    nodes and edges entirely (the n > 0 filter in _merge)."""
+    nodes and edges entirely (the n > 0 filter in merge_counts)."""
     gaz = [("acme", "ORG"), ("globex", "ORG")]
     preds = ("acquired",)
 

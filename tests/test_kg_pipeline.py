@@ -50,7 +50,8 @@ def test_extraction_byte_identical(spark, pages_path):
 
 
 def test_pipeline_all_stages_ran(pipe):
-    for stage in ("extract", "triples", "aliases", "nodes", "edges"):
+    for stage in ("extract", "triples", "linked_stats", "aliases", "nodes",
+                  "edges"):
         assert pipe.table(stage).count() > 0
     # the mentions and linked spans are read from extract, never committed
     assert mentions_from_spans(pipe.table("extract")).count() > 0
@@ -96,7 +97,8 @@ def test_resumability_skips_completed_stages(spark, pipe):
 def test_metrics_lineage_rows(pipe):
     m = pipe.metrics()
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert {"extract", "triples", "aliases", "nodes", "edges"} <= stages
+    assert {"extract", "triples", "linked_stats", "aliases", "nodes",
+            "edges"} <= stages
     cols = set(m.columns)
     assert {"stage", "partition_id", "rows_out", "wall_ms", "run_id"} <= cols
     # per-partition totals reconcile with table counts
@@ -383,8 +385,8 @@ def test_fused_extract_annotate_row_identical(spark, pages_path, pipe,
 
     cols5 = ["url", "start", "end", "label", "surface"]
     for st, cols in (("extract", ["url", "text"]), ("mentions", cols5),
-                     ("triples", None), ("aliases", None), ("nodes", None),
-                     ("edges", None)):
+                     ("triples", None), ("linked_stats", None),
+                     ("aliases", None), ("nodes", None), ("edges", None)):
         # the fused build's mentions are an explode of extract, the
         # oracle's a committed relational stage
         a_df = (mentions_from_spans(pipe.table("extract"))
@@ -592,8 +594,8 @@ def test_zero_hit_corpus_commits_readable_stages(spark, pipe, tmp_path):
                    "linked": linked_from_spans}.get(st)
         return explode(pl.table("extract")) if explode else pl.table(st)
 
-    for st in ("extract", "mentions", "linked", "triples", "aliases",
-               "nodes", "edges"):
+    for st in ("extract", "mentions", "linked", "triples", "linked_stats",
+               "aliases", "nodes", "edges"):
         got = table(p, st)
         assert {(f.name, f.dataType.simpleString()) for f in got.schema} \
             == {(f.name, f.dataType.simpleString())

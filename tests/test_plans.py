@@ -281,6 +281,44 @@ def test_fused_triples_plan_is_local_and_narrow(spark, tmp_path):
     assert tr.count() > 0
 
 
+def test_aliases_and_nodes_plans_read_no_extract(spark, tmp_path,
+                                                 monkeypatch):
+    """The batch build reads the linked spans once, in its
+    ``linked_stats`` stage: the optimized plan of what the ``aliases``
+    stage collects reads ``linked_stats`` only, and that of the ``nodes``
+    stage's output ``linked_stats`` and ``aliases`` — neither scans
+    ``extract``."""
+    from quickner_spark.kg import canonicalize, corpus
+    from quickner_spark.kg.pipeline import build_kg_pipeline
+
+    pages = str(tmp_path / "pages")
+    corpus.synth_pages(spark, 30, seed=1, gaz_size=50,
+                       partitions=2).write.parquet(pages)
+    collected = []
+    real = canonicalize.canonicalize_aliases
+
+    def spy(aliases):
+        collected.append(aliases)
+        return real(aliases)
+
+    monkeypatch.setattr(canonicalize, "canonicalize_aliases", spy)
+    base = str(tmp_path / "kg")
+    p = build_kg_pipeline(spark, base, pages, corpus.synth_gazetteer(50, 1),
+                          corpus.PREDICATES)
+    p.run()
+    nodes = next(s for s in p.stages if s.name == "nodes").fn(
+        spark, {"pipeline": p})
+
+    def tables(df):  # the committed tables the optimized plan scans
+        return {f.split(base + "/", 1)[1].split("/")[0]
+                for f in df.inputFiles()}
+
+    assert len(collected) == 1
+    assert tables(collected[0]) == {"linked_stats"}
+    assert tables(nodes) == {"linked_stats", "aliases"}
+    assert nodes.count() > 0
+
+
 def test_kg_edges_plan_broadcasts_maps(spark):
     df = E.q28_kg_edges(spark, SF)
     plan = _executed(df)
